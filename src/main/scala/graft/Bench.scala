@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.VectorMap
+
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -137,44 +139,31 @@ object Bench {
     "x127_session_stream", "x146_window_stream", "x154_file_stream_recovery",
     "x159_prep_stream_recovery")
 
-  /** Steady map of the previously COMMITTED full-suite record — parsed
-    * from docs/BENCH_line.json's `"queries":{...}` object with a literal
-    * scan (the file is machine-written by this main; no JSON dep needed).
-    * Missing/unreadable file, or a record measured at a DIFFERENT scale
-    * factor than `sfDir` (steadies aren't comparable across sf), → empty
-    * map → the guard never fires. */
-  private[graft] def priorSteady(docsDir: java.nio.file.Path, sfDir: String): Map[String, Double] = {
-    val f = docsDir.resolve("BENCH_line.json")
-    if (!java.nio.file.Files.isReadable(f)) return Map.empty
-    try {
-      val line = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      if (!line.contains(s""""sf":"$sfDir"""")) return Map.empty
-      val start = line.indexOf("\"queries\":{")
-      if (start < 0) return Map.empty
-      val body = line.substring(start + "\"queries\":{".length,
-        line.indexOf('}', start))
-      val Pair = """"([A-Za-z0-9_]+)":(-?[0-9.eE+-]+)""".r
-      Pair.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
+  private def benchLine(docsDir: java.nio.file.Path) =
+    Json.readObject(docsDir.resolve("BENCH_line.json"))
+  private def floorBestRecord(docsDir: java.nio.file.Path) =
+    Json.readObject(docsDir.resolve("FLOOR_BEST.json"))
+  /** A kernel boot id is hex and dashes; anything else (an "unknown" boot
+    * written by a host without /proc) reads as no fingerprint. */
+  private def bootIdOf(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+    Json.text(n, "boot_id").filter(_.matches("[0-9a-fA-F-]+"))
+
+  /** Steady map of the previously COMMITTED full-suite record
+    * (docs/BENCH_line.json's `queries` object). Missing/unreadable file, or
+    * a record measured at a DIFFERENT scale factor than `sfDir` (steadies
+    * aren't comparable across sf), → empty map → the guard never fires. */
+  private[graft] def priorSteady(docsDir: java.nio.file.Path, sfDir: String): Map[String, Double] =
+    benchLine(docsDir).filter(Json.text(_, "sf").contains(sfDir))
+      .map(j => Json.numbers(j.path("queries"))).getOrElse(Map.empty)
 
   /** Boot fingerprint of the committed record (round 10): steadies are
     * only regression-comparable within one host boot — the round-9 reboot
     * shifted IO/state-heavy queries ~25 % with zero code change and cost a
     * day of manual adjudication. None on a pre-round-10 record (no
     * fingerprint field) or an unreadable file. */
-  private[graft] def priorBootId(docsDir: java.nio.file.Path): Option[String] = {
-    val f = docsDir.resolve("BENCH_line.json")
-    if (!java.nio.file.Files.isReadable(f)) return None
-    try {
-      val line = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      """"boot_id":"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(line).map(_.group(1))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private[graft] def priorBootId(docsDir: java.nio.file.Path): Option[String] =
+    benchLine(docsDir).flatMap(bootIdOf)
 
-  /** This boot's kernel-assigned id (Linux; None elsewhere) — written
-    * into every record so cross-round tooling can tell host drift from
-    * code regressions without hand analysis. */
   /** The three boot-relative floor probes (ms each): dependent-chain CPU
     * (clock/steal), 64 MB fsync'd write+read (IO floor), one fixed
     * all-core Spark range-sum (scheduler floor). Each runs once discarded
@@ -237,29 +226,16 @@ object Bench {
     * guard's own 2.0× trigger and the round-over-round trend. Missing or
     * unreadable file → empty map → the gate re-anchors from this run's
     * probe rounds. */
-  private[graft] def floorBest(docsDir: java.nio.file.Path): Map[String, Double] = {
-    val f = docsDir.resolve("FLOOR_BEST.json")
-    if (!java.nio.file.Files.isReadable(f)) return Map.empty
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val Pair = """"(cpu_ms|disk_ms|spark_ms)":\s*(-?[0-9.eE+-]+)""".r
-      Pair.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
+  private[graft] def floorBest(docsDir: java.nio.file.Path): Map[String, Double] =
+    floorBestRecord(docsDir).map(Json.numbers).getOrElse(Map.empty)
 
   /** Boot under which FLOOR_BEST was anchored (absent on a pre-boot-aware
     * file). Floors are only gate-comparable within one boot — the same
     * reason the outlier guard is boot-aware: this host's disk floor moved
     * 183 → ~270 ms across the round-14/15 boot with no code change, and a
     * cross-boot 1.3× gate would simply never pass again. */
-  private[graft] def floorBestBoot(docsDir: java.nio.file.Path): Option[String] = {
-    val f = docsDir.resolve("FLOOR_BEST.json")
-    if (!java.nio.file.Files.isReadable(f)) return None
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      """"boot_id":\s*"([0-9a-fA-F-]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private[graft] def floorBestBoot(docsDir: java.nio.file.Path): Option[String] =
+    floorBestRecord(docsDir).flatMap(bootIdOf)
 
   /** Probe path under which FLOOR_BEST was anchored (absent on a
     * pre-path-aware file, which was always written from a default-dir
@@ -269,15 +245,12 @@ object Bench {
     * and make later default-dir canonical runs on the same boot spuriously
     * fail the gate (round-16 ADVICE) — the per-run floor record keeps a
     * path field for exactly this comparability reason. */
-  private[graft] def floorBestPath(docsDir: java.nio.file.Path): Option[String] = {
-    val f = docsDir.resolve("FLOOR_BEST.json")
-    if (!java.nio.file.Files.isReadable(f)) return None
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      """"path":\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private[graft] def floorBestPath(docsDir: java.nio.file.Path): Option[String] =
+    floorBestRecord(docsDir).flatMap(Json.text(_, "path")).filter(_.nonEmpty)
 
+  /** This boot's kernel-assigned id (Linux; None elsewhere) — written
+    * into every record so cross-round tooling can tell host drift from
+    * code regressions without hand analysis. */
   private[graft] def currentBootId(): Option[String] =
     try {
       val p = java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id")
@@ -299,7 +272,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cores = GraftSession.defaultCores
     val reps = math.max(2, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     // Guard threshold: steady > guard × prior committed steady AND the
     // absolute excess is > 0.25 s (sub-quarter-second wobble on a 0.1 s
@@ -345,21 +318,16 @@ object Bench {
         "this run — judge cross-boot deltas via scale-probe ratios, not " +
         "absolute steadies")
 
+    val spark = GraftSession.local(cores)
     // Shuffle-partition override (round 17, verdict ask 2): the contract
     // default stays the core count — every canonical record is comparable —
     // but scale probes need to vary reducer count independently of cores
     // (the x52 300×d spill attribution: ~930 MB/reducer at 32 partitions
     // is a LOCAL-CONF artifact, not an operator property; proving that
     // takes one run at a higher conf on the same cores).
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
 
     // Warm-up: touch every table's footer + exercise scan/shuffle/agg codegen.
     graft.sources.Tables.names.foreach { t =>
@@ -467,11 +435,13 @@ object Bench {
     // are not comparable to contract records, so it must never become the
     // canonical baseline (same reasoning as name-filtered runs below)
     val isCanonical = only.isEmpty && sys.env.get("SPARK_GRAFT_BENCH_OUT").isEmpty &&
-      shufflePartitions == cpus
+      shufflePartitions == cores.toString
     val gateFactor = sys.env.getOrElse("SPARK_GRAFT_FLOOR_GATE", "1.3").toDouble
     val floorRetries = sys.env.getOrElse("SPARK_GRAFT_FLOOR_RETRIES", "3").toInt
     val floorRetryMs = (sys.env.getOrElse("SPARK_GRAFT_FLOOR_RETRY_S", "30").toDouble * 1000).toLong
     val best = floorBest(docsDir)
+    val bestBoot = floorBestBoot(docsDir)
+    val bestPath = floorBestPath(docsDir).getOrElse(docsDir.toString)
     // The gate is BOOT-SCOPED, like the outlier guard: floors moved 183 →
     // ~270 ms disk across the round-14/15 reboot with no code change, so
     // a cross-boot best would deadlock the gate on the slower boot. Same
@@ -487,8 +457,8 @@ object Bench {
     // a faster fs must not fold its floors into the default dir's anchor);
     // a pre-path-aware FLOOR_BEST is treated as anchored at the default
     // docs dir, where every committed one was probed.
-    val sameAnchor = curBoot.isDefined && floorBestBoot(docsDir) == curBoot &&
-      floorBestPath(docsDir).getOrElse(docsDir.toString) == floorDir.toString
+    val sameAnchor = curBoot.isDefined && bestBoot == curBoot &&
+      bestPath == floorDir.toString
     def floorQuiet(fs: Seq[(String, Double)]): Boolean =
       fs.forall { case (k, v) => best.get(k).forall(b => v <= gateFactor * b) }
     var floors = floorProbes(spark, floorDir)
@@ -497,7 +467,7 @@ object Bench {
     if (isCanonical && gateFactor > 0 && curBoot.isEmpty)
       // an unreadable boot_id means floors can never be boot-scoped: the
       // old behavior re-anchored EVERY run (3 × 30 s sleeps) and wrote a
-      // FLOOR_BEST whose "unknown" boot the hex-only regex never parsed
+      // FLOOR_BEST whose "unknown" boot the hex-only reader never parses
       // back, so the gate never actually gated (round-16 ADVICE). Declare
       // it off instead — no sleeps, no anchor rewrite, honest record.
       System.err.println("bench: floor gate — boot_id unreadable on this " +
@@ -527,9 +497,8 @@ object Bench {
         // indistinguishable from a boot change in the old message
         val cause =
           if (best.isEmpty) "no FLOOR_BEST"
-          else if (floorBestBoot(docsDir) != curBoot) "boot changed"
-          else "probe path changed " +
-            s"(anchor ${floorBestPath(docsDir).getOrElse(docsDir.toString)} vs $floorDir)"
+          else if (bestBoot != curBoot) "boot changed"
+          else s"probe path changed (anchor $bestPath vs $floorDir)"
         System.err.println("bench: floor gate — no same-boot baseline " +
           s"($cause); re-anchoring from ${floorRetries + 1} probe rounds")
         var acc = floors.toMap
@@ -654,31 +623,14 @@ object Bench {
     val nRemeasured = results.count(_._3.isDefined)
     val nSubstituted = results.count(_._4)
     val bootStr = curBoot.getOrElse("unknown")
-    val upStr = uptimeSeconds().map(_.toString).getOrElse("-1")
-    // floor object rendered at BOTH paddings from the same fields — the
-    // compact line variant must NOT be derived by stripping spaces from
-    // the pretty one (that mangled an artifact path containing a space;
-    // round-14 ADVICE). The path is ESCAPED (round-16 ADVICE): a
-    // SPARK_GRAFT_BENCH_TMP containing '"' or '\' would otherwise yield
-    // invalid JSON and a path the regex readers mis-parse.
-    def jsonEsc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    def floorJsonAt(pad: String): String = ((floors
-      .map { case (k, v) => s""""$k":$pad${math.round(v * 10) / 10.0}""" }
-      :+ s""""gate":$pad"$floorGate"""")
-      ++ (if (floorAttempts > 1) Seq(s""""attempts":$pad$floorAttempts""") else Nil)
-      :+ s""""path":$pad"${jsonEsc(floorDir.toString)}"""")
-      .mkString("{", "," + pad, "}")
-    val floorJson = floorJsonAt(" ")
+    def tenths(x: Double): Double = math.round(x * 10) / 10.0
     // Heap annotation (round-13 verdict ask 6): decade-exponent records
     // were only distinguishable as 8g-vs-24g by filename convention; the
     // record now carries the driver JVM's actual max heap — in BINARY GiB
     // so the value matches the -Xmx launch flag it disambiguates (an
     // -Xmx24g driver must record 24.0, not 25.8 decimal GB; round-14
     // ADVICE).
-    val heapGb = math.round(Runtime.getRuntime.maxMemory * 10.0 / (1L << 30)) / 10.0
-    def warmupJsonAt(pad: String): String =
-      s""""warmup":$pad"$warmupMode",$pad"warmup_s":$pad${math.round(warmupS * 10) / 10.0}"""
-    val warmupJson = warmupJsonAt(" ")
+    val heapGb = tenths(Runtime.getRuntime.maxMemory / (1L << 30).toDouble)
     val notes = "one discarded warmup suite pass before timing (cold = the " +
       "query's own cache build, not suite-position codegen; disable with " +
       "SPARK_GRAFT_BENCH_WARMUP=none); floor = boot-relative host probes " +
@@ -693,36 +645,6 @@ object Bench {
       "BENCH_line.json commits only when the floor gate passes (all " +
       "probes within the gate factor of FLOOR_BEST.json, retried, else " +
       "deferred to the last quiet record)"
-    // Full audit record as a repo file: the stdout line was truncated in
-    // the round-3/4 driver records, so the complete cold+steady+per-rep
-    // series must be readable without re-running the bench.
-    val full = new StringBuilder()
-      .append("{\n")
-      .append(s"""  "metric": "total_steady", "value": $steadyTotal, "unit": "sec",\n""")
-      .append(s"""  "total_cold": $coldTotal, "reps": $reps, "sf": "$sfDir",\n""")
-      .append(s"""  "n_remeasured": $nRemeasured, "n_substituted": $nSubstituted,\n""")
-      .append(s"""  "boot_id": "$bootStr", "uptime_s": $upStr, "cross_boot_vs_prior": $crossBoot, "heap_gb": $heapGb,\n""")
-      .append(s"""  "floor": $floorJson, $warmupJson,\n""")
-      .append(s"""  "notes": "$notes",\n""")
-      .append("  \"queries\": {\n")
-      .append(results.map { case (n, suite, iso, sub) =>
-        val extra = iso.map { s =>
-          s""", "isolated_reps": [${s.mkString(", ")}]""" +
-            (if (sub) s""", "first_steady": ${steady(suite)}""" else "")
-        }.getOrElse("")
-        // Resource counters (MB, whole rep block, suite pass): shuffle
-        // read/write, disk/mem spill, scan input, then the max per-task
-        // peak execution memory — the cross-fixture scale signals.
-        val res = resources.get(n).map { r =>
-          val mbs = (ResourceKeys.zip(r).map { case (k, v) =>
-            s""""$k": ${math.round(v / 1e5) / 10.0}"""
-          } :+ s""""peak_task_mem_mb": ${math.round(r.last / 1e5) / 10.0}""")
-            .mkString(", ")
-          s""", "resources": {$mbs}"""
-        }.getOrElse("")
-        s"""    "$n": {"cold": ${cold(suite)}, "steady": ${chosenSteady((n, suite, iso, sub))}$extra, "reps": [${suite.mkString(", ")}]$res}"""
-      }.mkString(",\n"))
-      .append("\n  }\n}\n").toString
     // A name-filtered run measures a PARTIAL suite: never let it clobber
     // the canonical full-suite records — divert the default detail file
     // and skip the BENCH_line.json copy (explicit SPARK_GRAFT_BENCH_OUT
@@ -731,6 +653,36 @@ object Bench {
       .map(p => java.nio.file.Paths.get(p).toAbsolutePath)
       .getOrElse(docsDir.resolve(
         if (only.isDefined) "BENCH_filtered_latest.json" else "BENCH_full_latest.json"))
+    // Fields shared by the detail record and the compact line; `cores` is
+    // the local thread count, which follows the host unless
+    // SPARK_GRAFT_CPUS pins it.
+    val header = Seq("metric" -> "total_steady", "value" -> steadyTotal, "unit" -> "sec")
+    val runFields = Seq("total_cold" -> coldTotal, "reps" -> reps,
+      "n_remeasured" -> nRemeasured, "n_substituted" -> nSubstituted,
+      "boot_id" -> bootStr, "uptime_s" -> uptimeSeconds().getOrElse(-1L),
+      "cross_boot_vs_prior" -> crossBoot, "heap_gb" -> heapGb, "cores" -> cores,
+      "floor" -> VectorMap(floors.map { case (k, v) => k -> tenths(v) } ++
+        Seq("gate" -> floorGate) ++
+        (if (floorAttempts > 1) Seq("attempts" -> floorAttempts) else Nil) :+
+        ("path" -> floorDir.toString): _*),
+      "warmup" -> warmupMode, "warmup_s" -> tenths(warmupS), "sf" -> sfDir)
+    // Full audit record as a repo file: the stdout line was truncated in
+    // the round-3/4 driver records, so the complete cold+steady+per-rep
+    // series must be readable without re-running the bench.
+    val queries = VectorMap(results.map { case r @ (n, suite, iso, sub) =>
+      n -> VectorMap((Seq("cold" -> cold(suite), "steady" -> chosenSteady(r)) ++
+        iso.toSeq.flatMap(s => ("isolated_reps" -> s) +:
+          (if (sub) Seq("first_steady" -> steady(suite)) else Nil)) ++
+        Seq("reps" -> suite) ++
+        // Resource counters (MB, whole rep block, suite pass): shuffle
+        // read/write, disk/mem spill, scan input, then the max per-task
+        // peak execution memory — the cross-fixture scale signals.
+        resources.get(n).map(c => "resources" -> VectorMap(
+          (ResourceKeys.zip(c) :+ ("peak_task_mem_mb" -> c.last))
+            .map { case (k, v) => k -> tenths(v / 1e6) }: _*))): _*)
+    }: _*)
+    val full = Json.pretty(VectorMap(header ++ runFields ++
+      Seq("notes" -> notes, "queries" -> queries): _*)) + "\n"
     try {
       Option(outFile.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(outFile, full.getBytes("UTF-8"))
@@ -742,14 +694,9 @@ object Bench {
     // line was what overflowed the driver's captured tail). `value` stays
     // the steady total, as introduced in round 4; the metric name says so
     // explicitly so cross-round trending tools compare like with like.
-    val steadyMap = results
-      .map(r => "\"" + r._1 + "\":" + chosenSteady(r)).mkString("{", ",", "}")
-    val line = s"""{"metric":"total_steady","value":$steadyTotal,"unit":"sec",""" +
-      s""""queries":$steadyMap,"total_cold":$coldTotal,"reps":$reps,""" +
-      s""""n_remeasured":$nRemeasured,"n_substituted":$nSubstituted,""" +
-      s""""boot_id":"$bootStr","uptime_s":$upStr,"cross_boot_vs_prior":$crossBoot,"heap_gb":$heapGb,""" +
-      s""""floor":${floorJsonAt("")},${warmupJsonAt("")},""" +
-      s""""sf":"${jsonEsc(sfDir)}","detail":"${jsonEsc(outFile.toString)}"}"""
+    val steadyMap = VectorMap(results.map(r => r._1 -> chosenSteady(r)): _*)
+    val line = Json.write(VectorMap(header ++ Seq("queries" -> steadyMap) ++ runFields :+
+      ("detail" -> outFile.toString): _*))
     // The line ALSO lands in a known repo file: three rounds of driver
     // records failed to parse the sbt-logged stdout copy ("[info] "
     // prefix), so a machine-readable copy must exist independent of how
@@ -775,21 +722,12 @@ object Bench {
         // With boot_id unreadable the gate was declared off above and the
         // anchor is left alone: an "unknown"-boot anchor could never be
         // parsed back, so writing it would only destroy a valid one.
-        //
-        // FLAT BY CONTRACT (round 17, verdict ask: make the regex readers'
-        // assumption explicit): FLOOR_BEST.json is ONE flat object of
-        // number and string fields — no nesting, no arrays — because
-        // floorBest/floorBestBoot/floorBestPath parse it with literal
-        // regex scans. Any writer change that nests a value must convert
-        // those three readers to a real parser first. The path value is
-        // escaped for the same reason as the floor record's.
         if (curBoot.isDefined) {
           val newBest = floors.map { case (k, v) =>
             k -> (if (sameAnchor) math.min(v, best.getOrElse(k, Double.MaxValue)) else v) }
           java.nio.file.Files.write(docsDir.resolve("FLOOR_BEST.json"),
-            ((newBest.map { case (k, v) => s""""$k": ${math.round(v * 10) / 10.0}""" }
-              :+ s""""boot_id": "$bootStr"""" :+ s""""path": "${jsonEsc(floorDir.toString)}"""")
-              .mkString("{", ", ", "}") + "\n").getBytes("UTF-8"))
+            (Json.write(VectorMap(newBest.map { case (k, v) => k -> tenths(v) } ++
+              Seq("boot_id" -> bootStr, "path" -> floorDir.toString): _*)) + "\n").getBytes("UTF-8"))
         }
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"bench: could not write BENCH_line.json: $e")
@@ -808,9 +746,9 @@ object Bench {
     // LAST thing on both streams is therefore a totals-only line (~100
     // bytes) that survives any tail window; the per-query map lives one
     // line up and in the detail file.
-    val totals = s"""{"metric":"total_steady","value":$steadyTotal,""" +
-      s""""unit":"sec","total_cold":$coldTotal,"n":${results.size},""" +
-      s""""n_failed":$nFailed,"n_remeasured":$nRemeasured,"sf":"$sfDir"}"""
+    val totals = Json.write(VectorMap(header ++ Seq("total_cold" -> coldTotal,
+      "n" -> results.size, "n_failed" -> nFailed, "n_remeasured" -> nRemeasured,
+      "sf" -> sfDir, "cores" -> cores): _*))
     println(totals)
     System.err.println(totals)
     spark.stop()

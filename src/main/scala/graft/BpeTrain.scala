@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Train the repo's BPE merge table: `runMain graft.BpeTrain <sfDir> <out>
  * [nMerges]`. Deterministic for a given corpus (see
@@ -14,13 +12,7 @@ object BpeTrain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BpeTrain <sfDir> <outFile> [nMerges]")
     val nMerges = if (args.length > 2) args(2).toInt else 40
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val docs = graft.sources.Tables.read(spark, args(0), "documents")
     val merges = graft.operators.BpeOps.trainMerges(docs, nMerges)
     val text = graft.functions.BpeSegment.encode(merges) + "\n"

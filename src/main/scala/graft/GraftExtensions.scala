@@ -16,67 +16,32 @@ import graft.functions.{BloomContainsLong, BpeSegment, BpeSegmentFile, CdcChunks
  * the engine never sees, e.g. a JDBC gateway — can use the functions in SQL.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_f32"),
-      new ExpressionInfo(classOf[CosineSimilarityF32].getName, "cosine_f32"),
-      GraftExtensions.cosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotProductF32].getName, "dot_f32"),
-      GraftExtensions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("md5_prefix_long"),
-      new ExpressionInfo(classOf[Md5PrefixLong].getName, "md5_prefix_long"),
-      GraftExtensions.md5PrefixBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_contains_long"),
-      new ExpressionInfo(classOf[BloomContainsLong].getName, "bloom_contains_long"),
-      GraftExtensions.bloomContainsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      GraftExtensions.cdcChunksBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_segment"),
-      new ExpressionInfo(classOf[BpeSegment].getName, "bpe_segment"),
-      GraftExtensions.bpeSegmentBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_segment_file"),
-      new ExpressionInfo(classOf[BpeSegmentFile].getName, "bpe_segment_file"),
-      GraftExtensions.bpeSegmentFileBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_k_rows"),
-      new ExpressionInfo(classOf[graft.plans.TopKRows].getName, "graft_top_k_rows"),
-      GraftExtensions.topKRowsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      GraftExtensions.jaroWinklerBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cell_pair_matches"),
-      new ExpressionInfo(classOf[graft.functions.CellPairMatchesF32].getName,
-        "cell_pair_matches"),
-      GraftExtensions.cellPairMatchesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[graft.functions.WordShingles].getName,
-        "word_shingles"),
-      GraftExtensions.wordShinglesBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("word_spans"),
-      new ExpressionInfo(classOf[graft.functions.WordSpans].getName,
-        "word_spans"),
-      GraftExtensions.wordSpansBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("nearest_in_dir"),
-      new ExpressionInfo(classOf[graft.functions.NearestInDir].getName,
-        "nearest_in_dir"),
-      GraftExtensions.nearestInDirBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }
 
 object GraftExtensions {
+  /** Every graft SQL function as (name, expression class, builder) — the one
+    * list both install routes iterate: the session extension above and the
+    * imperative [[graft.functions.GraftFunctions.register]]. Lazy because
+    * the builders below are initialized after it. */
+  private[graft] lazy val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_f32", classOf[CosineSimilarityF32], cosineBuilder),
+    ("dot_f32", classOf[DotProductF32], dotBuilder),
+    ("md5_prefix_long", classOf[Md5PrefixLong], md5PrefixBuilder),
+    ("bloom_contains_long", classOf[BloomContainsLong], bloomContainsBuilder),
+    ("cdc_chunks", classOf[CdcChunks], cdcChunksBuilder),
+    ("bpe_segment", classOf[BpeSegment], bpeSegmentBuilder),
+    ("bpe_segment_file", classOf[BpeSegmentFile], bpeSegmentFileBuilder),
+    ("graft_top_k_rows", classOf[graft.plans.TopKRows], topKRowsBuilder),
+    ("jaro_winkler", classOf[JaroWinkler], jaroWinklerBuilder),
+    ("cell_pair_matches", classOf[graft.functions.CellPairMatchesF32], cellPairMatchesBuilder),
+    ("word_shingles", classOf[graft.functions.WordShingles], wordShinglesBuilder),
+    ("word_spans", classOf[graft.functions.WordSpans], wordSpansBuilder),
+    ("nearest_in_dir", classOf[graft.functions.NearestInDir], nearestInDirBuilder))
+
   /** Arity-checked builder shared by the extension and temp registration:
     * a wrong argument count is a clear signature error, not an
     * IndexOutOfBoundsException from inside the planner. */
@@ -268,6 +233,7 @@ object GraftExtensions {
  * [[builder]] — on a cluster the driver JVM's core count says nothing about
  * executor parallelism, so the cluster config / AQE own that knob; only
  * [[local]] (single JVM, threads == cores) sizes it to the thread count.
+ * Every main and test session in the repo comes from here.
  */
 object GraftSession {
   def builder(): SparkSession.Builder =
@@ -276,7 +242,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
 
-  def local(cores: Int = 4): SparkSession = {
+  /** Local thread count: `SPARK_GRAFT_CPUS` when set, else the host's cores. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cores: Int = defaultCores): SparkSession = {
     val s = builder().master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")

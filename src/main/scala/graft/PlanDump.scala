@@ -1,41 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
- * Plan-dump main (round 17, optimization deliverable): writes
- * `.explain("formatted")` for selected declared queries to text files, so
- * plan-shape claims in OPTIMIZATION notes are checkable against committed
- * artifacts without running Spark.
+ * Plan-dump main (round 17, optimization deliverable), the repo's one plan
+ * dumper: writes `.explain("formatted")` for selected declared queries to
+ * text files, so plan-shape claims in OPTIMIZATION notes are checkable
+ * against committed artifacts without running Spark.
  *
  * Usage: sbt "runMain graft.PlanDump x34_dedup_components,x36_components_star"
  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as the bench;
  *      SPARK_GRAFT_PLAN_OUT (default plans/r17) output directory;
  *      SPARK_GRAFT_PLAN_SUFFIX (default "after") file suffix.
  *
- * Session conf matches Bench exactly (same master, shuffle partitions,
- * AQE), so the dumped plan is the plan the bench times. Queries whose
- * operators run driver-coordinated loops (the components family) execute
- * those loops during construction; the dump is the FINAL frame's plan —
+ * The session comes from [[GraftSession.local]], as Bench's does, so the
+ * dumped plan is the plan the bench times. Queries whose operators run
+ * driver-coordinated loops (the components family) execute those loops
+ * during construction; the dump is the FINAL frame's plan —
  * loop-internal shapes are evidenced by event-log profiles instead.
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "plans/r17"))
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
     val only = args.headOption.filter(_.nonEmpty)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     java.nio.file.Files.createDirectories(outDir)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))

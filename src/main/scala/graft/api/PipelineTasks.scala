@@ -79,9 +79,7 @@ final class PipelineTasks(engine: QueryEngine, ledger: () => DataFrame) {
       OverlapOps.findOverlappingQueryWindows(ledger(), pipelineName, indexName, dateStr)
         .orderBy("source_window_start_ts", "source_window_end_ts",
           "overlaps_with_start_ts", "overlaps_with_end_ts")
-        .collect().toIndexedSeq.map { r =>
-          (0 until 4).map(i => r.schema(i).name -> r.getTimestamp(i).toInstant.toString).toMap
-        }
+        .collect().toIndexedSeq.map(StatusOps.rowAsIsoMap)
     }
 
   def findOverlappingRecordsForInput(pipelineName: String, indexName: String,
@@ -89,19 +87,8 @@ final class PipelineTasks(engine: QueryEngine, ledger: () => DataFrame) {
     traced("CHECK_OVERLAP_FOR_INPUT",
         "pipeline" -> pipelineName, "index" -> indexName,
         "window" -> s"[$startTsIso, $endTsIso)") {
-      val df = OverlapOps.findOverlappingRecordsForInput(
+      OverlapOps.findOverlappingRecordsForInput(
         ledger(), pipelineName, indexName, startTsIso, endTsIso).orderBy("record_id")
-      val fields = df.schema.fields
-      df.collect().toIndexedSeq.map { row =>
-        fields.iterator.zipWithIndex.map { case (f, i) =>
-          val v = row.get(i) match {
-            case null => null
-            case ts: java.sql.Timestamp => ts.toInstant.toString
-            case d: java.sql.Date => d.toString
-            case other => other.toString
-          }
-          f.name -> v
-        }.toMap
-      }
+        .collect().toIndexedSeq.map(StatusOps.rowAsIsoMap)
     }
 }

@@ -141,37 +141,13 @@ object GraftFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Makes `cosine_f32` / `md5_prefix_long` available to `expr` / SQL. */
+  /** Makes every function in [[graft.GraftExtensions.functions]] available to `expr` / SQL. */
   def register(spark: SparkSession): Unit =
     if (registered.put(spark, java.lang.Boolean.TRUE) == null) {
       val reg = spark.sessionState.functionRegistry
-      reg.createOrReplaceTempFunction(
-        "cosine_f32", graft.GraftExtensions.cosineBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "dot_f32", graft.GraftExtensions.dotBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "md5_prefix_long", graft.GraftExtensions.md5PrefixBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "bloom_contains_long", graft.GraftExtensions.bloomContainsBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "cdc_chunks", graft.GraftExtensions.cdcChunksBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "bpe_segment", graft.GraftExtensions.bpeSegmentBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "bpe_segment_file", graft.GraftExtensions.bpeSegmentFileBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "jaro_winkler", graft.GraftExtensions.jaroWinklerBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "graft_top_k_rows", graft.GraftExtensions.topKRowsBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "cell_pair_matches", graft.GraftExtensions.cellPairMatchesBuilder,
-        "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "word_shingles", graft.GraftExtensions.wordShinglesBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "word_spans", graft.GraftExtensions.wordSpansBuilder, "scala_udf")
-      reg.createOrReplaceTempFunction(
-        "nearest_in_dir", graft.GraftExtensions.nearestInDirBuilder, "scala_udf")
+      graft.GraftExtensions.functions.foreach { case (name, _, builder) =>
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      }
       // the engine's optimizer rule rides the same registration path: any
       // session an operator touches gets the top-k-per-group rewrite
       val opts = spark.experimental.extraOptimizations

@@ -73,12 +73,8 @@ object ContinuityOps {
       pipelineName: String,
       indexName: String,
       dateStr: String): (Boolean, Seq[Map[String, String]]) = {
-    val gaps = discontinuities(ledger, pipelineName, indexName, dateStr).collect()
-    val out = gaps.toIndexedSeq.map { r =>
-      Map(
-        "missing_query_window_start_ts" -> r.getTimestamp(0).toInstant.toString,
-        "missing_query_window_end_ts" -> r.getTimestamp(1).toInstant.toString)
-    }
-    (out.isEmpty, out)
+    val gaps = discontinuities(ledger, pipelineName, indexName, dateStr)
+      .collect().toIndexedSeq.map(StatusOps.rowAsIsoMap)
+    (gaps.isEmpty, gaps)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -59,18 +59,24 @@ object StatusOps {
    * (reference `snowflake_tasks.py:200-216`). Only ever call on a
    * `.limit(1)`-shaped plan.
    */
-  def headAsIsoMap(df: DataFrame): Option[Map[String, String]] = {
-    val fields = df.schema.fields
-    df.limit(1).collect().headOption.map { row =>
-      fields.iterator.zipWithIndex.map { case (f, i) =>
-        val v = row.get(i) match {
-          case null => null
-          case ts: java.sql.Timestamp => ts.toInstant.toString
-          case d: java.sql.Date => d.toString
-          case other => other.toString
-        }
-        f.name -> v
-      }.toMap
-    }
+  def headAsIsoMap(df: DataFrame): Option[Map[String, String]] =
+    df.limit(1).collect().headOption.map(rowAsIsoMap)
+
+  /** A collected row as column name → [[isoString]] — the one row shaping
+    * every ledger verb's result goes through. */
+  def rowAsIsoMap(row: Row): Map[String, String] =
+    row.schema.fieldNames.iterator.zipWithIndex
+      .map { case (name, i) => name -> isoString(row.get(i)) }.toMap
+
+  /** A collected value in the reference's ISO-8601 form
+    * (`snowflake_tasks.py:213-216`). TIMESTAMP and TIMESTAMP_NTZ columns
+    * render alike: an NTZ value is read in UTC, the session zone. An
+    * `Instant`, a date (`java.sql.Date`, `LocalDate`) and every other value
+    * prints as itself; null stays null. */
+  def isoString(v: Any): String = v match {
+    case null => null
+    case ts: java.sql.Timestamp => ts.toInstant.toString
+    case ldt: java.time.LocalDateTime => ldt.toInstant(java.time.ZoneOffset.UTC).toString
+    case other => other.toString
   }
 }

@@ -108,6 +108,23 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.floorBestPath(dir).contains("/root/repo/docs"))
   }
 
+  test("records round-trip an sf and probe path holding quotes and backslashes") {
+    import scala.collection.immutable.VectorMap
+    val dir = java.nio.file.Files.createTempDirectory("bench_guard_escape")
+    val odd = """/data/an "odd" \sf0.1"""
+    java.nio.file.Files.write(dir.resolve("BENCH_line.json"), Json.write(VectorMap(
+      "metric" -> "total_steady", "queries" -> VectorMap("a1" -> 0.35),
+      "boot_id" -> "0f21ab34-cd56", "sf" -> odd)).getBytes("UTF-8"))
+    assert(Bench.priorSteady(dir, odd) == Map("a1" -> 0.35))
+    assert(Bench.priorBootId(dir).contains("0f21ab34-cd56"))
+    // a host without a readable boot_id writes "unknown": no fingerprint
+    java.nio.file.Files.write(dir.resolve("FLOOR_BEST.json"), Json.write(VectorMap(
+      "cpu_ms" -> 188.0, "boot_id" -> "unknown", "path" -> odd)).getBytes("UTF-8"))
+    assert(Bench.floorBest(dir) == Map("cpu_ms" -> 188.0))
+    assert(Bench.floorBestBoot(dir).isEmpty)
+    assert(Bench.floorBestPath(dir).contains(odd))
+  }
+
   test("ResourceTally counts a shuffle and settles outside the timed path") {
     val spark = SparkSpec.spark
     import spark.implicits._

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.api.PipelineTasks
 import graft.engine.QueryEngine
 
@@ -43,6 +45,24 @@ class PipelineTasksSpec extends SparkSpec {
     // half-open: window ending exactly at 08:00 does not overlap record 1
     assert(tasks.findOverlappingRecordsForInput(
       "p", "i", "2024-01-15 07:00:00", "2024-01-15 08:00:00").value.isEmpty)
+  }
+
+  test("timestamp_ntz windows shape exactly like TIMESTAMP windows in every verb") {
+    // the fixture view Tables.pipelineRuns reads its windows as
+    // timestamp_ntz (events.parquet is not UTC-adjusted)
+    val ntz = Seq("query_window_start_ts", "query_window_end_ts")
+      .foldLeft(fixture)((df, c) => df.withColumn(c, col(c).cast("timestamp_ntz")))
+    val ntzTasks = new PipelineTasks(new QueryEngine(spark), () => ntz)
+    def shapes(t: PipelineTasks) = (
+      t.getOldestRecordByStatus("pending").value,
+      t.getLatestRecordByStatus("completed").value,
+      t.getDiscontinuousQueryWindows("p", "i", "2024-01-15").value,
+      t.findOverlappingQueryWindows("p", "i", "2024-01-15").value,
+      t.findOverlappingRecordsForInput(
+        "p", "i", "2024-01-15 08:30:00", "2024-01-15 12:30:00").value)
+    val expected = shapes(tasks)
+    assert(expected._3._2.nonEmpty && expected._4.nonEmpty) // gaps and pairs reached
+    assert(shapes(ntzTasks) == expected)
   }
 
   test("createTableIfNotExists is idempotent") {

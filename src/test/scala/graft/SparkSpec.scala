@@ -4,21 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, UTC, AQE on). */
+/** Shared local session for all suites: one JVM-wide [[GraftSession]]. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan-shape assertions read explain strings; the 100-char default
-      // truncates PushedFilters lists mid-entry once a scan carries a few
-      // predicates, making string assertions depend on filter ORDER
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local(4)
+    // plan-shape assertions read explain strings; the 100-char default
+    // truncates PushedFilters lists mid-entry once a scan carries a few
+    // predicates, making string assertions depend on filter ORDER
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
     graft.functions.GraftFunctions.register(s)
     s
   }

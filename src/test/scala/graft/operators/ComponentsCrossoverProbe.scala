@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement main (test scope — `sbt "Test/runMain
@@ -26,10 +25,7 @@ object ComponentsCrossoverProbe {
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(1000000L, 2000000L, 4000000L)
     val reps = sys.env.getOrElse("PROBE_REPS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val tally = new graft.Bench.ResourceTally

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement main (test scope — run with `sbt "Test/runMain
   * graft.operators.SizingProbe <fixture-dir>"`): what the pair-shuffle
   * sizing proxy reads at a given fixture, unloaded vs loaded. The fixture
@@ -11,9 +9,8 @@ object SizingProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.error("usage: SizingProbe <fixture-dir> (e.g. a tools/make_sfN.py output)"))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false).getOrCreate()
+    val spark = graft.GraftSession.local(8)
+    spark.conf.set("spark.sql.shuffle.partitions", 32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.sources.Tables.read(spark, dir, "documents")
     val shArr = DedupOps.shingleRelation(docs)
