@@ -6,7 +6,7 @@ package graft
  * text files, so plan-shape claims in OPTIMIZATION notes are checkable
  * against committed artifacts without running Spark.
  *
- * Usage: sbt "runMain graft.PlanDump x34_dedup_components,x36_components_star"
+ * Usage: sbt "runMain graft.PlanDump x34_dedup_components,x156_components_collapsed"
  * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as the bench;
  *      SPARK_GRAFT_PLAN_OUT (default plans/r17) output directory;
  *      SPARK_GRAFT_PLAN_SUFFIX (default "after") file suffix.

@@ -351,11 +351,6 @@ object SparkEntry {
     // argument).
     "x156_components_collapsed" -> ((s, d) =>
       DedupOps.dedupComponentsCollapsed(docs(s, d), 0.8, Int.MaxValue)),
-    // The same clusters by O(log n)-round alternating star contraction —
-    // the long-chain-safe algorithm, gated against the identical oracle.
-    "x36_components_star" -> ((s, d) =>
-      DedupOps.connectedComponentsStar(
-        DedupOps.minhashLsh(docs(s, d), 0.8, Int.MaxValue))),
     // IVF recall census: exact brute-force top-k vs the probed-cell top-k
     // for a deterministic query sample — the measured trade-off record for
     // the x5 configuration, sibling of the LSH census x25. Gated at the
@@ -579,8 +574,7 @@ object SparkEntry {
       EventOps.winsorCensus(Tables.read(s, d, "events"), 1, 99)),
     // The bounded-heap top-k operator (graft_top_k_rows aggregate): per-lang
     // top-3 longest docs — the wide-group regime where the heap beats the
-    // sort-based window 8x (TopKPerGroupBenchSpec; rewrite rule measured
-    // default-off for the many-tiny-groups shape).
+    // sort-based window (measurements in TopKPerGroup.topKPerGroup's doc).
     "x118_topk_per_group" -> ((s, d) =>
       graft.plans.TopKPerGroup.topKPerGroup(
         docs(s, d).select(col("lang"), col("doc_id"),
@@ -1241,8 +1235,8 @@ object SparkEntry {
   /** x1's pair derivation + a recursive min-label walk: the minimum of a
     * component reaches every member (each hop away from the min satisfies
     * the lbl < v guard), so MIN(lbl) per node is the component id. Shared
-    * by x34 (label propagation) and x36 (star contraction) — two
-    * algorithms, one output contract. */
+    * by x34 (label propagation) and x156 (exact-duplicate collapse) — two
+    * component paths, one output contract — and by the dedup oracles. */
   private val componentsWalkCte: String =
     """WITH RECURSIVE docs AS (
       |  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents),
@@ -2765,8 +2759,7 @@ object SparkEntry {
         |    AS buckets_with_failures,
         |  CAST(COALESCE(MAX(failed), 0) AS BIGINT) AS max_failed_per_bucket
         |FROM per""".stripMargin,
-    // three component paths, one output contract — see componentsOracleSql
-    "x36_components_star" -> componentsOracleSql,
+    // two component paths, one output contract — see componentsOracleSql
     "x34_dedup_components" -> componentsOracleSql,
     "x156_components_collapsed" -> componentsOracleSql,
     "x157_dedup_best_collapsed" -> dedupBestOracleSql,

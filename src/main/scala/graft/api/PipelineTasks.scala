@@ -34,11 +34,9 @@ final class PipelineTasks(engine: QueryEngine, ledger: () => DataFrame) {
   private def traced[T](key: String, ctx: (String, Any)*)(body: => T): TaskResult[T] = {
     QueryLog.start(key, ctx: _*)
     try {
-      val queryId = java.util.UUID.randomUUID().toString
-      engine.spark.sparkContext.setJobGroup(queryId, key, interruptOnCancel = true)
-      val v = try body finally engine.spark.sparkContext.clearJobGroup()
-      QueryLog.complete(key, (ctx :+ ("query_id" -> queryId)): _*)
-      TaskResult(queryId, v)
+      val r = engine.withQueryId(key)(body)
+      QueryLog.complete(key, (ctx :+ ("query_id" -> r.queryId)): _*)
+      TaskResult(r.queryId, r.data)
     } catch {
       case e: Throwable => QueryLog.failure(key, e, ctx: _*); throw e
     }

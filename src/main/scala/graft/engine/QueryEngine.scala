@@ -30,7 +30,7 @@ final class QueryEngine(val spark: SparkSession) {
   /** Result wrapper mirroring the reference's `{"query_id": ..., "data": ...}`. */
   final case class EngineResult[T](queryId: String, data: T)
 
-  private def withQueryId[T](desc: String)(body: => T): EngineResult[T] = {
+  private[graft] def withQueryId[T](desc: String)(body: => T): EngineResult[T] = {
     val queryId = UUID.randomUUID().toString
     spark.sparkContext.setJobGroup(queryId, desc, interruptOnCancel = true)
     try EngineResult(queryId, body)

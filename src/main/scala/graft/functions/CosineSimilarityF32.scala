@@ -148,12 +148,6 @@ object GraftFunctions {
       graft.GraftExtensions.functions.foreach { case (name, _, builder) =>
         reg.createOrReplaceTempFunction(name, builder, "scala_udf")
       }
-      // the engine's optimizer rule rides the same registration path: any
-      // session an operator touches gets the top-k-per-group rewrite
-      val opts = spark.experimental.extraOptimizations
-      if (!opts.contains(graft.plans.TopKPerGroupRewrite))
-        spark.experimental.extraOptimizations =
-          opts :+ graft.plans.TopKPerGroupRewrite
     }
 
   /** Column helper for the md5-prefix hash — the one place the SQL name and

@@ -20,7 +20,6 @@ object Schemas {
     val Completed = "completed"
     val Failed = "failed"
     val all: Seq[String] = Seq(Pending, InProgress, Completed, Failed)
-    def isValid(s: String): Boolean = all.contains(s)
   }
 
   /**

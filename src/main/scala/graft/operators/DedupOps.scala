@@ -941,8 +941,7 @@ object DedupOps {
    * (diameter a small constant — every member of a bucket is directly
    * joined to the others or to its representative), so a handful of
    * rounds closes even a 100 TB corpus; an adversarial long-chain graph
-   * wants [[connectedComponentsStar]] (O(log n) rounds) instead — the two
-   * are property-tested identical on every graph shape.
+   * needs `maxRounds` ≥ its diameter.
    */
   /** Drop the executor-storage blocks behind a localCheckpoint'ed frame
     * (or a projection over one). Spark's ContextCleaner would eventually
@@ -969,7 +968,7 @@ object DedupOps {
    * with min-id roots — bit-identical output to the distributed loop, ONE
    * job instead of ~3·diameter. Above the bound, the distributed loop
    * runs untouched — that path stays the 100 TB story and stays
-   * oracle-gated on its own (x34/x36 pin the distributed algorithms
+   * oracle-gated on its own (x34 pins the distributed loop
    * directly; the equivalence of the two strategies is property-tested in
    * DedupSpec). The same adaptive pattern as Spark's broadcast-join
    * threshold: size decides strategy, semantics never change.
@@ -1173,8 +1172,7 @@ object DedupOps {
         labels = updated
       }
       require(changed == 0, s"components did not converge in $maxRounds rounds " +
-        "— graph diameter exceeds the bound; raise maxRounds or use a " +
-        "star-contraction algorithm for chain-shaped graphs")
+        "— graph diameter exceeds the bound; raise maxRounds")
     } catch { case e: Throwable =>
       if (big) sym.unpersist() else releaseCheckpoint(sym)
       releaseCheckpoint(labels)
@@ -1182,134 +1180,6 @@ object DedupOps {
     }
     if (big) sym.unpersist() else releaseCheckpoint(sym)
     labels.select(col("u").as("doc_id"), col("lbl").as("component"))
-      .orderBy(col("doc_id"))
-  }
-
-  /**
-   * Connected components by ALTERNATING STAR CONTRACTION (the large-star /
-   * small-star algorithm of Kiveris et al., "Connected Components in
-   * MapReduce and Beyond") — the O(log n)-round alternative to
-   * [[connectedComponents]]' diameter-bound label propagation, for graphs
-   * with long chains. Each round is two join+aggregate passes over the
-   * edge list (never a per-node adjacency list, so a hub node costs its
-   * edge count, not a collected array):
-   *
-   *  - large-star: every node's strictly-LARGER neighbors re-attach to
-   *    the minimum of its closed neighborhood;
-   *  - small-star: every node's smaller-or-equal neighbors (and the node)
-   *    re-attach to that minimum.
-   *
-   * Both preserve the component partition; alternating them converges to
-   * star graphs rooted at each component's minimum. Output matches
-   * [[connectedComponents]] row-for-row (property-tested on chain, clique,
-   * and random graphs).
-   */
-  def connectedComponentsStar(pairs: DataFrame,
-      aCol: String = "doc_a", bCol: String = "doc_b",
-      maxRounds: Int = 60): DataFrame = {
-    // canonical undirected edges (lo < hi), self-loops dropped
-    def canon(df: DataFrame): DataFrame = df
-      .select(least(col("x"), col("y")).as("lo"), greatest(col("x"), col("y")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-    var edges = canon(pairs.select(col(aCol).as("x"), col(bCol).as("y")))
-      .localCheckpoint()
-    val allNodes = edges.select(col("lo").as("doc_id"))
-      .unionByName(edges.select(col("hi").as("doc_id"))).distinct()
-      .localCheckpoint()
-    // m(u) = min of u's closed neighborhood, from the symmetric edge view
-    def minTable(e: DataFrame): DataFrame = e
-      .select(col("lo").as("u"), col("hi").as("v"))
-      .unionByName(e.select(col("hi").as("u"), col("lo").as("v")))
-      .groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    var round = 0
-    var certified = false
-    // failure path (incl. the non-convergence require) releases the live
-    // checkpoints before rethrowing — see connectedComponents
-    try {
-      while (!certified && round <= maxRounds) {
-        round += 1
-        // ONE annotated-edges materialization per round (round 17 — the
-        // r16 profile priced the distributed loops' wall as stage-launch
-        // latency, ~84 sequential launches/rep on x34's sibling): the min
-        // table is joined onto the edge list ONCE (m_lo, m_hi per edge),
-        // the star certificate rides that checkpoint as an OBSERVED
-        // metric instead of a separate limit(1)-count job, and the
-        // large-star pass reads the same annotated frame instead of
-        // re-joining the min table. The r16 shape paid, per round: mt
-        // checkpoint + certificate-probe job (2 joins) + afterLarge
-        // checkpoint + afterSmall checkpoint = 4 jobs; this shape pays
-        // ann checkpoint + afterSmall checkpoint = 2 (1 on the converged
-        // final round, where only the certificate is needed).
-        //
-        // Star certificate (unchanged semantics, checked BEFORE the
-        // passes): the edge set is a star forest rooted at neighborhood
-        // minima iff every canonical edge (lo, hi) has m(hi) = lo AND
-        // m(lo) = lo. (⇐ m(hi)=lo forces each node to appear as `hi` in
-        // at most one edge — two distinct `lo`s can't both be its
-        // neighborhood min; m(lo)=lo plus lo being hi's neighbor forbids
-        // lo from also being some edge's `hi` — a smaller neighbor would
-        // contradict m(lo)=lo. So every node is a root or a single-rooted
-        // leaf: a star forest, whose roots are the component minima.)
-        // Stars are exactly the fixpoints the alternation converges to
-        // (Kiveris et al.).
-        val obs = org.apache.spark.sql.Observation(s"star_round_$round")
-        val ann = edges
-          .join(minTable(edges).select(col("u").as("hi"), col("m").as("m_hi")), Seq("hi"))
-          .join(minTable(edges).select(col("u").as("lo"), col("m").as("m_lo")), Seq("lo"))
-          .observe(obs, count(when(
-            col("m_hi") =!= col("lo") || col("m_lo") =!= col("lo"), lit(1))).as("viol"))
-          .localCheckpoint()
-        try {
-          val viol = obs.get("viol") match {
-            case l: java.lang.Long => l.longValue
-            case other => other.toString.toLong
-          }
-          if (viol == 0L) certified = true
-          else if (round > maxRounds) {
-            // the final allowed entry is probe-only: running another full
-            // contraction pass here would be discarded work — the loop
-            // exits before any further certificate could bless it
-          } else {
-            // large-star: edges (v, m(u)) for v > u. Only the lo→hi
-            // direction of the symmetric view passes v > u on canonical
-            // edges, so large is exactly the annotated frame's
-            // (m_lo, hi) projection — no re-join against the min table.
-            val large = ann.select(col("m_lo").as("x"), col("hi").as("y"))
-            val afterLarge = canon(large)
-            // small-star on the large-star output: (v, m(u)) for v ≤ u,
-            // plus (u, m(u)). afterLarge is NOT checkpointed: its three
-            // consumers live in ONE plan (the afterSmall checkpoint), so
-            // the canon distinct's exchange is planned once and reused.
-            val mt2 = minTable(afterLarge)
-            val sym2 = afterLarge.select(col("lo").as("u"), col("hi").as("v"))
-              .unionByName(afterLarge.select(col("hi").as("u"), col("lo").as("v")))
-            val small = sym2.filter(col("v") < col("u")).join(mt2, Seq("u"))
-              .select(col("m").as("x"), col("v").as("y"))
-              .unionByName(mt2.select(col("m").as("x"), col("u").as("y")))
-            val afterSmall = canon(small).localCheckpoint()
-            releaseCheckpoint(edges)
-            edges = afterSmall
-          }
-        } finally releaseCheckpoint(ann)
-      }
-      require(certified, s"star contraction did not converge in $maxRounds rounds")
-    } catch { case e: Throwable =>
-      releaseCheckpoint(edges)
-      releaseCheckpoint(allNodes)
-      throw e
-    }
-    // converged: every edge is (component root, member)
-    val labels = edges.select(col("hi").as("doc_id"), col("lo").as("component"))
-      .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("component")))
-      .distinct()
-    // nodes whose component collapsed entirely (their edges vanished into
-    // self-loops during contraction) are their own root — recover them
-    // from the input node set. The final edge checkpoint stays alive: the
-    // returned frame reads it lazily (the session's ContextCleaner
-    // reclaims it once the caller drops the frame).
-    allNodes.join(labels, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
       .orderBy(col("doc_id"))
   }
 
@@ -1337,7 +1207,7 @@ object DedupOps {
   def dedupCorpus(documents: DataFrame, threshold: Double = 0.8,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     // adaptive strategy switch: same labels, one job on small pair graphs
-    // (the distributed loop stays gated via x34/x36)
+    // (the distributed loop stays gated via x34)
     val comp = connectedComponentsAdaptive(minhashLsh(documents, threshold, maxBucketSize))
     val losers = comp.filter(col("component") =!= col("doc_id")).select(col("doc_id"))
     documents.join(losers, Seq("doc_id"), "left_anti")

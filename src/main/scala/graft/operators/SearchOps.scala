@@ -85,7 +85,7 @@ object SearchOps {
 
   /**
    * x145: triangle census over the word co-occurrence graph — the third
-   * member of the engine's distributed-graph family (components = x34/x36,
+   * member of the engine's distributed-graph family (components = x34,
    * power iteration = x132, triangles = the two-hop-join shape neither of
    * those exercises). A triangle means three words that all co-occur
    * pairwise — tightly bound collocation cliques; a word's triangle count
@@ -184,7 +184,7 @@ object SearchOps {
    * Scale shape: the graph is VOCABULARY-sized, not corpus-sized — the one
    * corpus pass builds (u, v, w) with map-side partial counts; each of the
    * `iters` rounds is one vocab-keyed join + one aggregation, checkpointed
-   * so the plan stays flat (the [[DedupOps.connectedComponentsStar]] loop
+   * so the plan stays flat (the [[DedupOps.connectedComponents]] loop
    * discipline). Word ranks converge in ~10 rounds; `iters` is a fixed
    * constant, not data-dependent.
    */

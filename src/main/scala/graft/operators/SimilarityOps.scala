@@ -320,73 +320,11 @@ object SimilarityOps {
    * effect: see BENCH_notes_r12 §2 (the 60×-distinct before/after) and
    * §8 (the gate-scale fixed-cost price).
    *
-   * Production sizing note (round 14, from the 256-dim multi-GB fixture —
-   * BENCH_notes_r14 §1e): replication traffic is ~|C|·√(2P) for P-way
-   * parallelism — a communication LOWER BOUND of parallel all-pairs, not
-   * a removable constant (sub-splitting group pairs re-replicates a
-   * side). On a large cluster do NOT let this stage inherit a 10⁴-scale
-   * session parallelism: size the cross stage's own P near
-   * (W·bw / 2|C|)^⅔ — the point where kernel compute W/P and traffic
-   * 2√P·|C|/bw balance. Round 15 ships the mechanism as the
-   * `spark.graft.cross.maxParallelism` conf (session conf or SparkConf —
-   * spark-submit --conf works): when set to P*, the cross's GROUP GRID
-   * shrinks to G = ⌈√(2·P*)⌉ per side — the replication (traffic) term
-   * the rule bounds — giving ≤G² non-empty kernel tasks (the capped
-   * effective parallelism) on conf physical partitions. The partition
-   * count itself deliberately stays conf: Spark 4.1's EnsureRequirements
-   * rewrites a user repartition whose count differs from conf back to
-   * conf under an SMJ (measured; BENCH_notes_r15 §3), and the
-   * conf-count form is also what keeps every gated plan byte-identical
-   * when the knob is unset. Plan-locked in PlanQualitySpec (grid literal
-   * + exchange counts + pair-set parity).
-   * At every configuration measurable on this host the kernel sets the
-   * wall (traffic ≤ 73 % of bytes but ≤ ¼ of wall), so the knob stays
-   * unset here; BENCH_notes_r15 prices what would engage at conf 20k.
+   * Replication traffic is ~|C|·√(2P) for P-way parallelism — a
+   * communication LOWER BOUND of parallel all-pairs, not a removable
+   * constant (BENCH_notes_r14 §1e); the cross stage sizes P from the
+   * session's shuffle partitions.
    */
-  /** Stated assumptions behind the logged P* suggestion (round 16,
-    * verdict ask 4). 20 GFLOP/s sustained f32 per core is conservative
-    * for the offset-free kernel layout (this host's C2 measures
-    * ~26 GFLOP/s with AVX-512 SuperWord — BENCH_notes_r13); 10 GB/s
-    * aggregate shuffle bandwidth is the per-1000-executor-class figure
-    * BENCH_notes_r15 §3 priced the conf-20k example with. Both are
-    * order-of-magnitude knobs of a LOG-ONLY suggestion — the cap itself
-    * stays operator-set. */
-  private[graft] val CrossFlopsPerCore: Double = 2e10
-  private[graft] val CrossBwBytesPerSec: Double = 1e10
-
-  /** Conf-threaded calibration of the two P* constants (round 17, the
-    * recorded ADVICE watch): `spark.graft.cross.flopsPerCore` /
-    * `spark.graft.cross.bwBytesPerSec` let a cluster deployment feed its
-    * MEASURED sustained kernel rate and aggregate shuffle bandwidth into
-    * the logged suggestion without recompiling; the pinned this-host
-    * defaults keep every local record identical. Same two-source read
-    * discipline as `spark.graft.cross.maxParallelism` (session conf
-    * first, then SparkConf — Spark 4.1's RuntimeConfig does not surface
-    * unregistered -D keys). */
-  private[graft] def crossConstant(
-      ss: org.apache.spark.sql.SparkSession, key: String, dflt: Double): Double =
-    ss.conf.getOption(key)
-      .orElse(ss.sparkContext.getConf.getOption(key))
-      .map { v =>
-        val d = try v.trim.toDouble catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be a positive number, got '$v'", e)
-        }
-        require(d > 0, s"$key must be a positive number, got '$v'")
-        d
-      }.getOrElse(dflt)
-
-  /** P* ≈ (T_kernel·bw / (√2·|C|))^⅔ — the cross-stage parallelism where
-    * kernel compute W/P and replication traffic √(2P)·|C|/bw balance
-    * (BENCH_notes_r14 §1e / r15 §3). Pure so the unit gate can pin the
-    * published conf-20k example: T_kernel 1280 core-s, |C| 0.521 GB raw
-    * → P* ≈ 670 (the notes round to ~690 with |C| 0.5 GB). The bandwidth
-    * defaults to the pinned constant; the dense dispatch threads the
-    * conf-calibrated value through. */
-  private[graft] def crossPStar(kernelCoreSec: Double, packedBytes: Double,
-      bwBytesPerSec: Double = CrossBwBytesPerSec): Double =
-    math.pow(kernelCoreSec * bwBytesPerSec / (math.sqrt(2.0) * packedBytes), 2.0 / 3.0)
-
   private def blockedPairs(
       assigned: DataFrame, canonicalCellPairs: DataFrame,
       threshold: Double, k: Long): DataFrame = {
@@ -425,53 +363,10 @@ object SimilarityOps {
     val pb = packed.select(col("cid").as("cid_b"), col("blk").as("blk_b"),
       col("cell").as("cell_b"))
     val conf = assigned.sparkSession.sessionState.conf.numShufflePartitions
-    // CROSS-STAGE PARALLELISM CAP (round 15, verdict ask 3): the grouped
-    // cross's replication traffic is ~|C|·√(2P) for P-way parallelism — a
-    // communication lower bound of parallel all-pairs (BENCH_notes_r14
-    // §1e), so at production session parallelism (conf ≫ 32, e.g. 20k
-    // cores) the stage must NOT inherit conf: its own P should sit near
-    // P* ≈ (T_kernel·bw / √2·|C|)^⅔ — the point where kernel compute
-    // W/P and traffic √(2P)·|C|/bw balance (T_kernel = single-slot
-    // kernel seconds, bw = aggregate shuffle bandwidth). The knob
-    // `spark.graft.cross.maxParallelism` caps the cross stage at
-    // min(conf, knob); the operator computes P* from the measured packed
-    // relation size (|C| is the packing aggregate's output; T_kernel ≈
-    // n²·d/flops) using the rule above. UNSET (the default, and every
-    // gated configuration) the cap is conf and every plan is
-    // byte-identical to round 14 — on this host the kernel sets the wall
-    // at every measurable configuration (r14 measured decision), so the
-    // knob exists for the conf regime local[32] cannot reach.
-    // read the session conf first (spark.conf.set), then the SparkContext
-    // conf: a spark-submit --conf / -Dspark.* entry lands in SparkConf and
-    // Spark 4.1's RuntimeConfig.getOption does NOT surface unregistered
-    // keys from there (measured: a -D-set cap left the gslot exchanges at
-    // 32 partitions until this fallback landed) — without it the knob
-    // would be unusable through the normal cluster submission route.
-    // COUPLING NOTE (round-16 ADVICE): the knob moves the dispatch
-    // machinery too — a small cap shrinks gp, so the dense bar 2gp−1
-    // drops and the no-count region k ≤ 4gp−3 narrows, which can
-    // re-engage the ~+0.4 s dispatch-count job at gate-scale k (13–20)
-    // and flip borderline corpora into the dense cross. That is the
-    // intended semantics (the bar must be priced from the CAPPED grid's
-    // round trip), but a cluster operator setting the knob should know
-    // the dispatch boundary moves with it.
-    val crossP = {
-      val ss = assigned.sparkSession
-      ss.conf.getOption("spark.graft.cross.maxParallelism")
-        .orElse(ss.sparkContext.getConf.getOption("spark.graft.cross.maxParallelism"))
-        .map { v =>
-          val n = try v.trim.toInt catch {
-            case e: NumberFormatException => throw new IllegalArgumentException(
-              "spark.graft.cross.maxParallelism must be a positive integer " +
-                s"(the cross stage's parallelism cap), got '$v'", e)
-          }
-          math.min(conf, math.max(1, n))
-        }.getOrElse(conf)
-    }
     // Per-side replication of the slotted cross (its REAL traffic term):
-    // G² group pairs need ≥ crossP slots, so G = ⌈√(2·crossP)⌉ gives
+    // G² group pairs need ≥ conf slots, so G = ⌈√(2·conf)⌉ gives
     // every partition ≥2 pairs by construction under pre-image placement.
-    val gp = math.max(2, math.ceil(math.sqrt(2.0 * crossP)).toInt)
+    val gp = math.max(2, math.ceil(math.sqrt(2.0 * conf)).toInt)
     // DISPATCH BAR, re-derived from the slotted path's true traffic
     // (round 15, verdict ask 4). Totals in packed-corpus units |C|:
     //   equi bridge: pb ships once through the cid_b exchange (1×) and
@@ -526,49 +421,6 @@ object SimilarityOps {
           "see the embeddingNearDup scaladoc's supported-threshold note)")
       pairs > bar * pop
     }
-    if (dense && crossP < conf)
-      log.warn(s"grouped cross capped at effective parallelism ${gp * gp} " +
-        s"(spark.graft.cross.maxParallelism=$crossP, conf=$conf): " +
-        s"per-side replication $gp")
-    // P* SUGGESTION (round 16, verdict ask 4): when the dense cross
-    // engages, compute the documented sizing rule's recommendation from
-    // MEASURED quantities and log it, so a cluster operator gets the cap
-    // without reading BENCH_notes. Exact candidate volume Σ csz_a·csz_b
-    // over the checkpointed pair table (the kernel's true work term — an
-    // a-priori n²d estimate is wrong for the capped operator, whose pair
-    // table is candidate-linear by construction) and the packed-corpus
-    // raw bytes from the same csz aggregate the packing path reuses.
-    // Assumptions are stated in the log line and pinned as constants
-    // ([[CrossFlopsPerCore]], [[CrossBwBytesPerSec]]). Cost: three tiny
-    // driver-edge jobs (a broadcast-joined sum over the ≤k²-row pair
-    // table, one O(#cells) sum, one LIMIT-1 dim read) that run ONLY in
-    // the dense regime — never at gate scale, where no dispatch count
-    // runs at all. Log-only: the plan is unchanged whether or not the
-    // knob is set.
-    if (dense) {
-      val cand = cp
-        .join(broadcast(csz.select(col("cid").as("cid_a"), col("csz").as("csz_a"))), Seq("cid_a"))
-        .join(broadcast(csz.select(col("cid").as("cid_b"), col("csz").as("csz_b"))), Seq("cid_b"))
-        .agg(sum(col("csz_a") * col("csz_b"))).head().getLong(0)
-      val nRows = csz.agg(sum(col("csz"))).head().getLong(0)
-      val dim = assigned.select(size(col("embedding"))).head().getInt(0)
-      // calibration constants read per-dispatch so a cluster can thread
-      // measured values through conf (round 17); defaults = pinned locals
-      val ss = assigned.sparkSession
-      val flopsPerCore = crossConstant(ss, "spark.graft.cross.flopsPerCore", CrossFlopsPerCore)
-      val bwBytesPerSec = crossConstant(ss, "spark.graft.cross.bwBytesPerSec", CrossBwBytesPerSec)
-      val tKernel = cand * 2.0 * dim / flopsPerCore
-      val cBytes = nRows * (4.0 * dim + 16.0)
-      val pStar = crossPStar(tKernel, cBytes, bwBytesPerSec)
-      log.info(f"dense cross sizing: candidate volume $cand%,d vector pairs " +
-        f"(dim $dim, est. kernel $tKernel%.0f core-s at " +
-        f"${flopsPerCore / 1e9}%.0f GFLOP/s/core), packed corpus " +
-        f"~${cBytes / 1e9}%.2f GB raw -> suggested " +
-        f"spark.graft.cross.maxParallelism P* ~ ${math.round(pStar)} at " +
-        f"${bwBytesPerSec / 1e9}%.0f GB/s aggregate shuffle bandwidth " +
-        f"(worth setting only when session conf $conf >> P*; " +
-        f"current cap $crossP)")
-    }
     val candidates =
       if (dense) {
         // Dense regime: 2D grouped cross with DETERMINISTIC slot
@@ -590,20 +442,6 @@ object SimilarityOps {
         // honoring the pre-partitioning, EnsureRequirements just inserts
         // the hash exchange this replaces (correctness never depends on
         // placement).
-        // The cap is applied to the REPLICATION G (sized from crossP
-        // above), not the exchange's partition count: Spark 4.1's
-        // EnsureRequirements REWRITES a user repartition whose count
-        // differs from spark.sql.shuffle.partitions back to conf when
-        // the gslot join plans as SMJ (measured, minimal repro: two
-        // repartition(8, col) children under a forced SMJ at conf 32
-        // both planned as hashpartitioning(col, 32); they survive only
-        // when the join broadcasts — BENCH_notes_r15 §3). So the
-        // exchange stays at conf — byte-identical plans when the cap is
-        // unset — and a cap works by shrinking the group grid: gp² slot
-        // values on conf partitions mean ≤gp² non-empty kernel tasks
-        // (the capped effective parallelism) and 2·gp × packed
-        // replication (the capped traffic term, which is what the P*
-        // rule actually bounds).
         val slots = pairSlotValues(conf, gp * gp)
         val slotLit = array(slots.map(lit(_)).toIndexedSeq: _*)
         // pair-unique slot value: the join's ONLY key (equality ⟺ same
@@ -918,7 +756,7 @@ object SimilarityOps {
       .select(col("vec_a"), col("vec_b"))
     // adaptive strategy switch (see connectedComponentsAdaptive): semantic
     // pair graphs are tiny relative to their corpus; the distributed loop
-    // engages above the edge bound and stays gated via x34/x36
+    // engages above the edge bound and stays gated via x34
     val comp = DedupOps.connectedComponentsAdaptive(pairs, "vec_a", "vec_b")
     val losers = comp.filter(col("component") =!= col("doc_id"))
       .select(col("doc_id").as("vec_id"))

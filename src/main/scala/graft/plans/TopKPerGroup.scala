@@ -7,13 +7,11 @@ import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /**
  * Bounded top-k rows per group as a mergeable aggregate — the physical
- * engine of [[TopKPerGroupRewrite]].
+ * engine of [[TopKPerGroup.topKPerGroup]].
  *
  * For each input row the aggregate evaluates `sortExpr` (a struct of the
  * window's ORDER BY keys) and `rowExpr` (a struct of every carried column)
@@ -33,7 +31,7 @@ import org.apache.spark.sql.types._
  *
  * Determinism contract: identical to `row_number()`'s — ranks are stable
  * only under a total sort order. The engine's own queries always tie-break
- * (CI-locked convention); the rewrite preserves whatever tie behavior the
+ * (CI-locked convention); the heap preserves whatever tie behavior the
  * order defines, because comparison uses the window's exact SortOrder
  * directions and null ordering ([[InterpretedOrdering]]).
  *
@@ -146,99 +144,12 @@ case class TopKRows(
 }
 
 /**
- * Optimizer rule (the engine's one `Rule[LogicalPlan]` — SURVEY §4.3's
- * custom-operator ladder rung (c)): rewrite the ubiquitous top-k-per-group
- * idiom
- * {{{
- *   Filter(row_number <= k,
- *     Window([row_number() over (partition by P order by O)], P, O, child))
- * }}}
- * into a bounded-heap aggregate + positional explode that reconstructs the
- * surviving rows AND their rank, byte-identical to the window form under a
- * total sort order (see [[TopKRows]] for why this wins at scale: no
- * per-group sort, k-bounded map-side partials, a shuffle that carries
- * `k · groups` instead of the corpus).
- *
- * The rewrite fires only on the exact shape it preserves:
- *  - the Window computes EXACTLY ONE expression, a plain `row_number()`
- *    (rank/dense_rank admit ties past k — different semantics);
- *  - the partition spec is non-empty (a global top-k already plans as the
- *    bounded [[org.apache.spark.sql.execution.TakeOrderedAndProjectExec]]);
- *  - the filter is `rn <= lit` / `rn < lit` / `rn = 1` with the literal an
- *    Int, referencing the window column and nothing else.
- * Registered through `spark.experimental.extraOptimizations` (runs after
- * the main optimizer batches, where the Filter-over-Window shape is
- * stable), installed by [[graft.functions.GraftFunctions.register]].
- */
-object TopKPerGroupRewrite extends Rule[LogicalPlan] {
-
-  private def limitOf(cond: Expression, rn: Attribute): Option[Int] = cond match {
-    case LessThanOrEqual(a: Attribute, Literal(v: Int, IntegerType)) if a.semanticEquals(rn) => Some(v)
-    case LessThan(a: Attribute, Literal(v: Int, IntegerType)) if a.semanticEquals(rn) => Some(v - 1)
-    case GreaterThanOrEqual(Literal(v: Int, IntegerType), a: Attribute) if a.semanticEquals(rn) => Some(v)
-    case GreaterThan(Literal(v: Int, IntegerType), a: Attribute) if a.semanticEquals(rn) => Some(v - 1)
-    case EqualTo(a: Attribute, Literal(1, IntegerType)) if a.semanticEquals(rn) => Some(1)
-    case EqualTo(Literal(1, IntegerType), a: Attribute) if a.semanticEquals(rn) => Some(1)
-    case _ => None
-  }
-
-  /**
-   * DEFAULT OFF — a measured decision, not a hedge (TopKPerGroupBenchSpec,
-   * local[4], 2 reps): the rewrite is ~8× FASTER on wide groups (4 groups ×
-   * 20 M rows, k=3: 0.98 s vs 7.83 s — the per-partition sort Spark 4's own
-   * WindowGroupLimit still pays dominates there) but ~2× slower on many
-   * tiny groups (400 k groups × 5 rows, k=1: heap/object overhead with no
-   * sort to save — and that is the engine's own dedup-winner shape, which
-   * stock WindowGroupLimit already shuffle-prunes well). Cardinality isn't
-   * visible to the rule, so the default protects the common engine shape;
-   * wide-group pipelines opt in via the conf, or call
-   * [[TopKPerGroup.topKPerGroup]] to get the heap plan explicitly.
-   */
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.topk.rewrite", "false").toBoolean) plan
-    else rewrite(plan)
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond,
-        Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
-          part, order, rawChild, _))
-        if part.nonEmpty && order.nonEmpty &&
-          limitOf(cond, alias.toAttribute).exists(_ >= 1) =>
-      val k = limitOf(cond, alias.toAttribute).get
-      // Spark's own InferWindowGroupLimit has usually run by now and placed
-      // a WindowGroupLimit (sort + per-group prune) under the Window. The
-      // heap aggregate subsumes it WITHOUT sorting — strip it, or its Sort
-      // would survive below us and pay the O(n log n) the rewrite removes.
-      val child = rawChild match {
-        case wgl: WindowGroupLimit => wgl.child
-        case other => other
-      }
-      val rowStruct = CreateStruct(child.output)
-      val sortStruct = CreateStruct(order.map(_.child))
-      val agg = TopKRows(rowStruct, sortStruct, k,
-        order.map(so => (so.direction == Ascending, so.nullOrdering == NullsFirst)))
-      val arrAlias = Alias(
-        AggregateExpression(agg, Complete, isDistinct = false), "__graft_topk")()
-      val aggNode = Aggregate(part, Seq(arrAlias), child, None)
-      val posAttr = AttributeReference("__graft_pos", IntegerType, nullable = false)()
-      val colAttr = AttributeReference("__graft_row", rowStruct.dataType, nullable = false)()
-      val gen = Generate(PosExplode(arrAlias.toAttribute),
-        unrequiredChildIndex = Seq(0), outer = false, qualifier = None,
-        generatorOutput = Seq(posAttr, colAttr), aggNode)
-      // reconstruct the Filter's exact output: child columns from the row
-      // struct, the rank from the explode position — PINNED to the original
-      // exprIds so everything above the rewrite still resolves
-      val restored = child.output.zipWithIndex.map { case (a, i) =>
-        Alias(GetStructField(colAttr, i, Some(a.name)), a.name)(exprId = a.exprId)
-      }
-      val rank = Alias(Add(posAttr, Literal(1, IntegerType)), alias.name)(exprId = alias.exprId)
-      Project(restored :+ rank, gen)
-  }
-}
-
-/**
  * The explicit operator form of the heap top-k — for callers who KNOW their
- * group shape is wide (see [[TopKPerGroupRewrite]]'s measured default):
+ * group shape is wide. Measured at local[4] against the `row_number()`
+ * window: ~8× faster on 4 groups × 20 M rows (k=3: 0.98 s vs 7.83 s — the
+ * per-partition sort Spark 4's WindowGroupLimit still pays dominates there)
+ * but ~2× slower on 400 k groups × 5 rows (k=1: heap/object overhead with
+ * no sort to save), so it is a caller's choice, never a blanket rewrite.
  * `topKPerGroup(df, Seq("lang"), Seq(("n_toks", false), ("doc_id", true)), 3)`
  * keeps each group's first k rows under the given (column, ascending) total
  * order and appends their 1-based rank. Built from public API only: the

@@ -41,28 +41,15 @@ object LedgerTables {
     spark.read.parquet(path)
 
   /**
-   * O21 UPDATE: status transition on a plain-parquet ledger, rewriting ONLY
-   * the day partitions that contain matching rows (the reference issues a
-   * Snowflake UPDATE; parquet is immutable, so the engine stages the affected
-   * partitions and swaps them in — at 100 TB an update touching one day
-   * rewrites that day, not the table). Returns rows affected (V4 contract).
-   */
-  def updateStatus(
-      spark: SparkSession,
-      path: String,
-      predicate: org.apache.spark.sql.Column,
-      newStatus: String): Long =
-    rewriteAffectedPartitions(spark, path, predicate, Nil) { _ => (ledger, pred) =>
-      ledger.withColumn("pipeline_status",
-        org.apache.spark.sql.functions.when(pred, newStatus)
-          .otherwise(org.apache.spark.sql.functions.col("pipeline_status")))
-    }
-
-  /**
-   * General UPDATE: apply `SET col = expr` assignments to matching rows,
+   * O21 UPDATE: apply `SET col = expr` assignments to matching rows,
    * rewriting only the affected day partitions (or the whole table —
    * preserving its partition layout — when it is not day-partitioned).
-   * Backs the SQL-text UPDATE path of `QueryEngine.executeDmlQuery`.
+   * The reference issues a Snowflake UPDATE; parquet is immutable, so the
+   * engine stages the affected partitions and swaps them in — at 100 TB an
+   * update touching one day rewrites that day, not the table. A status
+   * transition is `Seq("pipeline_status" -> lit(status))`. Returns rows
+   * affected (V4 contract). Backs the SQL-text UPDATE path of
+   * `QueryEngine.executeDmlQuery`.
    * `partitionCols` is the table's declared partitioning when the caller
    * knows it (catalog tables); empty means "detect the ledger layout".
    * Assigning a partition column is rejected — a row changing partitions

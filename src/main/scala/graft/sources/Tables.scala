@@ -29,12 +29,6 @@ object Tables {
     }
   }
 
-  /** Register every source table as a temp view (name = table name). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    names.foreach { t => read(spark, sfDir, t).createOrReplaceTempView(t) }
-    pipelineRuns(spark, sfDir).createOrReplaceTempView("pipeline_runs")
-  }
-
   /**
    * The reference ledger fixture, derived deterministically from `events`
    * (FIXTURES.md §pipeline_runs; schema evidence in SURVEY.md §1.1).

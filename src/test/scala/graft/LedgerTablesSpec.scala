@@ -52,10 +52,10 @@ class LedgerTablesSpec extends SparkSpec {
     val before03 = partFiles("03")
     val before04 = partFiles("04")
     // UPDATE limited to day 03
-    val n = LedgerTables.updateStatus(spark, tmp,
+    val n = LedgerTables.updateWhere(spark, tmp,
       col("pipeline_status") === "pending" &&
         col("query_window_start_day") === lit(java.sql.Date.valueOf("2024-01-03")),
-      "in_progress")
+      Seq("pipeline_status" -> lit("in_progress")))
     // day 03 rows have i%6==2, i.e. even i → all 10 are 'pending'
     assert(n == 10, s"rows affected $n")
     val back = LedgerTables.read(spark, tmp)
@@ -70,8 +70,9 @@ class LedgerTablesSpec extends SparkSpec {
     assert(d == 10) // day 04 rows have odd i → all 'completed'
     assert(LedgerTables.read(spark, tmp).count() == 50)
     // no-op predicate → 0 affected, nothing rewritten
-    assert(LedgerTables.updateStatus(spark, tmp,
-      col("pipeline_status") === "nope", "x") == 0L)
+    assert(LedgerTables.updateWhere(spark, tmp,
+      col("pipeline_status") === "nope",
+      Seq("pipeline_status" -> lit("x"))) == 0L)
   }
 
   test("DELETE keeps rows where the predicate evaluates to NULL") {

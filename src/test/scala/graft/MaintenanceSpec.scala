@@ -67,7 +67,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("writer lease: a second writer fails loudly; a crashed lease is reclaimed after its TTL") {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     import graft.sources.WriterLease
     val rows = (0 until 20).map { i =>
       ((i + 1).toLong, "p", "i", "2024-02-01 10:00:00", "2024-02-01 11:00:00",
@@ -84,8 +84,9 @@ class MaintenanceSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("writer-A"))
     val e2 = intercept[WriterLease.HeldByOtherWriterException] {
-      LedgerTables.updateStatus(spark, tmp,
-        col("pipeline_status") === "pending", "completed")
+      LedgerTables.updateWhere(spark, tmp,
+        col("pipeline_status") === "pending",
+        Seq("pipeline_status" -> lit("completed")))
     }
     assert(e2.getMessage.contains("writer-A"))
     assert(LedgerTables.read(spark, tmp)
@@ -96,8 +97,9 @@ class MaintenanceSpec extends SparkSpec {
     // reclaims it, runs, and releases
     WriterLease.acquire(fs, base, owner = "crashed-writer", ttlMs = 0L)
     Thread.sleep(5) // strictly past the 0 ms TTL
-    val updated = LedgerTables.updateStatus(spark, tmp,
-      col("pipeline_status") === "pending", "completed")
+    val updated = LedgerTables.updateWhere(spark, tmp,
+      col("pipeline_status") === "pending",
+      Seq("pipeline_status" -> lit("completed")))
     assert(updated == 10L)
     assert(WriterLease.read(fs, base).isEmpty, "lease must be released after the rewrite")
     // and compaction acquires/releases cleanly afterwards
@@ -107,7 +109,7 @@ class MaintenanceSpec extends SparkSpec {
 
   test("DML replays a crashed compaction before reading — no permanent row loss") {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val rows = (0 until 30).map { i =>
       ((i + 1).toLong, "p", "i", "2024-01-07 10:00:00", "2024-01-07 11:00:00", "pending")
     }
@@ -136,8 +138,9 @@ class MaintenanceSpec extends SparkSpec {
       "fixture must visibly miss rows pre-recovery")
     // The DML must replay the manifest under its lease BEFORE reading —
     // all 30 rows present and updated afterwards, recovery state consumed.
-    val n = LedgerTables.updateStatus(spark, tmp,
-      col("pipeline_status") === "pending", "completed")
+    val n = LedgerTables.updateWhere(spark, tmp,
+      col("pipeline_status") === "pending",
+      Seq("pipeline_status" -> lit("completed")))
     assert(n == 30L, s"update must see the recovered partition: $n")
     val after = LedgerTables.read(spark, tmp)
     assert(after.count() == 30)
@@ -235,7 +238,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compaction and partition-rewrite DML run through the Hadoop FS on a file:/// URI") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val rows = (0 until 60).map { i =>
       ((i + 1).toLong, "p", "i",
         f"2024-01-${1 + i % 2}%02d 10:00:00", f"2024-01-${1 + i % 2}%02d 11:00:00",
@@ -248,8 +251,9 @@ class MaintenanceSpec extends SparkSpec {
     assert(results.nonEmpty)
     results.foreach(r => assert(r.filesAfter == 1, r.toString))
     // partition-rewrite UPDATE/DELETE against the same URI
-    val updated = LedgerTables.updateStatus(spark, uri,
-      col("pipeline_status") === "pending", "completed")
+    val updated = LedgerTables.updateWhere(spark, uri,
+      col("pipeline_status") === "pending",
+      Seq("pipeline_status" -> lit("completed")))
     assert(updated == rows.count(_._6 == "pending").toLong)
     val deleted = LedgerTables.deleteWhere(spark, uri,
       col("record_id") <= 10)

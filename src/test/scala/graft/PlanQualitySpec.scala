@@ -227,22 +227,15 @@ class PlanQualitySpec extends SparkSpec {
       s"k=2 must stay on the sparse bridge: ${sparse.take(3000)}")
   }
 
-  test("cross-parallelism cap: the slotted cross's partition count follows the knob, result set unchanged") {
-    // spark.graft.cross.maxParallelism is the production lever for the
-    // √P-coupled replication lower bound (BENCH_notes_r14 §1e): at conf
-    // ≫ 32 the cross stage must not inherit session parallelism. The
-    // knob can't be WALL-justified on this host (the kernel dominates
-    // everywhere local[32] reaches), so the lock pins the MECHANISM.
-    // What the cap controls is the GROUP GRID — per-side replication
-    // G = ⌈√(2·cap)⌉, visible in the OPTIMIZED plan as the folded slot
+  test("slotted cross: conf-sized grid, exchanges at conf, pairs equal brute force") {
+    // The grouped cross's GROUP GRID — per-side replication
+    // G = ⌈√(2·conf)⌉ — is visible in the OPTIMIZED plan as the folded slot
     // lookup's G²-element array and ×G multiplier (ConstantFolding eats
-    // the sequence literal itself), with ≤G² non-empty kernel tasks — NOT
-    // the exchange partition count: Spark 4.1's EnsureRequirements
-    // rewrites a user repartition whose count differs from conf back to
-    // conf under an SMJ (measured, minimal repro in BENCH_notes_r15 §3),
-    // so the exchanges stay at conf in BOTH modes and byte-identical
-    // plans when unset fall out for free. Pair set must be
-    // placement-independent (round-15 verdict ask 3).
+    // the sequence literal itself). The exchanges stay at conf: Spark
+    // 4.1's EnsureRequirements rewrites a user repartition whose count
+    // differs from conf back to conf under an SMJ (measured, minimal
+    // repro in BENCH_notes_r15 §3). Pair set must be placement-independent
+    // (round-15 verdict ask 3).
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
@@ -277,28 +270,16 @@ class PlanQualitySpec extends SparkSpec {
     val brute = graft.operators.SimilarityOps.embeddingNearDupBrute(emb, 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val conf = spark.sessionState.conf.numShufflePartitions
-    // uncapped at conf 4: gp = ceil(sqrt(2*4)) = 3 -> 9 slots, multiplier 3
+    // at conf 4: gp = ceil(sqrt(2*4)) = 3 -> 9 slots, multiplier 3
     val dflt = graft.operators.SimilarityOps.embeddingNearDupWith(emb, 0.0, cents)
     val pDflt = gslotParts(dflt)
     assert(pDflt.nonEmpty && pDflt.forall(_ == conf),
-      s"unset knob must leave the cross at conf=$conf: $pDflt")
+      s"the slotted cross's exchanges must stay at conf=$conf: $pDflt")
     assert(gridSig(dflt) == ((9, 3)),
-      s"unset knob must keep the conf-sized group grid (gp=3 at conf 4): ${gridSig(dflt)}")
-    spark.conf.set("spark.graft.cross.maxParallelism", "2")
-    try {
-      // capped at 2: gp = ceil(sqrt(2*2)) = 2 -> 4 slots, multiplier 2,
-      // i.e. per-side replication 2 and <=4 non-empty kernel slots
-      val capped = graft.operators.SimilarityOps.embeddingNearDupWith(emb, 0.0, cents)
-      assert(gridSig(capped) == ((4, 2)),
-        s"capped cross must shrink the group grid to gp=2: ${gridSig(capped)}")
-      val got = capped.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == brute, "the cap must never change the pair set: " +
-        s"missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
-      val pCap = gslotParts(capped)
-      assert(pCap.nonEmpty && pCap.forall(_ == conf),
-        "capped cross exchanges stay at conf (EnsureRequirements rewrites " +
-          s"non-conf user counts under SMJ — see the lock header): $pCap")
-    } finally spark.conf.unset("spark.graft.cross.maxParallelism")
+      s"the group grid must be conf-sized (gp=3 at conf 4): ${gridSig(dflt)}")
+    val got = dflt.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == brute, "slot placement must never change the pair set: " +
+      s"missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
   }
 
   test("dense-cross slot placement: pre-image values land on their assigned partitions") {

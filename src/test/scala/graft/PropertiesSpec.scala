@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.operators.{ContinuityOps, OverlapOps, SimilarityOps, StatusOps}
 
@@ -84,8 +84,9 @@ class PropertiesSpec extends SparkSpec {
       }
       val tmp = java.nio.file.Files.createTempDirectory(s"graft_dml$seed").toString
       LedgerTables.write(ledgerOf(rows: _*).repartition(4), tmp)
-      val nUpd = LedgerTables.updateStatus(spark, tmp,
-        col("pipeline_status") === "failed", "pending")
+      val nUpd = LedgerTables.updateWhere(spark, tmp,
+        col("pipeline_status") === "failed",
+        Seq("pipeline_status" -> lit("pending")))
       assert(nUpd == rows.count(_._6 == "failed").toLong, s"seed=$seed update count")
       val afterUpdate = rows.map { r =>
         if (r._6 == "failed") r.copy(_6 = "pending") else r
@@ -130,18 +131,20 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
-  test("star-contraction components equal label-propagation components on any graph") {
+  test("label-propagation components equal union-find components on any graph") {
     import spark.implicits._
     import graft.operators.DedupOps
     def check(name: String, edges: Seq[(Long, Long)]): Unit = {
       val df = edges.toDF("doc_a", "doc_b")
       val prop = DedupOps.connectedComponents(df).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
-      val star = DedupOps.connectedComponentsStar(df).collect()
+      // under the default SmallGraphEdges bound the adaptive operator
+      // resolves these graphs on the driver by union-find
+      val uf = DedupOps.connectedComponentsAdaptive(df).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(star == prop, s"$name: star $star != propagation $prop")
+      assert(uf == prop, s"$name: union-find $uf != propagation $prop")
     }
-    // the shape star contraction exists for: a long chain (diameter = n−1)
+    // a long chain (diameter = n−1): the most label-propagation rounds
     check("chain", (1L until 20L).map(i => (i, i + 1)))
     // a clique plus a pendant, and two disjoint components
     check("clique+pendant",

@@ -234,60 +234,4 @@ class SimilarityIndexSpec extends SparkSpec {
     }
   }
 
-  test("crossPStar pins the published conf-20k sizing example") {
-    // BENCH_notes_r15 §3: the embed_big fixture (500k×256d ×4 dup) at a
-    // 20k-core session — T_kernel ≈ 1280 core-s, |C| ≈ 521 MB raw,
-    // 10 GB/s aggregate bw — should recommend P* ≈ 670–690 (5× less
-    // replication traffic than inheriting conf: ⌈√(2·20000)⌉ = 200 vs
-    // ⌈√(2·690)⌉ = 38 per side). The dense dispatch now computes and
-    // logs this rule from measured quantities (round 16, verdict ask 4);
-    // this pins the formula against the published example so a constant
-    // or exponent regression is caught at unit scope.
-    val pStar = SimilarityOps.crossPStar(1280.0, 0.521e9)
-    assert(math.abs(pStar - 672) < 10, s"P* formula drifted: $pStar (expected ~672)")
-    // monotonicity sanity: more kernel work raises P*, a bigger packed
-    // corpus (more traffic per unit of replication) lowers it
-    assert(SimilarityOps.crossPStar(2560.0, 0.521e9) > pStar)
-    assert(SimilarityOps.crossPStar(1280.0, 1.042e9) < pStar)
-  }
-
-  test("P* calibration constants thread through conf (round 17, ADVICE watch)") {
-    // defaults: unset conf keys yield the pinned this-host constants, so
-    // every local record stays identical
-    assert(SimilarityOps.crossConstant(spark, "spark.graft.cross.flopsPerCore",
-      SimilarityOps.CrossFlopsPerCore) == SimilarityOps.CrossFlopsPerCore)
-    try {
-      // a cluster threads MEASURED values through: 4× the flops rate
-      // quarters T_kernel, and P* moves per the rule — T^⅔ → P* falls by
-      // 4^⅔ ≈ 2.52; 8× the bandwidth raises P* by 8^⅔ = 4 exactly
-      spark.conf.set("spark.graft.cross.flopsPerCore", "8e10")
-      spark.conf.set("spark.graft.cross.bwBytesPerSec", "8e10")
-      val flops = SimilarityOps.crossConstant(spark,
-        "spark.graft.cross.flopsPerCore", SimilarityOps.CrossFlopsPerCore)
-      val bw = SimilarityOps.crossConstant(spark,
-        "spark.graft.cross.bwBytesPerSec", SimilarityOps.CrossBwBytesPerSec)
-      assert(flops == 8e10 && bw == 8e10)
-      // the same work/bytes the conf-20k example pins: kernel core-s scale
-      // as 1/flops, so the logged P* under the overridden constants is
-      // (T/4 · 8bw)^⅔-proportional = 2^⅔ × the pinned example
-      val base = SimilarityOps.crossPStar(1280.0, 0.521e9)
-      val moved = SimilarityOps.crossPStar(1280.0 * (2e10 / flops), 0.521e9, bw)
-      assert(math.abs(moved / base - math.pow(2.0, 2.0 / 3.0)) < 1e-9,
-        s"conf-threaded P* did not move per the rule: $moved vs base $base")
-      // malformed and non-positive values are rejected loudly, never
-      // silently defaulted (a typo'd calibration must not masquerade as
-      // the pinned constant)
-      spark.conf.set("spark.graft.cross.bwBytesPerSec", "fast")
-      intercept[IllegalArgumentException] {
-        SimilarityOps.crossConstant(spark, "spark.graft.cross.bwBytesPerSec", 1e10)
-      }
-      spark.conf.set("spark.graft.cross.bwBytesPerSec", "-3")
-      intercept[IllegalArgumentException] {
-        SimilarityOps.crossConstant(spark, "spark.graft.cross.bwBytesPerSec", 1e10)
-      }
-    } finally {
-      spark.conf.unset("spark.graft.cross.flopsPerCore")
-      spark.conf.unset("spark.graft.cross.bwBytesPerSec")
-    }
-  }
 }

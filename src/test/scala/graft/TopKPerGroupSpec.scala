@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The top-k-per-group optimizer rewrite (graft.plans.TopKPerGroupRewrite):
-  * equivalence against both a driver-side replay and the un-rewritten
-  * window form, plan shape, and the guard conditions that keep it off
-  * non-preserving patterns. */
+import graft.plans.TopKPerGroup.topKPerGroup
+
+/** The explicit heap top-k operator (graft.plans.TopKPerGroup.topKPerGroup):
+  * equivalence against both a driver-side replay and the `row_number()`
+  * window form, plan shape, the k = 1 dedup-winner idiom, and null sort
+  * keys under Spark's default null ordering. */
 class TopKPerGroupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,137 +19,60 @@ class TopKPerGroupSpec extends SparkSpec {
       .toDF("id", "grp", "score")
   }
 
-  private def windowed(k: Int) = {
-    graft.functions.GraftFunctions.register(spark)
-    // the rule is a measured default-OFF (TopKPerGroupBenchSpec) — these
-    // tests exercise the opted-in form
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    fixture
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("score").desc, col("id"))))
-      .filter(col("rn") <= k)
-  }
-
-  private def windowed3Off = fixture
+  private def windowed(k: Int) = fixture
     .withColumn("rn", row_number().over(
       Window.partitionBy(col("grp")).orderBy(col("score").desc, col("id"))))
-    .filter(col("rn") <= 3)
+    .filter(col("rn") <= k)
 
-  test("rewrite is row-identical to the window form and to a driver replay") {
-    val got = windowed(3).orderBy(col("grp"), col("rn"))
-      .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
-    // driver replay of row_number semantics under the same total order
-    val want = fixture.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._2).toSeq.flatMap { case (g, rows) =>
-        rows.sortBy(r => (-r._3, r._1)).take(3).zipWithIndex
-          .map { case (r, i) => (g, r._1, i + 1) }
-      }.sortBy(r => (r._1, r._3))
-    assert(got == want, s"got=${got.take(10)}… want=${want.take(10)}…")
-    // and to the window form with the rule disabled
-    try {
-      spark.conf.set("spark.graft.topk.rewrite", "false")
-      val ref = windowed3Off.orderBy(col("grp"), col("rn"))
+  test("topKPerGroup equals the row_number() window form and a driver replay") {
+    for (k <- Seq(1, 3, 5)) {
+      val got = topKPerGroup(fixture, Seq("grp"), Seq(("score", false), ("id", true)), k)
+        .orderBy(col("grp"), col("rn"))
         .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
-      assert(got == ref)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+      // driver replay of row_number semantics under the same total order
+      val want = fixture.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+        .groupBy(_._2).toSeq.flatMap { case (g, rows) =>
+          rows.sortBy(r => (-r._3, r._1)).take(k).zipWithIndex
+            .map { case (r, i) => (g, r._1, i + 1) }
+        }.sortBy(r => (r._1, r._3))
+      assert(got == want, s"k=$k got=${got.take(10)}… want=${want.take(10)}…")
+      val ref = windowed(k).orderBy(col("grp"), col("rn"))
+        .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
+      assert(got == ref, s"k=$k: heap and window forms diverge")
+    }
   }
 
-  test("rewrite replaces the window: no WindowExec, heap aggregate + explode") {
-    val p = windowed(5).queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), s"WindowExec survived:\n${p.take(2000)}")
-    assert(p.contains("graft_top_k_rows"), p.take(2000))
-    assert(p.contains("Generate"), p.take(2000))
-    // partial aggregation happens below the shuffle: the plan has the
-    // aggregate twice (partial + final) around one exchange
-    assert("graft_top_k_rows".r.findAllIn(p).length >= 2,
-      s"expected map-side partial top-k:\n${p.take(2000)}")
-  }
-
-  test("rn = 1 (the dedup-winner idiom) rewrites too") {
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    val df = fixture
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("score"), col("id"))))
-      .filter(col("rn") === 1)
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), p.take(2000))
-    val got = df.collect().map(r => (r.getString(1), r.getLong(0))).sortBy(_._1).toSeq
+  test("rn = 1 (the dedup-winner idiom) through topKPerGroup with k = 1") {
+    val df = topKPerGroup(fixture, Seq("grp"), Seq(("score", true), ("id", true)), 1)
+    val got = df.collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).sortBy(_._1).toSeq
     val want = fixture.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       .groupBy(_._2).toSeq.map { case (g, rows) =>
-        (g, rows.minBy(r => (r._3, r._1))._1)
+        (g, rows.minBy(r => (r._3, r._1))._1, 1)
       }.sortBy(_._1)
     assert(got == want)
   }
 
-  test("mirrored literal spellings (k >= rn, k > rn) rewrite to the same rows") {
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    def form(cond: org.apache.spark.sql.Column) = fixture
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("score").desc, col("id"))))
-      .filter(cond)
-    try {
-      // lit(3) >= rn  and  lit(4) > rn  both mean top-3
-      for (c <- Seq(lit(3) >= col("rn"), lit(4) > col("rn"))) {
-        val df = form(c)
-        assert(!df.queryExecution.executedPlan.toString.contains("Window"),
-          df.queryExecution.executedPlan.toString.take(2000))
-        val got = df.orderBy(col("grp"), col("rn"))
-          .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
-        val want = windowed(3).orderBy(col("grp"), col("rn"))
-          .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
-        assert(got == want)
-      }
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
-  }
-
-  test("guards: rank(), multi-window-expr, and global windows stay windows") {
-    graft.functions.GraftFunctions.register(spark)
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    // rank() admits ties past k — must NOT rewrite
-    val ranked = fixture.withColumn("rk", rank().over(
-        Window.partitionBy(col("grp")).orderBy(col("score"))))
-      .filter(col("rk") <= 3)
-    assert(ranked.queryExecution.executedPlan.toString.contains("Window"))
-    // a second window expression rides the same Window node — must not fire
-    val multi = fixture
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("score"), col("id"))))
-      .withColumn("mx", max(col("score")).over(Window.partitionBy(col("grp"))))
-      .filter(col("rn") <= 3)
-    assert(multi.collect().length ===
-      multi.select(col("grp")).collect().length) // executes fine either way
-    // nulls in the sort key follow the window's null ordering
+  test("topKPerGroup null sort keys: asc puts nulls first, desc puts nulls last") {
     val withNulls = Seq((1L, "a", Some(1.0)), (2L, "a", None), (3L, "a", Some(2.0)),
-      (4L, "b", None), (5L, "b", None))
+      (4L, "b", None), (5L, "b", None), (6L, "b", Some(0.5)))
       .toDF("id", "grp", "score")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("score").asc_nulls_last, col("id"))))
-      .filter(col("rn") <= 2)
-    assert(!withNulls.queryExecution.executedPlan.toString.contains("Window"))
-    val rows = withNulls.collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSet
-    assert(rows == Set(("a", 1L, 1), ("a", 3L, 2), ("b", 4L, 1), ("b", 5L, 2)))
-    spark.conf.set("spark.graft.topk.rewrite", "false")
+    def top2(asc: Boolean) =
+      topKPerGroup(withNulls, Seq("grp"), Seq(("score", asc), ("id", true)), 2)
+        .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSet
+    assert(top2(asc = true) == Set(("a", 2L, 1), ("a", 1L, 2), ("b", 4L, 1), ("b", 5L, 2)))
+    assert(top2(asc = false) == Set(("a", 3L, 1), ("a", 1L, 2), ("b", 6L, 1), ("b", 4L, 2)))
   }
 
   test("operator form builds the heap plan directly, no conf, no window") {
-    spark.conf.set("spark.graft.topk.rewrite", "false") // prove it's conf-free
-    val df = graft.plans.TopKPerGroup.topKPerGroup(
-      fixture, Seq("grp"), Seq(("score", false), ("id", true)), 3)
+    val df = topKPerGroup(fixture, Seq("grp"), Seq(("score", false), ("id", true)), 3)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Window") && !p.contains("Sort ["), p.take(2000))
     assert(p.contains("graft_top_k_rows"), p.take(2000))
-    val got = df.orderBy(col("grp"), col("rn"))
-      .collect().map(r => (r.getString(1), r.getLong(0), r.getInt(3))).toSeq
-    val want = fixture.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .groupBy(_._2).toSeq.flatMap { case (g, rows) =>
-        rows.sortBy(r => (-r._3, r._1)).take(3).zipWithIndex
-          .map { case (r, i) => (g, r._1, i + 1) }
-      }.sortBy(r => (r._1, r._3))
-    assert(got == want)
+    // partial aggregation happens below the shuffle: the aggregate appears
+    // twice (partial + final) around one exchange
+    assert("graft_top_k_rows".r.findAllIn(p).length >= 2,
+      s"expected map-side partial top-k:\n${p.take(2000)}")
   }
 }
