@@ -74,10 +74,12 @@ final class PipelineTasks(engine: QueryEngine, ledger: () => DataFrame) {
       dateStr: String): TaskResult[Seq[Map[String, String]]] =
     traced("FIND_OVERLAPPING_QUERY_WINDOWS",
         "pipeline" -> pipelineName, "index" -> indexName, "date" -> dateStr) {
-      OverlapOps.findOverlappingQueryWindows(ledger(), pipelineName, indexName, dateStr)
-        .orderBy("source_window_start_ts", "source_window_end_ts",
-          "overlaps_with_start_ts", "overlaps_with_end_ts")
-        .collect().toIndexedSeq.map(StatusOps.rowAsIsoMap)
+      StatusOps.sortedRows(
+        OverlapOps.findOverlappingQueryWindows(ledger(), pipelineName, indexName, dateStr)
+          .collect(),
+        "source_window_start_ts", "source_window_end_ts",
+        "overlaps_with_start_ts", "overlaps_with_end_ts")
+        .map(StatusOps.rowAsIsoMap)
     }
 
   def findOverlappingRecordsForInput(pipelineName: String, indexName: String,
@@ -85,8 +87,10 @@ final class PipelineTasks(engine: QueryEngine, ledger: () => DataFrame) {
     traced("CHECK_OVERLAP_FOR_INPUT",
         "pipeline" -> pipelineName, "index" -> indexName,
         "window" -> s"[$startTsIso, $endTsIso)") {
-      OverlapOps.findOverlappingRecordsForInput(
-        ledger(), pipelineName, indexName, startTsIso, endTsIso).orderBy("record_id")
-        .collect().toIndexedSeq.map(StatusOps.rowAsIsoMap)
+      StatusOps.sortedRows(
+        OverlapOps.findOverlappingRecordsForInput(
+          ledger(), pipelineName, indexName, startTsIso, endTsIso).collect(),
+        "record_id")
+        .map(StatusOps.rowAsIsoMap)
     }
 }

@@ -275,7 +275,11 @@ final class QueryEngine(val spark: SparkSession) {
 
   /** Resolve the DML target to a filesystem path (plus its declared
     * partition columns for catalog tables), run the rewrite, and refresh
-    * cached file listings + partition metadata afterwards. */
+    * cached file listings afterwards. Partition metadata is recovered only
+    * after a whole-table rewrite, whose re-rendered directory names may
+    * differ from the catalog's: the day-partition swap keeps every
+    * directory name and adds no partition value, and recovery costs a job
+    * that gathers stats for every partition. */
   private def runRewriteDml(target0: String, database: Option[String])(
       rewrite: (String, Seq[String]) => Long): Long = {
     val target = target0.trim
@@ -292,7 +296,9 @@ final class QueryEngine(val spark: SparkSession) {
           val meta = spark.sessionState.catalog.getTableMetadata(ti)
           val n = rewrite(meta.location.toString, meta.partitionColumnNames)
           spark.catalog.refreshTable(target)
-          if (meta.partitionColumnNames.nonEmpty) spark.catalog.recoverPartitions(target)
+          if (meta.partitionColumnNames.nonEmpty &&
+              !graft.sources.LedgerTables.swapsDayPartitions(meta.partitionColumnNames))
+            spark.catalog.recoverPartitions(target)
           n
         } finally prev.foreach(spark.catalog.setCurrentDatabase)
     }

@@ -22,14 +22,22 @@ object ContinuityOps {
    * pipeline+index+day before the shuffle. For multi-slice scans at scale use
    * [[discontinuitiesAll]], which partitions the window by the slice keys and
    * keeps the computation fully distributed.
+   *
+   * The slice also tests `query_window_start_day = D`, which the ledger
+   * invariant `query_window_start_day = to_date(query_window_start_ts)`
+   * makes redundant for the rows — but it is the test partition pruning can
+   * use, so only day D's partition is scanned. The exact `to_date` test
+   * stays, so the slice is the same set of rows.
    */
   def discontinuities(
       ledger: DataFrame,
       pipelineName: String,
       indexName: String,
       dateStr: String): DataFrame = {
+    val day = java.time.LocalDate.parse(dateStr)
     val slice = ledger.filter(
-      to_date(col("query_window_start_ts")) === lit(java.sql.Date.valueOf(dateStr)) &&
+      col("query_window_start_day") === lit(day) &&
+      to_date(col("query_window_start_ts")) === lit(day) &&
       col("pipeline_name") === pipelineName &&
       col("index_name") === indexName)
     val w = Window.orderBy(col("query_window_start_ts"), col("record_id"))

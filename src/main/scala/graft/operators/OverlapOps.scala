@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
  *  - the self-join hides pairs with identical `query_window_start_ts`
  *    (`t1.start != t2.start`, `snowflake_tasks.py:548`) — a semantic quirk we
  *    keep.
+ *
+ * Window bounds are wall-clock `LocalDateTime` literals (TIMESTAMP_NTZ),
+ * read in the SESSION time zone like the SQL text `TIMESTAMP '…'`: Spark
+ * casts them under the session zone against a TIMESTAMP column and compares
+ * them as-is against a TIMESTAMP_NTZ one. `java.sql.Timestamp.valueOf`
+ * would read them in the JVM's default zone and shift every window by the
+ * difference.
  */
 object OverlapOps {
 
@@ -41,39 +48,46 @@ object OverlapOps {
       catch { case e: java.time.format.DateTimeParseException =>
         throw new IllegalArgumentException(s"invalid ISO-8601 window: $startTsIso .. $endTsIso", e)
       }
-    val startDay = java.sql.Date.valueOf(startTs.toLocalDate)
-    val endDay = java.sql.Date.valueOf(endTs.toLocalDate)
     ledger
       // coarse day band (partition-prunable)
-      .filter(col("query_window_start_day") <= lit(endDay) &&
-              col("query_window_end_day") >= lit(startDay))
+      .filter(col("query_window_start_day") <= lit(endTs.toLocalDate) &&
+              col("query_window_end_day") >= lit(startTs.toLocalDate))
       .filter(col("pipeline_name") === pipelineName && col("index_name") === indexName)
       // exact half-open interval intersection
-      .filter(col("query_window_start_ts") < lit(java.sql.Timestamp.valueOf(endTs)) &&
-              col("query_window_end_ts") > lit(java.sql.Timestamp.valueOf(startTs)))
+      .filter(col("query_window_start_ts") < lit(endTs) &&
+              col("query_window_end_ts") > lit(startTs))
   }
 
-  /** Day-sliced CTE input of the self-join (reference `snowflake_tasks.py:531-538`). */
+  /**
+   * Day-sliced CTE input of the self-join (reference `snowflake_tasks.py:531-538`).
+   *
+   * Relies on the ledger invariant `query_window_start_day =
+   * to_date(query_window_start_ts)` (session zone; [[graft.sources.LedgerTables]]
+   * partitions by that column and every writer derives it so): a window with
+   * `start_ts < D+1` then has `start_day <= D`, so the partition bound prunes
+   * every later day without dropping a row. The exact timestamp predicates
+   * stay, so the slice is the same set of rows.
+   */
   private def daySlice(ledger: DataFrame, pipelineName: String, indexName: String,
-      day: LocalDate): DataFrame = {
-    val dayStart = java.sql.Timestamp.valueOf(day.atStartOfDay)
-    val nextDay = java.sql.Timestamp.valueOf(day.plusDays(1).atStartOfDay)
+      day: LocalDate): DataFrame =
     ledger.filter(
+      col("query_window_start_day") <= lit(day) &&
       col("pipeline_name") === pipelineName &&
       col("index_name") === indexName &&
-      col("query_window_start_ts") < lit(nextDay) &&
-      col("query_window_end_ts") > lit(dayStart))
-  }
+      col("query_window_start_ts") < lit(day.plusDays(1).atStartOfDay) &&
+      col("query_window_end_ts") > lit(day.atStartOfDay))
 
   /**
    * R6: interval-overlap self theta-join over a one-day slice
    * (reference `snowflake_tasks.py:530-550`).
    *
-   * Pure inequality join (no equi-key) → Spark plans BroadcastNestedLoopJoin.
-   * That is the *correct* physical choice here: the CTE pre-filter (one
-   * pipeline, one index, one day) makes the build side small no matter how big
-   * the ledger is, and the day slice is partition-pruned before the join. For
-   * wide slices use [[overlappingWindowsBanded]].
+   * Pure inequality join (no equi-key), planned as a BroadcastNestedLoopJoin
+   * with the slice broadcast explicitly: the CTE pre-filter (one pipeline,
+   * one index, one day) bounds the build side no matter how big the ledger
+   * is, but the planner cannot see that bound — a catalog ledger without
+   * statistics is sized at `spark.sql.defaultSizeInBytes`, and the unhinted
+   * join plans a CartesianProduct of two full scans. For wide slices use
+   * [[overlappingWindowsBanded]].
    */
   def findOverlappingQueryWindows(
       ledger: DataFrame,
@@ -89,7 +103,7 @@ object OverlapOps {
       col("query_window_start_ts").as("s1"), col("query_window_end_ts").as("e1"))
     val t2 = f.select(
       col("query_window_start_ts").as("s2"), col("query_window_end_ts").as("e2"))
-    t1.join(t2,
+    t1.join(broadcast(t2),
         col("s1") < col("e2") && col("e1") > col("s2") && col("s1") =!= col("s2"))
       .select(
         col("s1").as("source_window_start_ts"),

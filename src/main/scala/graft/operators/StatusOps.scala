@@ -68,6 +68,34 @@ object StatusOps {
     row.schema.fieldNames.iterator.zipWithIndex
       .map { case (name, i) => name -> isoString(row.get(i)) }.toMap
 
+  /** Collected rows in ascending order of `cols`, nulls first: the order
+    * `DataFrame.orderBy(cols)` gives, without the sampling job and range
+    * shuffle of a global sort, for results the caller collects anyway.
+    * Values compare raw — TIMESTAMP (`java.sql.Timestamp` to the
+    * microsecond, or `Instant` under the Java 8 datetime API),
+    * TIMESTAMP_NTZ (`LocalDateTime`) and BIGINT (`Long`) —
+    * never by their [[isoString]] forms, which put `10:00:00.5Z` before
+    * `10:00:00Z`. */
+  def sortedRows(rows: Array[Row], cols: String*): IndexedSeq[Row] =
+    rows.headOption.fold(IndexedSeq.empty[Row]) { first =>
+      val idx = cols.map(first.fieldIndex)
+      val byCols: Ordering[Row] = (a, b) =>
+        idx.iterator.map(i => compareRaw(a.get(i), b.get(i))).find(_ != 0).getOrElse(0)
+      rows.toIndexedSeq.sorted(byCols)
+    }
+
+  private def compareRaw(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
+    case (x: java.time.Instant, y: java.time.Instant) => x.compareTo(y)
+    case (x: java.time.LocalDateTime, y: java.time.LocalDateTime) => x.compareTo(y)
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case _ => throw new IllegalArgumentException(
+      s"cannot order ${a.getClass.getName} against ${b.getClass.getName}")
+  }
+
   /** A collected value in the reference's ISO-8601 form
     * (`snowflake_tasks.py:213-216`). TIMESTAMP and TIMESTAMP_NTZ columns
     * render alike: an NTZ value is read in UTC, the session zone. An

@@ -106,6 +106,13 @@ object LedgerTables {
         pred, org.apache.spark.sql.functions.lit(false)))
     }
 
+  /** Whether a rewrite of a table with these partition columns takes the
+    * day-partition swap: it rewrites only existing `query_window_start_day`
+    * directories, under the names Spark itself gives them, and never adds
+    * a partition value. */
+  private[graft] def swapsDayPartitions(partitionCols: Seq[String]): Boolean =
+    partitionCols == Seq("query_window_start_day")
+
   /** The table's partition columns: the caller-declared ones, else the
     * ledger's day column if present, else none. */
   private def effectivePartitionCols(
@@ -151,15 +158,16 @@ object LedgerTables {
       // The day-partition swap fast path applies only to the ledger layout
       // (DateType values render exactly as the partition directory names);
       // any other layout takes the whole-table rewrite, which preserves it.
-      if (parts != Seq("query_window_start_day"))
+      if (!swapsDayPartitions(parts))
         rewriteWholeTable(spark, path, ledger, matched, predicate, parts)(transform)
       else {
-        // Affected partition values: a day-count-sized driver list, never data.
-        val days = matched.select(col("query_window_start_day")).distinct()
-          .collect().map(_.get(0).toString)
+        // Affected partition values and their row counts in ONE query: a
+        // day-count-sized driver list, never data.
+        val perDay = matched.groupBy(col("query_window_start_day")).count().collect()
+        val days = perDay.map(_.get(0).toString)
         if (days.isEmpty) 0L
         else {
-          val affected = matched.count()
+          val affected = perDay.map(_.getLong(1)).sum
           // The file set this rewrite transforms (the read's cached file
           // index) — anything found later in a displaced tree that is NOT
           // in this set arrived from a concurrent appender and must be

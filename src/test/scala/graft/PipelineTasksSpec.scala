@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.api.PipelineTasks
 import graft.engine.QueryEngine
+import graft.operators.{OverlapOps, StatusOps}
 
 /** Reference-parity task API: result contracts of `snowflake_tasks.py`. */
 class PipelineTasksSpec extends SparkSpec {
@@ -48,11 +50,17 @@ class PipelineTasksSpec extends SparkSpec {
   }
 
   test("timestamp_ntz windows shape exactly like TIMESTAMP windows in every verb") {
+    // sub-second and equal-start windows: 11:40:00.5 sorts after 11:40:00
+    // by value, but its ISO string ("…00.500Z") sorts before "…00Z"
+    val ledger = fixture.unionByName(ledgerOf(
+      (5L, "p", "i", day(11, 40) + ".5", day(11, 50), "completed"),
+      (6L, "p", "i", day(11, 40), day(11, 45), "completed"),
+      (7L, "p", "i", day(11, 40), day(11, 55), "completed")))
     // the fixture view Tables.pipelineRuns reads its windows as
     // timestamp_ntz (events.parquet is not UTC-adjusted)
     val ntz = Seq("query_window_start_ts", "query_window_end_ts")
-      .foldLeft(fixture)((df, c) => df.withColumn(c, col(c).cast("timestamp_ntz")))
-    val ntzTasks = new PipelineTasks(new QueryEngine(spark), () => ntz)
+      .foldLeft(ledger)((df, c) => df.withColumn(c, col(c).cast("timestamp_ntz")))
+    def tasksOver(df: DataFrame) = new PipelineTasks(new QueryEngine(spark), () => df)
     def shapes(t: PipelineTasks) = (
       t.getOldestRecordByStatus("pending").value,
       t.getLatestRecordByStatus("completed").value,
@@ -60,9 +68,44 @@ class PipelineTasksSpec extends SparkSpec {
       t.findOverlappingQueryWindows("p", "i", "2024-01-15").value,
       t.findOverlappingRecordsForInput(
         "p", "i", "2024-01-15 08:30:00", "2024-01-15 12:30:00").value)
-    val expected = shapes(tasks)
+    val expected = shapes(tasksOver(ledger))
     assert(expected._3._2.nonEmpty && expected._4.nonEmpty) // gaps and pairs reached
-    assert(shapes(ntzTasks) == expected)
+    assert(shapes(tasksOver(ntz)) == expected)
+    // the Java 8 datetime API collects TIMESTAMP as Instant: same shapes
+    spark.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    try assert(shapes(tasksOver(ledger)) == expected)
+    finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+    // both overlap verbs return rows in the DataFrame orderBy's order
+    for (df <- Seq(ledger, ntz)) {
+      val got = shapes(tasksOver(df))
+      def ordered(q: DataFrame, by: String*) =
+        q.orderBy(by.map(col): _*).collect().toSeq.map(StatusOps.rowAsIsoMap)
+      assert(got._4 == ordered(OverlapOps.findOverlappingQueryWindows(df, "p", "i", "2024-01-15"),
+        "source_window_start_ts", "source_window_end_ts",
+        "overlaps_with_start_ts", "overlaps_with_end_ts"))
+      assert(got._5 == ordered(OverlapOps.findOverlappingRecordsForInput(
+        df, "p", "i", "2024-01-15 08:30:00", "2024-01-15 12:30:00"), "record_id"))
+    }
+    assert(expected._4.map(_("source_window_start_ts")).containsSlice(Seq(
+      "2024-01-15T11:40:00Z", "2024-01-15T11:40:00Z", "2024-01-15T11:40:00.500Z")))
+  }
+
+  test("overlap verbs read window bounds in the session time zone, not the JVM's") {
+    // two windows between 01:00 and 02:30 UTC; read as Los Angeles wall
+    // clock the day and input bounds would move 8 h later and miss both
+    val early = ledgerOf(
+      (1L, "p", "i", day(1), day(2), "completed"),
+      (2L, "p", "i", day(1, 30), day(2, 30), "completed"))
+    val t = new PipelineTasks(new QueryEngine(spark), () => early)
+    val jvmZone = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+    try {
+      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(t.findOverlappingQueryWindows("p", "i", "2024-01-15").value.length == 2)
+      assert(t.findOverlappingRecordsForInput(
+        "p", "i", "2024-01-15 01:00:00", "2024-01-15 02:30:00")
+        .value.map(_("record_id")) == Seq("1", "2"))
+    } finally java.util.TimeZone.setDefault(jvmZone)
   }
 
   test("createTableIfNotExists is idempotent") {

@@ -609,6 +609,47 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("ledger verbs on a catalog ledger: broadcast overlap slice, day-pruned scans") {
+    // A DDL'd ledger has no statistics, so the planner sizes it at
+    // defaultSizeInBytes — unlike ledgerOf's LocalRelation, whose exact
+    // size let any join broadcast. The self-join must broadcast its slice
+    // anyway, and every ledger scan must prune by day partition.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import graft.operators.{ContinuityOps, OverlapOps}
+    object Aqe extends AdaptiveSparkPlanHelper
+    val rows = ledgerOf(
+      (1L, "p", "i", "2024-01-14 23:30:00", "2024-01-15 00:30:00", "completed"),
+      (2L, "p", "i", "2024-01-15 00:15:00", "2024-01-15 01:00:00", "completed"),
+      (3L, "p", "i", "2024-01-15 02:00:00", "2024-01-15 03:00:00", "completed"),
+      (4L, "p", "i", "2024-01-16 00:00:00", "2024-01-16 01:00:00", "pending"))
+    rows.createOrReplaceTempView("graft_plan_ledger_rows")
+    graft.sources.LedgerTables.ensure(spark, "graft_plan_ledger")
+    try {
+      val cols = rows.columns.mkString(", ")
+      spark.sql(s"INSERT INTO graft_plan_ledger ($cols) SELECT $cols FROM graft_plan_ledger_rows")
+      val ledger = spark.table("graft_plan_ledger")
+      def dayPruned(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+        Aqe.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec =>
+          s.partitionFilters.exists(_.references.exists(_.name == "query_window_start_day"))
+        }
+      val overlaps = OverlapOps.findOverlappingQueryWindows(ledger, "p", "i", "2024-01-15")
+      val exec = overlaps.queryExecution.executedPlan
+      assert(Aqe.collect(exec) { case j: BroadcastNestedLoopJoinExec => j }.nonEmpty, exec)
+      assert(Aqe.collect(exec) { case j: CartesianProductExec => j }.isEmpty, exec)
+      assert(dayPruned(overlaps) == Seq(true, true), exec)
+      val gaps = ContinuityOps.discontinuities(ledger, "p", "i", "2024-01-15")
+      assert(dayPruned(gaps) == Seq(true), gaps.queryExecution.executedPlan)
+      // same rows as over the exact-size relation
+      assert(overlaps.collect().toSet == OverlapOps.findOverlappingQueryWindows(
+        rows, "p", "i", "2024-01-15").collect().toSet)
+      assert(overlaps.count() == 2) // records 1 and 2, both directions
+      assert(gaps.collect().toSeq == ContinuityOps.discontinuities(
+        rows, "p", "i", "2024-01-15").collect().toSeq)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_plan_ledger")
+  }
+
   test("bucketed tables sort-merge-join without any exchange") {
     val docs = Tables.read(spark, d, "documents")
     val emb = Tables.read(spark, d, "embeddings").select(col("vec_id"), col("label"))

@@ -144,6 +144,62 @@ class QueryEngineSpec extends SparkSpec {
     assert(graft.sources.LedgerTables.read(spark, tmp).count() == 2L)
   }
 
+  test("SQL-text UPDATE/DELETE on a DDL'd day-partitioned ledger: one pre-scan, partitions kept") {
+    // Counts the queries that are not commands: the pre-scan that finds the
+    // affected days and rows. The staged write and any catalog command are
+    // commands and do not count.
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (!qe.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command])
+          scans.incrementAndGet()
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def preScans(dml: => Long): (Long, Int) = {
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      scans.set(0)
+      spark.listenerManager.register(listener)
+      try {
+        val n = dml
+        org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+        (n, scans.get())
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val rows = ledgerOf(
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (2L, "p", "i", "2024-01-15 11:00:00", "2024-01-15 12:00:00", "pending"),
+      (3L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "pending"),
+      (4L, "p", "i", "2024-01-16 11:00:00", "2024-01-16 12:00:00", "completed"),
+      (5L, "p", "i", "2024-01-17 10:00:00", "2024-01-17 11:00:00", "completed"))
+    rows.createOrReplaceTempView("graft_dml_cat_rows")
+    graft.sources.LedgerTables.ensure(spark, "graft_dml_cat")
+    try {
+      val cols = rows.columns.mkString(", ")
+      engine.executeDmlQuery(
+        s"INSERT INTO graft_dml_cat ($cols) SELECT $cols FROM graft_dml_cat_rows")
+      def partitions() = spark.sql("SHOW PARTITIONS graft_dml_cat").collect().map(_.getString(0)).toSeq
+      def status() = spark.table("graft_dml_cat").select("record_id", "pipeline_status")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val before = partitions()
+      assert(before.length == 3, before)
+      assert(preScans(engine.executeDmlQuery(
+        "UPDATE graft_dml_cat SET pipeline_status = 'completed' WHERE pipeline_status = :s",
+        Map("s" -> "pending")).data) == (3L, 1))
+      assert(partitions() == before)
+      assert(status() == (1L to 5L).map(_ -> "completed").toMap)
+      assert(preScans(engine.executeDmlQuery(
+        "DELETE FROM graft_dml_cat WHERE record_id IN (2, 4)").data) == (2L, 1))
+      assert(partitions() == before)
+      assert(status() == Seq(1L, 3L, 5L).map(_ -> "completed").toMap)
+      // no match: still one pre-scan, nothing rewritten
+      assert(preScans(engine.executeDmlQuery(
+        "UPDATE graft_dml_cat SET records_count = 0 WHERE record_id = 99").data) == (0L, 1))
+      assert(spark.table("graft_dml_cat").count() == 3L)
+    } finally engine.executeControlCommand("DROP TABLE IF EXISTS graft_dml_cat")
+  }
+
   test("per-call database scoping resolves in the target db and restores the session db") {
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_scoped_db")
     val before = spark.catalog.currentDatabase
