@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSession
  * the cold series is kept alongside it so launch-dominated costs stay
  * visible rather than silently discarded.
  *
- * A warm-up pass (session bring-up, parquet footers, codegen/JIT of the
- * scan+agg machinery) still runs before timing so even the cold series
- * isn't charged the fixed JVM startup cost — the bench target is per-query
+ * A warm-up pass (session bring-up, parquet footers, JIT of the scan+agg
+ * machinery) still runs before timing so even the cold series isn't
+ * charged the fixed JVM startup cost — the bench target is per-query
  * engine time, not sbt/JVM launch.
  *
  * Two round-9 integrity mechanisms, both born from the round-8 record
@@ -131,6 +131,14 @@ object Bench {
   private val ResourceKeys = Seq(
     "shuffle_read_mb", "shuffle_write_mb", "spill_disk_mb", "spill_mem_mb",
     "input_mb")
+
+  /** Generated classes Janino has compiled in this JVM so far, and their
+    * total compile nanoseconds. A rep that compiles missed Spark's class
+    * cache. Read only once a session exists: the first touch of
+    * `CodeGenerator` fixes the cache size for the JVM. */
+  private def codegenCompiles(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   /** The streaming gates: run LAST so their state-store churn
     * can't tax batch neighbors (round-8 drift cluster x69/x71–x75). */
@@ -363,7 +371,9 @@ object Bench {
     // columns required — full scan, full aggregation, full projection —
     // while discarding rows at the sink, so nothing is collected to the
     // driver (pair-census outputs at probe scale would OOM a collect()).
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
+    // Each rep also reports the Janino compiles (classes, ns) it caused,
+    // read just outside its clock.
+    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[(Double, (Long, Long))] = {
       // Deterministic cache state per query (round-11, from the round-10
       // x42 adjudication): the funnel/shingle caches are plan-keyed and
       // SHARED across queries, so a query's rep-1 cost depended on which
@@ -381,6 +391,7 @@ object Bench {
       // set their own descriptions and are unaffected.
       spark.sparkContext.setJobDescription(s"bench:$name")
       (1 to reps).map { i =>
+        val (n0, ns0) = codegenCompiles()
         val t0 = System.nanoTime()
         // A failed query must be VISIBLE: a swallowed exception records its
         // time-to-throw as if it were a measurement (a 0.1 s "steady" that
@@ -388,7 +399,7 @@ object Bench {
         // A failed rep records the -1 sentinel — its time-to-throw must not
         // leak into the cold/steady aggregates either — and the error goes
         // to stderr.
-        try {
+        val secs = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
@@ -396,6 +407,8 @@ object Bench {
           System.err.println(s"bench: $name rep $i FAILED: $e")
           -1.0
         }
+        val (n1, ns1) = codegenCompiles()
+        (secs, (n1 - n0, ns1 - ns0))
       }
     }
 
@@ -525,14 +538,22 @@ object Bench {
         "(canonical baseline deferred to the last quiet record)")
 
     // WARMUP SUITE PASS (round 13, verdict ask 5): one DISCARDED pass of
-    // every selected query before any timing. Per-query codegen compile
-    // and the engine machinery JIT during the warmup, so the recorded
-    // cold series measures a query's own cache build rather than whatever
-    // global compilation its suite position happened to absorb — the
-    // cross-boot/cross-round stability the canonical record needs. The
-    // per-rep-block clearCache below still makes rep 1 a true cold build
-    // of the query's OWN caches. Disable with SPARK_GRAFT_BENCH_WARMUP=none
-    // (the A/B tool's interleaved passes warm each other; it opts out).
+    // every selected query before any timing. The engine machinery JITs
+    // during the warmup, so the recorded cold series does not carry
+    // whatever global JIT its suite position happened to absorb — the
+    // cross-boot/cross-round stability the canonical record needs. It does
+    // NOT keep a query's generated classes for its timed reps: the suite
+    // compiles thousands of classes (driver and executor copies), far more
+    // than Spark's class cache holds (GraftSession.CodegenCacheEntries;
+    // Spark's default of 100 before), so by the time a query's reps run its
+    // warmup classes are evicted and rep 1 compiles them again. Rep 1 is
+    // therefore the query's own codegen compile plus its own cache build
+    // (the per-rep-block clearCache below); the steady reps reuse both,
+    // except where a query's generated source changes from run to run (the
+    // stream gates, AQE renumbering codegen stages). The detail record's
+    // per-rep `codegen_compiles` shows which. Disable with
+    // SPARK_GRAFT_BENCH_WARMUP=none (the A/B tool's interleaved passes warm
+    // each other; it opts out).
     val warmupMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "suite")
     val warmupS: Double =
       if (warmupMode == "suite" && selected.nonEmpty) {
@@ -554,14 +575,16 @@ object Bench {
     val tally = new ResourceTally
     spark.sparkContext.addSparkListener(tally)
     val resources = scala.collection.mutable.Map.empty[String, Seq[Long]]
+    val compiles = scala.collection.mutable.Map.empty[String, Seq[(Long, Long)]]
     def measureTallied(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
       tally.settle()
       val before = tally.snapshot()
       tally.resetPeak()
-      val times = measure(name, fn)
+      val measured = measure(name, fn)
       tally.settle()
       resources(name) = tally.snapshot().zip(before).map { case (a, b) => a - b } :+ tally.peak()
-      times
+      compiles(name) = measured.map(_._2)
+      measured.map(_._1)
     }
 
     // Batch first, stream gates last (sorted within each block).
@@ -589,7 +612,7 @@ object Bench {
           suspects.mkString(", "))
         System.gc(); Thread.sleep(500)
         suspects.map { name =>
-          val second = measure(name, fnByName(name))
+          val second = measure(name, fnByName(name)).map(_._1)
           name -> (firstPass.find(_._1 == name).get._2, second)
         }.toMap
       }
@@ -631,9 +654,11 @@ object Bench {
     // -Xmx24g driver must record 24.0, not 25.8 decimal GB; round-14
     // ADVICE).
     val heapGb = tenths(Runtime.getRuntime.maxMemory / (1L << 30).toDouble)
-    val notes = "one discarded warmup suite pass before timing (cold = the " +
-      "query's own cache build, not suite-position codegen; disable with " +
-      "SPARK_GRAFT_BENCH_WARMUP=none); floor = boot-relative host probes " +
+    val notes = "one discarded warmup suite pass before timing (JIT only: " +
+      "the suite's generated classes exceed Spark's class cache, so cold = " +
+      "the query's own codegen compile and cache build, see codegen_compiles " +
+      "per rep; disable with SPARK_GRAFT_BENCH_WARMUP=none); floor = " +
+      "boot-relative host probes " +
       "(cpu chain / 64MB fsync IO / fixed Spark job, ms) for cross-boot " +
       "comparison; steady=min of warm reps (regression gauge), cold=first " +
       "timed run; stream gates run as the suite " +
@@ -679,7 +704,11 @@ object Bench {
         // peak execution memory — the cross-fixture scale signals.
         resources.get(n).map(c => "resources" -> VectorMap(
           (ResourceKeys.zip(c) :+ ("peak_task_mem_mb" -> c.last))
-            .map { case (k, v) => k -> tenths(v / 1e6) }: _*))): _*)
+            .map { case (k, v) => k -> tenths(v / 1e6) }: _*)) ++
+        // Janino compiles per rep of the same block: classes the rep did
+        // not find in Spark's class cache, and their compile time.
+        compiles.get(n).toSeq.flatMap(c => Seq("codegen_compiles" -> c.map(_._1),
+          "codegen_ms" -> c.map(x => tenths(x._2 / 1e6))))): _*)
     }: _*)
     val full = Json.pretty(VectorMap(header ++ runFields ++
       Seq("notes" -> notes, "queries" -> queries): _*)) + "\n"

@@ -234,13 +234,32 @@ object GraftExtensions {
  * executor parallelism, so the cluster config / AQE own that knob; only
  * [[local]] (single JVM, threads == cores) sizes it to the thread count.
  * Every main and test session in the repo comes from here.
+ *
+ * [[builder]] also sizes Spark's generated-class cache
+ * (`spark.sql.codegen.cache.maxEntries`, static, default 100) to
+ * [[CodegenCacheEntries]]. The cache maps (context classloader, source) to
+ * the compiled class, so in local mode the driver's compile check and the
+ * executor's task threads each hold their own entry for one class. One
+ * curation pass (x81, x79, x72, x4) needs about 160 entries: at 100 every
+ * steady pass evicted and recompiled about 150 classes with Janino, and
+ * each recompiled class paid interpretation and C1/C2 again. 1000 holds
+ * that pass and the ledger verbs' per-tick classes several times over.
+ * An entry averages 2.5 generated classes of 2.6 KB bytecode (158 entries,
+ * 388 classes in a curation pass), so a full cache holds about 6 MB of
+ * bytecode. The conf is static and `CodeGenerator` reads it once, when the
+ * JVM first generates code, so it is set here, before any session exists;
+ * a caller can still override it on the builder.
  */
 object GraftSession {
+  /** Generated classes Spark keeps compiled (see the object doc). */
+  val CodegenCacheEntries = 1000
+
   def builder(): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Local thread count: `SPARK_GRAFT_CPUS` when set, else the host's cores. */
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
