@@ -543,7 +543,7 @@ object Bench {
     // whatever global JIT its suite position happened to absorb — the
     // cross-boot/cross-round stability the canonical record needs. It does
     // NOT keep a query's generated classes for its timed reps: the suite
-    // compiles thousands of classes (driver and executor copies), far more
+    // compiles thousands of classes (planning and executor copies), far more
     // than Spark's class cache holds (GraftSession.CodegenCacheEntries;
     // Spark's default of 100 before), so by the time a query's reps run its
     // warmup classes are evicted and rep 1 compiles them again. Rep 1 is

@@ -238,9 +238,9 @@ object GraftExtensions {
  * [[builder]] also sizes Spark's generated-class cache
  * (`spark.sql.codegen.cache.maxEntries`, static, default 100) to
  * [[CodegenCacheEntries]]. The cache maps (context classloader, source) to
- * the compiled class, so in local mode the driver's compile check and the
- * executor's task threads each hold their own entry for one class. One
- * curation pass (x81, x79, x72, x4) needs about 160 entries: at 100 every
+ * the compiled class, so in local mode the compile check made at planning
+ * time and the executor's task threads each hold their own entry for one
+ * class. One curation pass (x81, x79, x72, x4) needs about 160 entries: at 100 every
  * steady pass evicted and recompiled about 150 classes with Janino, and
  * each recompiled class paid interpretation and C1/C2 again. 1000 holds
  * that pass and the ledger verbs' per-tick classes several times over.

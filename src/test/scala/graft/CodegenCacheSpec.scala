@@ -5,10 +5,10 @@ import org.apache.spark.metrics.source.CodegenMetrics
 /** A warm session compiles no generated class twice: a second pass of the
   * curation family queries must be served entirely from Spark's class cache
   * (`GraftSession.CodegenCacheEntries`). With Spark's default of 100 entries
-  * the pass's driver and executor copies do not fit, and every steady pass
+  * the pass's planning and executor copies do not fit, and every steady pass
   * recompiled most of its classes with Janino. */
 class CodegenCacheSpec extends SparkSpec {
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = sys.env.getOrElse("SPARK_GRAFT_SMOKE_SF_DIR", "/root/testdata/sf0.001")
   private val curation = Seq(
     "x81_nb_quality", "x79_bigram_lm", "x72_bpe_numericalize", "x4_embed_neardup")
 
