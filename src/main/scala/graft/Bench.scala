@@ -140,6 +140,10 @@ object Bench {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
+  /** One timed rep: its seconds (-1 when it failed) and the Janino compiles
+    * it caused, read just outside its clock. */
+  private final case class Rep(secs: Double, compiles: Long, compileNs: Long)
+
   /** The streaming gates: run LAST so their state-store churn
     * can't tax batch neighbors (round-8 drift cluster x69/x71–x75). */
   private val StreamTail = Set(
@@ -371,9 +375,7 @@ object Bench {
     // columns required — full scan, full aggregation, full projection —
     // while discarding rows at the sink, so nothing is collected to the
     // driver (pair-census outputs at probe scale would OOM a collect()).
-    // Each rep also reports the Janino compiles (classes, ns) it caused,
-    // read just outside its clock.
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[(Double, (Long, Long))] = {
+    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Rep] = {
       // Deterministic cache state per query (round-11, from the round-10
       // x42 adjudication): the funnel/shingle caches are plan-keyed and
       // SHARED across queries, so a query's rep-1 cost depended on which
@@ -408,7 +410,7 @@ object Bench {
           -1.0
         }
         val (n1, ns1) = codegenCompiles()
-        (secs, (n1 - n0, ns1 - ns0))
+        Rep(secs, n1 - n0, ns1 - ns0)
       }
     }
 
@@ -544,9 +546,9 @@ object Bench {
     // cross-boot/cross-round stability the canonical record needs. It does
     // NOT keep a query's generated classes for its timed reps: the suite
     // compiles thousands of classes (planning and executor copies), far more
-    // than Spark's class cache holds (GraftSession.CodegenCacheEntries;
-    // Spark's default of 100 before), so by the time a query's reps run its
-    // warmup classes are evicted and rep 1 compiles them again. Rep 1 is
+    // than Spark's class cache holds (GraftSession.CodegenCacheEntries), so
+    // by the time a query's reps run its warmup classes are evicted and
+    // rep 1 compiles them again. Rep 1 is
     // therefore the query's own codegen compile plus its own cache build
     // (the per-rep-block clearCache below); the steady reps reuse both,
     // except where a query's generated source changes from run to run (the
@@ -575,7 +577,7 @@ object Bench {
     val tally = new ResourceTally
     spark.sparkContext.addSparkListener(tally)
     val resources = scala.collection.mutable.Map.empty[String, Seq[Long]]
-    val compiles = scala.collection.mutable.Map.empty[String, Seq[(Long, Long)]]
+    val compiles = scala.collection.mutable.Map.empty[String, Seq[Rep]]
     def measureTallied(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] = {
       tally.settle()
       val before = tally.snapshot()
@@ -583,8 +585,8 @@ object Bench {
       val measured = measure(name, fn)
       tally.settle()
       resources(name) = tally.snapshot().zip(before).map { case (a, b) => a - b } :+ tally.peak()
-      compiles(name) = measured.map(_._2)
-      measured.map(_._1)
+      compiles(name) = measured
+      measured.map(_.secs)
     }
 
     // Batch first, stream gates last (sorted within each block).
@@ -612,7 +614,7 @@ object Bench {
           suspects.mkString(", "))
         System.gc(); Thread.sleep(500)
         suspects.map { name =>
-          val second = measure(name, fnByName(name)).map(_._1)
+          val second = measure(name, fnByName(name)).map(_.secs)
           name -> (firstPass.find(_._1 == name).get._2, second)
         }.toMap
       }
@@ -707,8 +709,8 @@ object Bench {
             .map { case (k, v) => k -> tenths(v / 1e6) }: _*)) ++
         // Janino compiles per rep of the same block: classes the rep did
         // not find in Spark's class cache, and their compile time.
-        compiles.get(n).toSeq.flatMap(c => Seq("codegen_compiles" -> c.map(_._1),
-          "codegen_ms" -> c.map(x => tenths(x._2 / 1e6))))): _*)
+        compiles.get(n).toSeq.flatMap(c => Seq("codegen_compiles" -> c.map(_.compiles),
+          "codegen_ms" -> c.map(r => tenths(r.compileNs / 1e6))))): _*)
     }: _*)
     val full = Json.pretty(VectorMap(header ++ runFields ++
       Seq("notes" -> notes, "queries" -> queries): _*)) + "\n"
