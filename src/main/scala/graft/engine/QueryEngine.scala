@@ -2,7 +2,17 @@ package graft.engine
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.analysis.{NamedParameter, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, UpdateTable}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.sources.LedgerTables
 
 /**
  * Execution-client facade — the Spark re-expression of the reference's five
@@ -23,7 +33,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  * Named parameter binding (`%(name)s` in the reference, e.g.
  * `overlap_checks.py:52-55`) maps to Spark named parameterized SQL
  * (`spark.sql(text, args)`), which also closes the reference's SQL-injection
- * defect (`snowflake_tasks.py:525-537` interpolates a raw string).
+ * defect (`snowflake_tasks.py:525-537` interpolates a raw string). UPDATE
+ * and DELETE bind the same way: each `:name` becomes the literal
+ * `spark.sql(text, args)` binds, never SQL text.
  */
 final class QueryEngine(val spark: SparkSession) {
 
@@ -37,16 +49,19 @@ final class QueryEngine(val spark: SparkSession) {
     finally spark.sparkContext.clearJobGroup()
   }
 
-  private def run(sql: String, params: Map[String, Any], database: Option[String]): DataFrame = {
-    // Per-call `USE DATABASE/SCHEMA` scoping (reference verb V7). Name
-    // resolution happens eagerly inside spark.sql (analysis), so the
-    // previous database can be restored immediately after — the scope really
-    // is per-call, it does not leak into subsequent calls.
+  /** Per-call `USE DATABASE/SCHEMA` scoping (reference verb V7). Name
+    * resolution happens eagerly inside the body (analysis), so the previous
+    * database can be restored immediately after — the scope really is
+    * per-call, it does not leak into subsequent calls. */
+  private def inDatabase[T](database: Option[String])(body: => T): T = {
     val prev = database.map(_ => spark.catalog.currentDatabase)
-    database.foreach(db => spark.catalog.setCurrentDatabase(db))
-    try if (params.isEmpty) spark.sql(sql) else spark.sql(sql, params)
+    database.foreach(spark.catalog.setCurrentDatabase)
+    try body
     finally prev.foreach(spark.catalog.setCurrentDatabase)
   }
+
+  private def run(sql: String, params: Map[String, Any], database: Option[String]): DataFrame =
+    inDatabase(database) { if (params.isEmpty) spark.sql(sql) else spark.sql(sql, params) }
 
   /** V1: run SQL, return the single scalar of the first row (or None if empty). */
   def executeScalarQuery(
@@ -80,35 +95,24 @@ final class QueryEngine(val spark: SparkSession) {
    *    the affected count is the write command's `numOutputRows` SQL metric
    *    (commands execute eagerly inside `spark.sql`, so the metric is read
    *    synchronously off the executed command plan — SURVEY.md §4.3).
-   *  - UPDATE / DELETE text is intercepted and dispatched to the
+   *  - UPDATE / DELETE are parsed by Spark's SQL parser and dispatched to the
    *    partition-rewrite implementations ([[graft.sources.LedgerTables]]),
    *    because plain parquet cannot execute `spark.sql("UPDATE …")`. The
    *    target may be a catalog table (its location is resolved and, after
-   *    the rewrite, the table is refreshed) or a `parquet.`/path``-style /
-   *    direct path. Named parameters (`:name`) are bound as SQL literals.
+   *    the rewrite, the table is refreshed), `parquet.`path`` or one
+   *    backquoted absolute path; a table alias is rejected. Named
+   *    parameters (`:name`) bind to the literals `spark.sql(text, args)` binds.
    */
   def executeDmlQuery(
       sql: String,
       params: Map[String, Any] = Map.empty,
       database: Option[String] = None): EngineResult[Long] =
     withQueryId(s"dml: ${sql.take(120)}") {
-      sql match {
-        case UpdateRe(rest) =>
-          val (beforeWhere, whereOpt) = splitAtKeyword(stripTrailing(rest), "WHERE")
-          val (target, setOpt) = splitAtKeyword(beforeWhere, "SET")
-          require(setOpt.nonEmpty, s"malformed UPDATE (no SET clause): $sql")
-          runRewriteDml(target, database) { (path, parts) =>
-            graft.sources.LedgerTables.updateWhere(spark, path,
-              predicateOf(whereOpt, params),
-              splitTopLevel(setOpt.get).map(assignmentOf(_, params)),
-              parts)
-          }
-        case DeleteRe(rest) =>
-          val (target, whereOpt) = splitAtKeyword(stripTrailing(rest), "WHERE")
-          runRewriteDml(target, database) { (path, parts) =>
-            graft.sources.LedgerTables.deleteWhere(spark, path,
-              predicateOf(whereOpt, params), parts)
-          }
+      // Spark substitutes some parameter markers (`DECIMAL(:p, 2)`) before it
+      // parses, so a statement only `spark.sql(text, args)` reads goes there.
+      Try(spark.sessionState.sqlParser.parsePlan(sql)).toOption match {
+        case Some(dml @ (_: UpdateTable | _: DeleteFromTable)) =>
+          rewriteDml(bind(dml, params), database)
         case _ =>
           val df = run(sql, params, database)
           df.collect()
@@ -124,153 +128,32 @@ final class QueryEngine(val spark: SparkSession) {
       }
     }
 
-  // ---- SQL-text UPDATE/DELETE dispatch --------------------------------
-  // Supported surface (the reference's DML call sites are single-table,
-  // single-predicate statements): `UPDATE <target> SET c = e[, …] [WHERE p]`
-  // and `DELETE FROM <target> [WHERE p]`. Keyword detection is a top-level
-  // scan (outside parentheses, '...' strings, and `...` quoting), so WHERE
-  // inside a SET subquery or a quoted string does not mis-split.
-
-  private val UpdateRe = "(?is)^\\s*UPDATE\\s+(.+)$".r
-  private val DeleteRe = "(?is)^\\s*DELETE\\s+FROM\\s+(.+)$".r
-
-  private def stripTrailing(s: String): String =
-    s.trim.stripSuffix(";").trim
-
-  private def predicateOf(whereOpt: Option[String], params: Map[String, Any]) =
-    whereOpt match {
-      case Some(p) => org.apache.spark.sql.functions.expr(bindParams(p, params))
-      case None => org.apache.spark.sql.functions.lit(true)
+  /** The one `:name` binding site of the UPDATE/DELETE path: each
+    * `NamedParameter`, in subqueries too, becomes `lit(value)`, the literal
+    * `spark.sql(text, args)` binds. An unbound name fails here with Spark's
+    * own error, even when no row would match. */
+  private def bind(plan: LogicalPlan, params: Map[String, Any]): LogicalPlan =
+    plan.transformAllExpressionsWithSubqueries {
+      case NamedParameter(name) => params.get(name) match {
+        case Some(v) => ColumnBridge.expression(lit(v))
+        case None => throw new AnalysisException("UNBOUND_SQL_PARAMETER", Map("name" -> name))
+      }
     }
 
-  private def assignmentOf(part: String, params: Map[String, Any]) = {
-    val eq = part.indexOf('=')
-    require(eq > 0, s"malformed SET assignment: $part")
-    val name = part.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
-    (name, org.apache.spark.sql.functions.expr(bindParams(part.substring(eq + 1), params)))
-  }
-
-  /**
-   * Per-character quoting state for a SQL fragment: `top(i)` is true when
-   * char i sits OUTSIDE '...' strings, `...` quoting, and parentheses.
-   * One shared tokenizer backs all three scanners below, so their quoting
-   * rules cannot drift: backslash-escaped quotes inside strings are skipped
-   * (Spark's default escapedStringLiterals=false), and the SQL doubled-quote
-   * escape ('don''t') is safe under plain toggling — the two quote chars
-   * enclose an empty region.
-   */
-  private def topLevelMask(s: String): Array[Boolean] = {
-    val top = new Array[Boolean](s.length)
-    var inStr = false
-    var inTick = false
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      top(i) = !inStr && !inTick && depth == 0
-      val c = s.charAt(i)
-      if (inStr && c == '\\' && i + 1 < s.length) {
-        top(i + 1) = false
-        i += 2
-      } else {
-        if (c == '\'' && !inTick) inStr = !inStr
-        else if (c == '`' && !inStr) inTick = !inTick
-        else if (!inStr && !inTick) {
-          if (c == '(') depth += 1 else if (c == ')') depth -= 1
+  private def rewriteDml(dml: LogicalPlan, database: Option[String]): Long = dml match {
+    case UpdateTable(table, assignments, condition) =>
+      val set = assignments.map { a =>
+        val name = a.key match {
+          case UnresolvedAttribute(Seq(n)) => n
+          case k => throw new IllegalArgumentException(s"malformed SET assignment: ${k.sql}")
         }
-        i += 1
+        name -> ColumnBridge.column(a.value)
       }
-    }
-    top
-  }
-
-  private def isIdentChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Split at the first top-level occurrence of `kw` as a standalone word
-    * (identifier-boundary on both sides, so `WHERE(x=1)` is recognized;
-    * a preceding '.' marks a qualified reference like `d.where`, never the
-    * keyword); return (before, Some(after)) or (s, None). Case-insensitive. */
-  private def splitAtKeyword(s: String, kw: String): (String, Option[String]) = {
-    val top = topLevelMask(s)
-    var i = 0
-    while (i <= s.length - kw.length) {
-      if (top(i) && s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || (!isIdentChar(s.charAt(i - 1)) && s.charAt(i - 1) != '.')) &&
-        (i + kw.length == s.length || !isIdentChar(s.charAt(i + kw.length)))) {
-        return (s.substring(0, i).trim, Some(s.substring(i + kw.length).trim))
-      }
-      i += 1
-    }
-    (s.trim, None)
-  }
-
-  /** Split a SET clause on top-level commas. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val top = topLevelMask(s)
-    val out = Seq.newBuilder[String]
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (top(i) && s.charAt(i) == ',') {
-        out += s.substring(start, i)
-        start = i + 1
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Bind `:name` parameters as SQL literals (the intercepted path cannot use
-    * Spark's parameterized `spark.sql`). Tokens inside '...' strings or
-    * `...` quoting are data, not parameters, and are left untouched. */
-  private def bindParams(text: String, params: Map[String, Any]): String = {
-    // ":name" binds anywhere outside quoting — including inside parens, so
-    // the mask here tracks quotes only.
-    val oq = outsideQuotes(text)
-    val sb = new StringBuilder
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == ':' && oq(i) && i + 1 < text.length &&
-        (text.charAt(i + 1).isLetter || text.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < text.length && isIdentChar(text.charAt(j))) j += 1
-        params.get(text.substring(i + 1, j)) match {
-          case Some(v) => sb ++= sqlLiteral(v); i = j
-          case None => sb += c; i += 1
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Like [[topLevelMask]] but tracking quoting only (parens irrelevant). */
-  private def outsideQuotes(s: String): Array[Boolean] = {
-    val out = new Array[Boolean](s.length)
-    var inStr = false
-    var inTick = false
-    var i = 0
-    while (i < s.length) {
-      out(i) = !inStr && !inTick
-      val c = s.charAt(i)
-      if (inStr && c == '\\' && i + 1 < s.length) {
-        out(i + 1) = false
-        i += 2
-      } else {
-        if (c == '\'' && !inTick) inStr = !inStr
-        else if (c == '`' && !inStr) inTick = !inTick
-        i += 1
-      }
-    }
-    out
-  }
-
-  private def sqlLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case t: java.sql.Timestamp => s"TIMESTAMP '$t'"
-    case d: java.sql.Date => s"DATE '$d'"
-    case other => other.toString
+      val predicate = condition.fold(lit(true))(ColumnBridge.column)
+      onTarget(table, database)(LedgerTables.updateWhere(spark, _, predicate, set, _))
+    case DeleteFromTable(table, condition) =>
+      val predicate = ColumnBridge.column(condition)
+      onTarget(table, database)(LedgerTables.deleteWhere(spark, _, predicate, _))
   }
 
   /** Resolve the DML target to a filesystem path (plus its declared
@@ -280,27 +163,27 @@ final class QueryEngine(val spark: SparkSession) {
     * differ from the catalog's: the day-partition swap keeps every
     * directory name and adds no partition value, and recovery costs a job
     * that gathers stats for every partition. */
-  private def runRewriteDml(target0: String, database: Option[String])(
-      rewrite: (String, Seq[String]) => Long): Long = {
-    val target = target0.trim
-    val ParquetPath = "(?is)^parquet\\s*\\.\\s*`(.+)`$".r
-    target match {
-      case ParquetPath(p) => rewrite(p, Nil)
-      case _ if target.contains("/") =>
-        rewrite(target.stripPrefix("`").stripSuffix("`"), Nil)
+  private def onTarget(table: LogicalPlan, database: Option[String])(
+      rewrite: (String, Seq[String]) => Long): Long = inDatabase(database) {
+    val parts = table match {
+      case UnresolvedRelation(parts, _, _) => parts
+      case _ => Nil
+    }
+    require(parts.nonEmpty, "UPDATE/DELETE target must be a table or a path; " +
+      s"a table alias (`UPDATE t AS u`) is not supported: ${table.nodeName}")
+    parts match {
+      case Seq(format, path) if format.equalsIgnoreCase("parquet") => rewrite(path, Nil)
+      case Seq(path) if new Path(path).isAbsolute => rewrite(path, Nil)
       case _ =>
-        val prev = database.map(_ => spark.catalog.currentDatabase)
-        database.foreach(db => spark.catalog.setCurrentDatabase(db))
-        try {
-          val ti = spark.sessionState.sqlParser.parseTableIdentifier(target)
-          val meta = spark.sessionState.catalog.getTableMetadata(ti)
-          val n = rewrite(meta.location.toString, meta.partitionColumnNames)
-          spark.catalog.refreshTable(target)
-          if (meta.partitionColumnNames.nonEmpty &&
-              !graft.sources.LedgerTables.swapsDayPartitions(meta.partitionColumnNames))
-            spark.catalog.recoverPartitions(target)
-          n
-        } finally prev.foreach(spark.catalog.setCurrentDatabase)
+        require(parts.length <= 2, s"DML target must be table or db.table: ${parts.mkString(".")}")
+        val ti = TableIdentifier(parts.last, parts.init.headOption)
+        val meta = spark.sessionState.catalog.getTableMetadata(ti)
+        val n = rewrite(meta.location.toString, meta.partitionColumnNames)
+        spark.catalog.refreshTable(ti.quotedString)
+        if (meta.partitionColumnNames.nonEmpty &&
+            !LedgerTables.swapsDayPartitions(meta.partitionColumnNames))
+          spark.catalog.recoverPartitions(ti.quotedString)
+        n
     }
   }
 

@@ -48,8 +48,9 @@ object LedgerTables {
    * engine stages the affected partitions and swaps them in — at 100 TB an
    * update touching one day rewrites that day, not the table. A status
    * transition is `Seq("pipeline_status" -> lit(status))`. Returns rows
-   * affected (V4 contract). Backs the SQL-text UPDATE path of
-   * `QueryEngine.executeDmlQuery`.
+   * affected (V4 contract). Backs SQL-text UPDATE in
+   * `QueryEngine.executeDmlQuery`, which passes Spark's parsed WHERE and
+   * SET expressions with their `:name` parameters already bound.
    * `partitionCols` is the table's declared partitioning when the caller
    * knows it (catalog tables); empty means "detect the ledger layout".
    * Assigning a partition column is rejected — a row changing partitions

@@ -213,9 +213,116 @@ class QueryEngineSpec extends SparkSpec {
         database = Some("graft_scoped_db"))
       assert(n.data.contains(0L))
       assert(spark.catalog.currentDatabase == before)
+      // UPDATE/DELETE take the partition-rewrite path; they resolve in the
+      // same scope and leave the session database as it was
+      engine.executeDmlQuery("INSERT INTO t_scoped VALUES (1), (2), (3)",
+        database = Some("graft_scoped_db"))
+      assert(engine.executeDmlQuery("UPDATE t_scoped SET id = id + 10 WHERE id = 1",
+        database = Some("graft_scoped_db")).data == 1L)
+      assert(spark.catalog.currentDatabase == before)
+      assert(engine.executeDmlQuery("DELETE FROM t_scoped WHERE id = 2",
+        database = Some("graft_scoped_db")).data == 1L)
+      assert(spark.catalog.currentDatabase == before)
+      assert(engine.fetchAllRowsAsTuples("SELECT id FROM graft_scoped_db.t_scoped ORDER BY id")
+        .data.map(_.getLong(0)).toSeq == Seq(3L, 11L))
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_scoped_db.t_scoped")
       spark.sql("DROP DATABASE IF EXISTS graft_scoped_db")
+    }
+  }
+
+  /** A day-partitioned ledger at a fresh path, addressed as `parquet.`path``. */
+  private def ledgerAt(name: String,
+      rows: (Long, String, String, String, String, String)*): String = {
+    val tmp = java.nio.file.Files.createTempDirectory(name).toString + "/ledger"
+    graft.sources.LedgerTables.write(ledgerOf(rows: _*), tmp)
+    s"parquet.`$tmp`"
+  }
+
+  test("UPDATE binds a java.sql.Timestamp as the same instant spark.sql(text, args) does") {
+    val t = ledgerAt("graft_dml_zone",
+      (1L, "p", "i", "2024-01-15 01:00:00", "2024-01-15 02:00:00", "pending"),
+      (2L, "p", "i", "2024-01-15 05:00:00", "2024-01-15 06:00:00", "pending"),
+      (3L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (4L, "p", "i", "2024-01-15 13:00:00", "2024-01-15 14:00:00", "pending"))
+    // 12:00 UTC is 04:00 Los Angeles wall clock: read as session-zone text
+    // it would match one row instead of three
+    val at = Map("t" -> java.sql.Timestamp.from(java.time.Instant.parse("2024-01-15T12:00:00Z")))
+    val jvmZone = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+    try {
+      assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+      val counted = engine.executeScalarQuery(
+        s"SELECT COUNT(*) FROM $t WHERE query_window_start_ts < :t", at).data
+      assert(counted.contains(3L))
+      val up = engine.executeDmlQuery(
+        s"UPDATE $t SET pipeline_status = 'completed' WHERE query_window_start_ts < :t", at)
+      assert(counted.contains(up.data), s"rows_affected=${up.data} counted=$counted")
+    } finally java.util.TimeZone.setDefault(jvmZone)
+  }
+
+  test("UPDATE/DELETE bind Instant, LocalDateTime and LocalDate; an unbound :name fails") {
+    import java.time.{Instant, LocalDate, LocalDateTime}
+    val t = ledgerAt("graft_dml_java8",
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (2L, "p", "i", "2024-01-15 12:00:00", "2024-01-15 13:00:00", "pending"),
+      (3L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "pending"))
+    def ends() = engine.fetchAllRowsAsTuples(
+      s"SELECT record_id, CAST(query_window_end_ts AS STRING), " +
+        s"CAST(query_window_end_day AS STRING) FROM $t ORDER BY record_id")
+      .data.map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    assert(engine.executeDmlQuery(
+      s"UPDATE $t SET query_window_end_ts = :end, query_window_end_day = :endDay " +
+        "WHERE query_window_start_ts < :before AND query_window_start_day = :day",
+      Map("end" -> Instant.parse("2024-01-16T01:00:00Z"), "endDay" -> LocalDate.of(2024, 1, 16),
+        "before" -> LocalDateTime.parse("2024-01-15T11:00:00"),
+        "day" -> LocalDate.of(2024, 1, 15))).data == 1L)
+    assert(engine.executeDmlQuery(
+      s"UPDATE $t SET query_window_end_ts = :end WHERE query_window_start_ts = :start",
+      Map("end" -> LocalDateTime.parse("2024-01-16T12:30:00"),
+        "start" -> Instant.parse("2024-01-16T10:00:00Z"))).data == 1L)
+    assert(ends() == Seq(
+      (1L, "2024-01-16 01:00:00", "2024-01-16"),
+      (2L, "2024-01-15 13:00:00", "2024-01-15"),
+      (3L, "2024-01-16 12:30:00", "2024-01-16")))
+    assert(engine.executeDmlQuery(
+      s"DELETE FROM $t WHERE query_window_start_ts >= :from AND query_window_start_day <= :day",
+      Map("from" -> Instant.parse("2024-01-15T12:00:00Z"), "day" -> LocalDate.of(2024, 1, 15)))
+      .data == 1L)
+    assert(ends().map(_._1) == Seq(1L, 3L))
+    // an unbound :name fails loudly, as in spark.sql, even with no matching row
+    val unbound = intercept[org.apache.spark.sql.AnalysisException] {
+      engine.executeDmlQuery(s"UPDATE $t SET pipeline_status = :s WHERE record_id = 99")
+    }
+    assert(unbound.getCondition == "UNBOUND_SQL_PARAMETER", unbound.getMessage)
+    assert(intercept[org.apache.spark.sql.AnalysisException] {
+      engine.executeDmlQuery(s"DELETE FROM $t WHERE record_id = :id", Map("other" -> 1))
+    }.getCondition == "UNBOUND_SQL_PARAMETER")
+  }
+
+  test("UPDATE/DELETE that open with a comment still take the partition rewrite") {
+    val t = ledgerAt("graft_dml_comment",
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (2L, "p", "i", "2024-01-15 12:00:00", "2024-01-15 13:00:00", "pending"),
+      (3L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "pending"))
+    assert(engine.executeDmlQuery(
+      s"-- note\nUPDATE $t SET pipeline_status = 'completed' WHERE record_id <= :k",
+      Map("k" -> 2)).data == 2L)
+    assert(engine.executeDmlQuery(
+      s"/* hint */ DELETE FROM $t WHERE pipeline_status = 'completed'").data == 2L)
+    assert(engine.fetchAllRowsAsTuples(s"SELECT record_id FROM $t")
+      .data.map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
+  test("UPDATE rejects a table alias and an unquoted path") {
+    val t = ledgerAt("graft_dml_alias",
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"))
+    val alias = intercept[IllegalArgumentException] {
+      engine.executeDmlQuery(s"UPDATE $t AS u SET pipeline_status = 'x'")
+    }
+    assert(alias.getMessage.contains("table alias"), alias.getMessage)
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+      engine.executeDmlQuery("UPDATE /tmp/graft_no_such SET pipeline_status = 'x'")
     }
   }
 
