@@ -4,8 +4,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-/** The one JSON codec for the engine's own records: bench lines, the floor
-  * anchor and the oracle SQL dump. Jackson ships with Spark. Writers take
+/** The one JSON codec for the engine's own records: bench records and the
+  * oracle SQL dump. Jackson ships with Spark. Writers take
   * Scala maps and sequences; pass an insertion-ordered map (`VectorMap`) to
   * keep a record's field order. */
 private[graft] object Json {
@@ -20,15 +20,4 @@ private[graft] object Json {
   def readObject(f: java.nio.file.Path): Option[JsonNode] =
     try Option(mapper.readTree(f.toFile)).filter(_.isObject)
     catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The object's numeric fields. */
-  def numbers(n: JsonNode): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    n.properties.asScala.collect {
-      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
-    }.toMap
-  }
-
-  def text(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).filter(_.isTextual).map(_.asText)
 }

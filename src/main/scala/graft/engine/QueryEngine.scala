@@ -150,21 +150,23 @@ final class QueryEngine(val spark: SparkSession) {
         name -> ColumnBridge.column(a.value)
       }
       val predicate = condition.fold(lit(true))(ColumnBridge.column)
-      onTarget(table, database)(LedgerTables.updateWhere(spark, _, predicate, set, _))
+      onTarget(table, database)(LedgerTables.update(spark, _, predicate, set, _))
     case DeleteFromTable(table, condition) =>
       val predicate = ColumnBridge.column(condition)
-      onTarget(table, database)(LedgerTables.deleteWhere(spark, _, predicate, _))
+      onTarget(table, database)(LedgerTables.delete(spark, _, predicate, _))
   }
 
   /** Resolve the DML target to a filesystem path (plus its declared
     * partition columns for catalog tables), run the rewrite, and refresh
-    * cached file listings afterwards. Partition metadata is recovered only
-    * after a whole-table rewrite, whose re-rendered directory names may
-    * differ from the catalog's: the day-partition swap keeps every
-    * directory name and adds no partition value, and recovery costs a job
-    * that gathers stats for every partition. */
+    * cached file listings afterwards. A catalog table's partitions follow
+    * its directories. After a whole-table rewrite, whose re-rendered
+    * directory names may differ from the catalog's and whose DELETE may
+    * empty a partition, `REPAIR TABLE … SYNC PARTITIONS` adds and drops
+    * them (a job that gathers stats for every partition). The day-partition
+    * swap keeps every directory name and adds no partition value, so only
+    * the days a DELETE emptied are dropped, in the catalog alone. */
   private def onTarget(table: LogicalPlan, database: Option[String])(
-      rewrite: (String, Seq[String]) => Long): Long = inDatabase(database) {
+      rewrite: (String, Seq[String]) => LedgerTables.Rewritten): Long = inDatabase(database) {
     val parts = table match {
       case UnresolvedRelation(parts, _, _) => parts
       case _ => Nil
@@ -172,18 +174,22 @@ final class QueryEngine(val spark: SparkSession) {
     require(parts.nonEmpty, "UPDATE/DELETE target must be a table or a path; " +
       s"a table alias (`UPDATE t AS u`) is not supported: ${table.nodeName}")
     parts match {
-      case Seq(format, path) if format.equalsIgnoreCase("parquet") => rewrite(path, Nil)
-      case Seq(path) if new Path(path).isAbsolute => rewrite(path, Nil)
+      case Seq(format, path) if format.equalsIgnoreCase("parquet") => rewrite(path, Nil).rows
+      case Seq(path) if new Path(path).isAbsolute => rewrite(path, Nil).rows
       case _ =>
         require(parts.length <= 2, s"DML target must be table or db.table: ${parts.mkString(".")}")
         val ti = TableIdentifier(parts.last, parts.init.headOption)
         val meta = spark.sessionState.catalog.getTableMetadata(ti)
-        val n = rewrite(meta.location.toString, meta.partitionColumnNames)
+        val done = rewrite(meta.location.toString, meta.partitionColumnNames)
+        if (done.emptiedDays.nonEmpty)
+          spark.sessionState.catalog.dropPartitions(ti,
+            done.emptiedDays.map(d => Map(meta.partitionColumnNames.head -> d)),
+            ignoreIfNotExists = true, purge = false, retainData = true)
         spark.catalog.refreshTable(ti.quotedString)
         if (meta.partitionColumnNames.nonEmpty &&
             !LedgerTables.swapsDayPartitions(meta.partitionColumnNames))
-          spark.catalog.recoverPartitions(ti.quotedString)
-        n
+          spark.sql(s"REPAIR TABLE ${ti.quotedString} SYNC PARTITIONS")
+        done.rows
     }
   }
 

@@ -62,7 +62,15 @@ object LedgerTables {
       path: String,
       predicate: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)],
-      partitionCols: Seq[String] = Nil): Long = {
+      partitionCols: Seq[String] = Nil): Long =
+    update(spark, path, predicate, assignments, partitionCols).rows
+
+  private[graft] def update(
+      spark: SparkSession,
+      path: String,
+      predicate: org.apache.spark.sql.Column,
+      assignments: Seq[(String, org.apache.spark.sql.Column)],
+      partitionCols: Seq[String]): Rewritten = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     rewriteAffectedPartitions(spark, path, predicate, partitionCols) { table =>
       // Validation runs against the IN-LEASE table snapshot, before the
@@ -99,6 +107,13 @@ object LedgerTables {
       path: String,
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = Nil): Long =
+    delete(spark, path, predicate, partitionCols).rows
+
+  private[graft] def delete(
+      spark: SparkSession,
+      path: String,
+      predicate: org.apache.spark.sql.Column,
+      partitionCols: Seq[String]): Rewritten =
     rewriteAffectedPartitions(spark, path, predicate, partitionCols) { _ => (ledger, pred) =>
       // Keep any row the predicate does not POSITIVELY match: a NULL
       // predicate result must retain the row (plain `!pred` is NULL for
@@ -106,6 +121,13 @@ object LedgerTables {
       ledger.filter(!org.apache.spark.sql.functions.coalesce(
         pred, org.apache.spark.sql.functions.lit(false)))
     }
+
+  /** What a rewrite did: the rows it affected, and the day partitions it
+    * left without a directory. A DELETE that removes a day's last row
+    * empties it, and a catalog table must then drop that partition; the
+    * whole-table rewrite reports no days (its caller syncs the catalog with
+    * the directories). */
+  private[graft] final case class Rewritten(rows: Long, emptiedDays: Seq[String])
 
   /** Whether a rewrite of a table with these partition columns takes the
     * day-partition swap: it rewrites only existing `query_window_start_day`
@@ -130,7 +152,7 @@ object LedgerTables {
       path: String,
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String])(
-      transformFor: DataFrame => (DataFrame, org.apache.spark.sql.Column) => DataFrame): Long = {
+      transformFor: DataFrame => (DataFrame, org.apache.spark.sql.Column) => DataFrame): Rewritten = {
     import org.apache.spark.sql.functions.col
     // Writer exclusion for the whole read-stage-swap sequence: the staged
     // swap is only correct single-writer (see WriterLease), and even the
@@ -160,13 +182,13 @@ object LedgerTables {
       // (DateType values render exactly as the partition directory names);
       // any other layout takes the whole-table rewrite, which preserves it.
       if (!swapsDayPartitions(parts))
-        rewriteWholeTable(spark, path, ledger, matched, predicate, parts)(transform)
+        Rewritten(rewriteWholeTable(spark, path, ledger, matched, predicate, parts)(transform), Nil)
       else {
         // Affected partition values and their row counts in ONE query: a
         // day-count-sized driver list, never data.
         val perDay = matched.groupBy(col("query_window_start_day")).count().collect()
         val days = perDay.map(_.get(0).toString)
-        if (days.isEmpty) 0L
+        if (days.isEmpty) Rewritten(0L, Nil)
         else {
           val affected = perDay.map(_.getLong(1)).sum
           // The file set this rewrite transforms (the read's cached file
@@ -204,7 +226,10 @@ object LedgerTables {
               snapshot, name)
           }
           fs.delete(staging, true)
-          affected
+          // a day whose every row was deleted: staging produced no tree
+          // for it, and no concurrent appender has recreated it since
+          Rewritten(affected, days.filterNot(d =>
+            fs.exists(new org.apache.hadoop.fs.Path(base, s"query_window_start_day=$d"))).toSeq)
         }
       }
     }

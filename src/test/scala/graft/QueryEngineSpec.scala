@@ -122,6 +122,9 @@ class QueryEngineSpec extends SparkSpec {
       assert(del.data == 1L)
       assert(engine.executeScalarQuery(
         "SELECT COUNT(*) FROM graft_dml_p").data.contains(2L))
+      // the emptied partition leaves the catalog with its directory
+      assert(spark.sql("SHOW PARTITIONS graft_dml_p").collect().map(_.getString(0)).toSeq ==
+        Seq("day=d1"))
     } finally engine.executeControlCommand("DROP TABLE IF EXISTS graft_dml_p")
   }
 
@@ -198,6 +201,31 @@ class QueryEngineSpec extends SparkSpec {
         "UPDATE graft_dml_cat SET records_count = 0 WHERE record_id = 99").data) == (0L, 1))
       assert(spark.table("graft_dml_cat").count() == 3L)
     } finally engine.executeControlCommand("DROP TABLE IF EXISTS graft_dml_cat")
+  }
+
+  test("DELETE that empties a day of a DDL'd ledger drops that partition from the catalog") {
+    val rows = ledgerOf(
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (2L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "pending"),
+      (3L, "p", "i", "2024-01-16 11:00:00", "2024-01-16 12:00:00", "completed"),
+      (4L, "p", "i", "2024-01-17 10:00:00", "2024-01-17 11:00:00", "completed"))
+    rows.createOrReplaceTempView("graft_dml_empty_rows")
+    graft.sources.LedgerTables.ensure(spark, "graft_dml_empty")
+    try {
+      val cols = rows.columns.mkString(", ")
+      engine.executeDmlQuery(
+        s"INSERT INTO graft_dml_empty ($cols) SELECT $cols FROM graft_dml_empty_rows")
+      def partitions() =
+        spark.sql("SHOW PARTITIONS graft_dml_empty").collect().map(_.getString(0)).toSeq
+      assert(partitions().length == 3)
+      // both rows of 2024-01-16 go; the other days keep theirs
+      assert(engine.executeDmlQuery(
+        "DELETE FROM graft_dml_empty WHERE record_id IN (2, 3)").data == 2L)
+      assert(partitions() == Seq(
+        "query_window_start_day=2024-01-15", "query_window_start_day=2024-01-17"))
+      assert(spark.table("graft_dml_empty").select("record_id").collect().map(_.getLong(0))
+        .sorted.toSeq == Seq(1L, 4L))
+    } finally engine.executeControlCommand("DROP TABLE IF EXISTS graft_dml_empty")
   }
 
   test("per-call database scoping resolves in the target db and restores the session db") {

@@ -11,13 +11,14 @@ of both sides so floor drift hits them symmetrically, and compare per-query
 minima. This tool makes that the recorded artifact instead of a hand
 procedure:
 
-  python3 tools/bench_ab.py                         # prior = last round's verdict commit
   python3 tools/bench_ab.py --prior <rev> --out docs/BENCH_delta_r11.json
-  python3 tools/bench_ab.py --passes 2 --reps 2 --only x19,x42
+  python3 tools/bench_ab.py --prior <rev> --passes 2 --reps 2 --only x19,x42
 
 Protocol:
-  * prior rev checked out into a git worktree under .ab/ (inside the repo,
-    ignored), compiled once with its own sbt target;
+  * prior rev exported with `git archive` under .ab/ (inside the repo,
+    ignored; no worktree is registered in .git), compiled once with its
+    own sbt target;
+  * every pass runs local[--cpus] (default: this host's core count);
   * interleaved pass order A B B A (A = current tree) — each side gets one
     early and one late pass, so a monotone floor drift cancels in the
     per-side minima;
@@ -58,7 +59,7 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def sh(cmd, cwd=REPO, env=None, check=True):
@@ -69,20 +70,20 @@ def sh(cmd, cwd=REPO, env=None, check=True):
                           capture_output=True, text=True)
 
 
-def default_prior():
-    out = sh(["git", "log", "--grep", "^round [0-9]*: verdict", "-1",
-              "--format=%H"]).stdout.strip()
-    if not out:
-        raise SystemExit("no 'round N: verdict' commit found; pass --prior")
-    return out
-
-
-def ensure_worktree(rev):
+def ensure_tree(rev):
+    """The rev's committed files under .ab/<short rev>, exported once."""
     short = sh(["git", "rev-parse", "--short", rev]).stdout.strip()
     path = os.path.join(REPO, ".ab", short)
     if not os.path.isdir(path):
-        os.makedirs(os.path.join(REPO, ".ab"), exist_ok=True)
-        sh(["git", "worktree", "add", "--detach", path, rev])
+        # extract beside the final name, then rename: an interrupted export
+        # must not pass for a complete tree on the next run
+        part = path + ".part"
+        subprocess.run(["rm", "-rf", part], check=True)
+        os.makedirs(part)
+        archive = subprocess.run(["git", "archive", rev], cwd=REPO,
+                                 check=True, capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", part], input=archive, check=True)
+        os.rename(part, path)
     return path
 
 
@@ -142,8 +143,7 @@ def combine(recs):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--prior", default=None, help="git rev of the A/B prior "
-                    "(default: last 'round N: verdict' commit)")
+    ap.add_argument("--prior", required=True, help="git rev of the A/B prior")
     ap.add_argument("--out", default=None,
                     help="artifact path (default docs/BENCH_delta_ab.json)")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -153,7 +153,9 @@ def main():
                     help="reps per query per pass (default 2)")
     ap.add_argument("--only", default=None,
                     help="comma-separated query filter for a targeted A/B")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count(),
+                    help="local[N] threads and shuffle partitions per pass "
+                    "(default: this host's core count)")
     ap.add_argument("--threshold", type=float, default=1.3)
     ap.add_argument("--min-steady", type=float, default=0.15)
     ap.add_argument("--drift", type=float, default=0.10,
@@ -171,12 +173,12 @@ def main():
     args = ap.parse_args()
     max_passes = args.max_passes or max(args.passes, 4)
     if not os.path.isabs(args.sf_dir):
-        # the prior worktree resolves a relative fixture against ITS cwd:
+        # the prior tree resolves a relative fixture against ITS cwd:
         # every B-side query fails with -1 sentinels (round-13 incident)
         raise SystemExit(f"--sf-dir must be absolute, got {args.sf_dir}")
 
-    prior_rev = args.prior or default_prior()
-    prior_tree = ensure_worktree(prior_rev)
+    prior_rev = sh(["git", "rev-parse", args.prior]).stdout.strip()
+    prior_tree = ensure_tree(prior_rev)
     cur_rev = sh(["git", "rev-parse", "HEAD"]).stdout.strip()
     dirty = bool(sh(["git", "status", "--porcelain", "--",
                      "src", "build.sbt"]).stdout.strip())
@@ -291,7 +293,7 @@ def main():
             "the common totals")
     artifact = {
         "method": "interleaved same-session A/B (A=working tree, B=prior "
-                  "worktree), order A B B A per round trip; per side per "
+                  "tree), order A B B A per round trip; per side per "
                   "query: steady=min warm rep across passes; floors are "
                   "per round trip (median current/prior steady within the "
                   "trip over prior>=min_steady); norm=median over trips of "

@@ -27,8 +27,10 @@ Method:
     [1/threshold, threshold] — both regressions and improvements, because an
     unexplained improvement is a measurement question too.
 
-Exit code is 0 always: this is an adjudication aid, not a gate — the gates
-are Verify/check.py (correctness) and the outlier guard inside graft.Bench.
+Exit code is 0 always: this is an adjudication aid, not a gate. The
+correctness gate is Verify/check.py; a speed claim is an interleaved A/B
+from tools/bench_ab.py, since committed records from different hosts or
+boots do not compare.
 """
 import argparse
 import json
