@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{BloomContainsLong, BpeSegment, BpeSegmentFile, CdcChunks, CosineSimilarityF32, DotProductF32, JaroWinkler, Md5PrefixLong}
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
 /**
  * SparkSessionExtensions entry point — the deployment route for the engine's
@@ -253,17 +254,56 @@ object GraftExtensions {
  * full. The conf is static and `CodeGenerator` reads it once, when the
  * JVM first generates code, so it is set here, before any session exists;
  * a caller can still override it on the builder.
+ *
+ * [[builder]] binds the `file:` scheme to [[graft.sources.NioLocalFileSystem]]
+ * (`spark.hadoop.fs.file.impl`, the FileSystem API) and
+ * [[graft.sources.NioLocalFs]] (`spark.hadoop.fs.AbstractFileSystem.file.impl`,
+ * the FileContext API of streaming checkpoints and state stores). Without
+ * `libhadoop`, Hadoop's own local filesystem starts a `chmod` after every
+ * create and mkdir, a `readlink` for the link check of every FileContext
+ * rename, and an `ls -ld` for each status `listFiles` returns. Counted
+ * with logging wrappers first on `PATH` on a 4-core host: one steady
+ * `stream_ingest` round of perfbench (8 micro-batches) started 297
+ * `chmod`, 640 `readlink` and 33 `ls`, and a `ledger_ops` tick 41 `chmod`;
+ * with the binding both start none (`ProcessStartSpec` pins 0 with JFR).
+ * The bound classes write the same permissions, `.crc` sidecars and
+ * renames (`NioLocalFileSystemSpec` runs them against Hadoop's); only a
+ * permission with the sticky bit, or a path that already has a
+ * set-user-ID, set-group-ID or sticky bit, still goes through `chmod`.
+ * Where the JDK has no `unix` attribute view (not POSIX) nothing is bound.
+ *
+ * `spark.hadoop.*` reaches every Hadoop conf of the session's SparkContext,
+ * so children from `newSession()` (as `EventStream.streamSession`) share
+ * the binding. Two things it does not reach:
+ *  - Hadoop caches FileSystem instances per scheme, authority and user,
+ *    not per conf. A stock `file:` instance that code outside the engine
+ *    created earlier in the JVM, from a conf without the binding, stays
+ *    the one `FileSystem.get` returns: same results, with the processes.
+ *    It is left in place, since closing a shared instance would run its
+ *    delete-on-exit list early. The engine creates no `file:` instance
+ *    before its session, whose first one is made from the bound conf;
+ *    `GraftExtensionsSpec` checks that the cached instance is the bound
+ *    class. FileContext builds a new filesystem per call and is never
+ *    shadowed.
+ *  - Spark's `CheckpointFileManager.isLocal` matches `LocalFs` and
+ *    `RawLocalFs` by class, so it now reads false. In Spark 4.1.2 nothing
+ *    calls it: the spark-sql jar holds only its declarations and
+ *    `ChecksumCheckpointFileManager`'s delegation.
  */
 object GraftSession {
   /** Generated classes Spark keeps compiled (see the object doc). */
   val CodegenCacheEntries = 1000
 
-  def builder(): SparkSession.Builder =
-    SparkSession.builder()
+  def builder(): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    if (!NioLocalFileSystem.supported) b
+    else b.config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+  }
 
   /** Local thread count: `SPARK_GRAFT_CPUS` when set, else the host's cores. */
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)

@@ -57,7 +57,7 @@ object EventStream {
     * and restoring `spark.sql.shuffle.partitions` around a stream would
     * race with batch queries planning in parallel. The stream runs
     * entirely in the child; results return on the PARENT session. */
-  private[streaming] def streamSession(
+  private[graft] def streamSession(
       parent: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
     // State-store provider stays the default (HDFSBackedStateStore):
     // RocksDB was evaluated here (round 13, the verdict's named

@@ -1,7 +1,12 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
 /** The SparkSessionExtensions deployment route. The extension acts at
   * session construction, and `newSession()` builds a fresh function
@@ -34,5 +39,17 @@ class GraftExtensionsSpec extends SparkSpec {
       .map(_.funcName).toSet
     assert(injected.contains("cosine_f32"))
     assert(injected == installed)
+  }
+
+  test("file: resolves to the java.nio local filesystem in a session and a stream child") {
+    for (s <- Seq(spark, graft.streaming.EventStream.streamSession(spark))) {
+      val conf = s.sessionState.newHadoopConf()
+      // Hadoop's FileSystem cache is keyed by scheme and user, not conf
+      assert(new Path("file:/tmp").getFileSystem(conf).getClass == classOf[NioLocalFileSystem])
+      assert(FileSystem.get(URI.create("file:///"), conf).getClass == classOf[NioLocalFileSystem])
+      assert(FileContext.getFileContext(conf).getDefaultFileSystem.getClass == classOf[NioLocalFs])
+      assert(FileContext.getFileContext(URI.create("file:///"), conf).getDefaultFileSystem.getClass ==
+        classOf[NioLocalFs])
+    }
   }
 }

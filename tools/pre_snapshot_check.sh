@@ -9,19 +9,23 @@
 # ANY snapshot / end-of-round commit, and paste its last line into the
 # commit message so the snapshot records its own test state.
 #
-# Usage: tools/pre_snapshot_check.sh [base-rev]
-#   base-rev defaults to the last round-artifact commit (the most recent
-#   commit whose subject starts with "round "), i.e. "what this round
-#   changed". The check is deliberately blunt: if ANY Scala source
-#   (main or test) changed since base or is dirty in the working tree,
-#   the FULL suite runs — suite-mapping heuristics are exactly the kind
-#   of cleverness that let the round-15 escape happen. Test/compile runs
-#   regardless, so a snapshot can never commit code that does not build.
+# Usage: tools/pre_snapshot_check.sh <base-rev>
+#   base-rev is required: the commit the change at hand starts from, so
+#   "what changed since base" is this change and nothing older. The check
+#   is deliberately blunt: if ANY Scala source (main or test) changed
+#   since base or is dirty in the working tree, the FULL suite runs —
+#   suite-mapping heuristics are exactly the kind of cleverness that let
+#   the round-15 escape happen. Test/compile runs regardless, so a
+#   snapshot can never commit code that does not build.
 set -u
 cd "$(dirname "$0")/.."
 
-BASE=${1:-$(git log --format='%H %s' -100 | awk '/ round [0-9]+:/ {print $1; exit}')}
-if [ -z "$BASE" ]; then BASE=$(git rev-list --max-parents=0 HEAD | head -1); fi
+USAGE="usage: tools/pre_snapshot_check.sh <base-rev>"
+if [ $# -ne 1 ]; then echo "$USAGE" >&2; exit 2; fi
+BASE=$1
+if ! git rev-parse --verify -q "$BASE^{commit}" >/dev/null; then
+  echo "not a commit: $BASE" >&2; echo "$USAGE" >&2; exit 2
+fi
 
 # Dirty-file detection (round-16 ADVICE): `git status --short | awk
 # '{print $2}'` broke on renames ("R old -> new" printed the OLD path) and
