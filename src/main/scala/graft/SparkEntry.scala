@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.operators._
 import graft.sources.Tables
+import graft.streaming.EventStream.collectedInTempDir
 
 /**
  * Driver contract (see SURVEY.md §2.3 for the declared query inventory).
@@ -851,10 +852,9 @@ object SparkEntry {
     // quantizer bootstrap. The top-k query against the STREAMED store is
     // gated on x5's exact oracle: the append contract makes streamed ==
     // batch-built == inline, row-identical, not approximately.
-    "x120_ivf_stream" -> ((s, d) => {
+    "x120_ivf_stream" -> ((s, d) => collectedInTempDir(s, "graft_x120") { dir =>
       val e = emb(s, d)
-      val path = java.nio.file.Files.createTempDirectory("graft_x120")
-        .toString + "/ivf"
+      val path = dir.toString + "/ivf"
       SimilarityOps.writeIvfCentroids(e, path, 40)
       val sink = streaming.CorpusStream.ivfIngestBatch(path) _
       def b(i: Int) = e.filter(col("vec_id") % 3 === i)
@@ -899,10 +899,9 @@ object SparkEntry {
     // append-exact) — then the log read back. Gated on the exact-integer
     // columns per (batch_id, source); the oracle computes each batch's
     // scorecard directly from the same doc_id % 3 slices.
-    "x102_scorecard_stream" -> ((s, d) => {
+    "x102_scorecard_stream" -> ((s, d) => collectedInTempDir(s, "graft_x102") { dir =>
       val all = docs(s, d)
-      val log = java.nio.file.Files.createTempDirectory("graft_x102")
-        .toString + "/scorecard"
+      val log = dir.toString + "/scorecard"
       val sink = streaming.CorpusStream.scorecardBatch(log) _
       def b(i: Int) = all.filter(col("doc_id") % 3 === i)
       sink(b(0), 0L); sink(b(1), 1L)
@@ -918,10 +917,9 @@ object SparkEntry {
     // — the marker guard must keep the log append-exact, and each batch's
     // KL is computed against the reference with the BATCH's vocabulary
     // union (cross-batch stateless).
-    "x106_drift_stream" -> ((s, d) => {
+    "x106_drift_stream" -> ((s, d) => collectedInTempDir(s, "graft_x106") { dir =>
       val all = docs(s, d)
-      val log = java.nio.file.Files.createTempDirectory("graft_x106")
-        .toString + "/drift"
+      val log = dir.toString + "/drift"
       val sink = streaming.CorpusStream.driftMonitorBatch(newSnapshot(all), log) _
       def b(i: Int) = all.filter(col("doc_id") % 3 === i)
       sink(b(0), 0L); sink(b(1), 1L)

@@ -150,10 +150,10 @@ final class QueryEngine(val spark: SparkSession) {
         name -> ColumnBridge.column(a.value)
       }
       val predicate = condition.fold(lit(true))(ColumnBridge.column)
-      onTarget(table, database)(LedgerTables.update(spark, _, predicate, set, _))
+      onTarget(table, database)(LedgerTables.update(spark, _, predicate, set, _)())
     case DeleteFromTable(table, condition) =>
       val predicate = ColumnBridge.column(condition)
-      onTarget(table, database)(LedgerTables.delete(spark, _, predicate, _))
+      onTarget(table, database)(LedgerTables.delete(spark, _, predicate, _)())
   }
 
   /** Resolve the DML target to a filesystem path (plus its declared
@@ -163,7 +163,7 @@ final class QueryEngine(val spark: SparkSession) {
     * directory names may differ from the catalog's and whose DELETE may
     * empty a partition, `REPAIR TABLE … SYNC PARTITIONS` adds and drops
     * them (a job that gathers stats for every partition). The day-partition
-    * swap keeps every directory name and adds no partition value, so only
+    * rewrite keeps every directory name and adds no partition value, so only
     * the days a DELETE emptied are dropped, in the catalog alone. */
   private def onTarget(table: LogicalPlan, database: Option[String])(
       rewrite: (String, Seq[String]) => LedgerTables.Rewritten): Long = inDatabase(database) {
@@ -187,7 +187,7 @@ final class QueryEngine(val spark: SparkSession) {
             ignoreIfNotExists = true, purge = false, retainData = true)
         spark.catalog.refreshTable(ti.quotedString)
         if (meta.partitionColumnNames.nonEmpty &&
-            !LedgerTables.swapsDayPartitions(meta.partitionColumnNames))
+            !LedgerTables.rewritesDayPartitions(meta.partitionColumnNames))
           spark.sql(s"REPAIR TABLE ${ti.quotedString} SYNC PARTITIONS")
         done.rows
     }

@@ -103,9 +103,9 @@ object IdempotentAppend {
     * The grace window is how a crashed appender is told apart from a LIVE
     * one — the same TTL-liveness discrimination [[WriterLease]] uses for
     * crashed writers, and the same default. A live concurrent append is
-    * explicitly supported during rewrites (its in-flight files are
-    * rescued out of displaced trees, its marker survives the swap —
-    * CI-locked by ConcurrentAppendDmlSpec), so a FRESH stage must not
+    * explicitly supported during rewrites (a rewrite retires only its
+    * snapshot files, so the append's files and its marker are never
+    * touched — CI-locked by ConcurrentAppendDmlSpec), so a FRESH stage must not
     * block the rewrite. The residual window this leaves — an append that
     * crashes, and whose table is rewritten within the grace period, and
     * whose stream only replays after that rewrite — is the narrow triple

@@ -6,43 +6,52 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /**
- * Table maintenance for the day-partitioned ledger. Streaming ingest and
- * frequent small appends fragment partitions into many tiny parquet files;
- * at 100 TB that multiplies scan tasks and footer reads. [[compact]] rewrites
- * each fragmented partition into ceil(bytes/target) files — one distributed
- * job per partition, per-partition staged swap, untouched partitions keep
- * their files.
+ * Table maintenance for the day-partitioned ledger, and the one way a
+ * ledger table's files are replaced. Streaming ingest and frequent small
+ * appends fragment partitions into many tiny parquet files; at 100 TB that
+ * multiplies scan tasks and footer reads. [[compact]] rewrites each
+ * fragmented partition into ceil(bytes/target) files — one distributed job
+ * per partition, untouched partitions keep their files.
+ *
+ * Every rewrite — compaction and the UPDATE/DELETE of [[LedgerTables]] —
+ * commits through [[rewrite]]:
+ *
+ *  1. Spark writes the replacement rows, in the table's layout, to a
+ *     staging dir BESIDE the table root (a dir with '=' in its name inside
+ *     the root would be read as a live partition if a crash left it);
+ *  2. the commit point is one manifest at the root (`_graft_rewrite`,
+ *     written to a tmp file and renamed) naming the staging dir and the
+ *     snapshot files the rewrite retires, as table-relative paths;
+ *  3. the retired files are deleted, each staged file moves to the same
+ *     relative path in the table, directories left empty are removed, then
+ *     the staging dir and the manifest.
+ *
+ * Step 3 is safe to run twice. Every rewriter, under the writer lease and
+ * before it reads, replays a committed manifest a crash left, or removes
+ * the staging dirs and tmp manifest of an uncommitted rewrite. One manifest
+ * per rewrite makes a multi-day UPDATE all-or-nothing across a crash.
+ *
+ * A rewrite retires only the snapshot of files it read. A file appended
+ * after that snapshot is neither read, deleted nor named in the manifest,
+ * and directories never move, so a concurrent append survives every path
+ * by construction. Readers are not isolated from step 3: a reader listing a
+ * partition mid-commit can miss its rows.
  *
  * All filesystem access goes through the Hadoop [[FileSystem]] resolved from
  * the path's scheme and the session's Hadoop configuration, so the same code
  * runs against `file://`, HDFS, or an object store connector (rename is not
- * atomic on object stores — see the concurrency contract below, which already
- * assumes no concurrent writer).
- *
- * Concurrency contract: run compaction when no writer is active on the
- * table (the swap is not atomic: a reader listing a partition mid-swap can
- * see it partially populated). The swap never duplicates rows in any crash
- * window:
- *
- *  1. compacted files enter the partition HIDDEN (dot-prefixed — invisible
- *     to Spark's listing); a failure here aborts with the originals intact;
- *  2. a manifest naming the snapshot files is committed (tmp write + rename),
- *     marking the point of no return;
- *  3. snapshot files are deleted, compacted files unhidden, manifest removed.
- *
- * The next [[compact]] of a crashed partition REPLAYS from the manifest
- * (delete the named snapshot files, unhide) when one exists, or sweeps the
- * uncommitted hidden files when none does — both idempotent. Only the
- * SNAPSHOT of files taken at the start is compacted: a file appended after
- * the snapshot is neither read, deleted, nor named in the manifest, so late
- * appends survive every path untouched rather than being duplicated.
+ * atomic on object stores; the manifest still makes every crash window
+ * replayable).
  */
 object Maintenance {
 
   final case class CompactionResult(partition: String, filesBefore: Int, filesAfter: Int)
 
-  private val HiddenPrefix = ".compact_"
-  private val ManifestName = ".compact_manifest"
+  /** The commit manifest at a table root; `_`-prefixed, so readers skip it. */
+  private[graft] val ManifestName = "_graft_rewrite"
+
+  private[sources] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   def compact(
       spark: SparkSession,
@@ -50,86 +59,63 @@ object Maintenance {
       targetBytes: Long = 128L * 1024 * 1024,
       minFilesToCompact: Int = 2): Seq[CompactionResult] = {
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, path)
     require(fs.getFileStatus(base).isDirectory, s"not a table directory: $path")
-    requirePlainParquetTable(fs, base)
-    // compaction merges rows into new unprefixed files — run against a
-    // crashed-but-unreplayed streaming append it would strand that batch's
-    // b<id>_ residue detection and the replay would double-install; fail
-    // fast until the stream recovers (see IdempotentAppend)
-    IdempotentAppend.assertNoUnresolved(fs,
-      new Path(s"$path/_graft_batches"), Seq(path))
-    // the no-concurrent-writer contract above, enforced: a second writer
-    // fails on acquisition instead of corrupting the swap
-    WriterLease.withLease(fs, base) {
-      compactLocked(spark, base, fs, targetBytes, minFilesToCompact)
-    }
+    rewrite(fs, base) { staging =>
+      val done = fs.listStatus(base)
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .toIndexedSeq.flatMap { part =>
+          val name = part.getPath.getName
+          val files = fs.listStatus(part.getPath).filter(_.getPath.getName.endsWith(".parquet"))
+          val nOut = math.max(1,
+            math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)
+          if (files.length < minFilesToCompact || nOut >= files.length) None
+          else {
+            val out = new Path(staging, name)
+            // read exactly the snapshot files, not the directory — anything
+            // appended after the listing must not be double-counted
+            spark.read.parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
+              .repartition(nOut)
+              .write.parquet(out.toString)
+            val fresh = fs.listStatus(out).count(_.getPath.getName.endsWith(".parquet"))
+            Some((files.map(f => s"$name/${f.getPath.getName}").toSeq,
+              CompactionResult(name, files.length, fresh)))
+          }
+        }
+      (done.flatMap(_._1), done.map(_._2))
+    }._1
   }
 
-  private def compactLocked(
-      spark: SparkSession,
-      base: Path,
-      fs: FileSystem,
-      targetBytes: Long,
-      minFilesToCompact: Int): Seq[CompactionResult] = {
-    // sweep staging leftovers of crashed runs (they live OUTSIDE the table
-    // root, so readers never see them — but don't let them accumulate).
-    // Match the exact generated shape (8-hex-char suffix) so a sibling
-    // directory that merely shares the prefix is never touched; concurrent
-    // compactors are already outside the no-concurrent-writer contract.
-    val stagingPattern = (java.util.regex.Pattern.quote(base.getName) +
-      "_compact_[0-9a-f]{8}").r
-    fs.listStatus(base.getParent)
-      .map(_.getPath)
-      .filter(p => stagingPattern.matches(p.getName))
-      .foreach(p => fs.delete(p, true))
-    val parts = fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    parts.toIndexedSeq.flatMap { part =>
-      val dir = part.getPath
-      recoverOrSweep(fs, dir)
-      val files = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-      if (files.length < minFilesToCompact) None
-      else {
-        val bytes = files.map(_.getLen).sum
-        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-        if (nOut >= files.length) None
-        else {
-          // Staging lives OUTSIDE the table root: a directory with '=' in
-          // its name inside the root would be parsed by partition discovery
-          // as a live partition if a crash left it behind.
-          val staging = new Path(base.getParent,
-            s"${base.getName}_compact_${java.util.UUID.randomUUID().toString.take(8)}")
-          // read exactly the snapshot files, not the directory — anything
-          // appended after the listing must not be double-counted
-          spark.read.parquet(files.map(_.getPath.toString).toIndexedSeq: _*)
-            .repartition(nOut)
-            .write.parquet(staging.toString)
-          val fresh = fs.listStatus(staging)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-          // step 1: stage hidden — abortable, originals untouched
-          val hidden = fresh.map { f =>
-            val h = new Path(dir, s"$HiddenPrefix${f.getPath.getName}")
-            if (!fs.rename(f.getPath, h))
-              throw new java.io.IOException(
-                s"cannot stage ${f.getPath} into $dir; partition unchanged")
-            h
-          }
-          // step 2: commit the manifest (atomic-ish: tmp write + rename)
-          writeManifest(fs, dir, files.map(_.getPath.getName).toIndexedSeq)
-          // step 3: delete snapshot + metadata files, unhide, clear manifest
-          files.foreach(f => fs.delete(f.getPath, false))
-          fs.listStatus(dir)
-            .filter { s =>
-              val n = s.getPath.getName
-              n.startsWith("_") || n.endsWith(".crc")
-            }
-            .foreach(s => fs.delete(s.getPath, false))
-          hidden.foreach(h => unhide(fs, dir, h))
-          fs.delete(new Path(dir, ManifestName), false)
-          fs.delete(staging, true)
-          Some(CompactionResult(dir.getName, files.length, fresh.length))
-        }
+  /**
+   * Run one rewrite of the table at `base` under the writer lease. `stage`
+   * reads the table, writes the replacement files under the staging dir it
+   * is given at their table-relative paths, and returns the table-relative
+   * snapshot files they replace with its result; nothing to retire commits
+   * nothing. Returns that result and the table-relative directories the
+   * commit left empty and removed.
+   */
+  private[graft] def rewrite[A](fs: FileSystem, base: Path)(
+      stage: Path => (Seq[String], A)): (A, Seq[String]) = {
+    requirePlainParquetTable(fs, base)
+    // A crashed streaming append that has not replayed yet holds rows the
+    // retry can only find by their b<batchId>_ file names — a rewrite here
+    // would merge them into unprefixed files and the replay would install
+    // the batch a second time. Fail fast instead (see IdempotentAppend).
+    IdempotentAppend.assertNoUnresolved(fs,
+      new Path(base, "_graft_batches"), Seq(base.toString))
+    WriterLease.withLease(fs, base) {
+      // a committed-but-unfinished rewrite shows partitions with retired
+      // rows gone: finish it before reading, or the loss becomes permanent
+      recover(fs, base)
+      val staging = new Path(base.getParent,
+        s"${base.getName}_staging_${java.util.UUID.randomUUID().toString.take(8)}")
+      val (retired, result) = stage(staging)
+      if (retired.isEmpty) {
+        fs.delete(staging, true)
+        (result, Nil)
+      } else {
+        writeManifest(fs, base, staging.getName +: retired)
+        (result, replay(fs, base))
       }
     }
   }
@@ -142,7 +128,7 @@ object Maintenance {
    * names. The marker directory names are each format's fixed, documented
    * layout; a plain Spark parquet write never creates them.
    */
-  private[sources] def requirePlainParquetTable(fs: FileSystem, base: Path): Unit = {
+  private def requirePlainParquetTable(fs: FileSystem, base: Path): Unit = {
     val markers = Seq(
       "_delta_log" -> "Delta Lake",
       ".hoodie" -> "Apache Hudi",
@@ -156,56 +142,67 @@ object Maintenance {
     }
   }
 
-  /**
-   * Finish (or sweep) any crashed compaction swap in every partition of
-   * `base`, for a REWRITER about to read the table: a mid-crashed
-   * partition (manifest committed, snapshot files partially deleted,
-   * compacted files still hidden) visibly MISSES rows that only the
-   * manifest replay restores — a DML that read that view and staged a
-   * rewrite from it would make the loss permanent and then discard the
-   * very recovery state the replay needs. Must run under the writer
-   * lease, before the rewrite's `read` lists its file-index snapshot.
-   */
-  private[sources] def recoverCrashedCompactions(fs: FileSystem, base: Path): Unit = {
-    recoverOrSweep(fs, base) // defensive: a root-level swap state (unused today)
-    fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .foreach(s => recoverOrSweep(fs, s.getPath))
-  }
-
-  /** Finish a crashed swap (manifest committed: delete named snapshot files,
-    * unhide) or discard an uncommitted one (no manifest: drop hidden files). */
-  private def recoverOrSweep(fs: FileSystem, dir: Path): Unit = {
-    val manifest = new Path(dir, ManifestName)
-    val hidden = fs.listStatus(dir)
+  /** Finish a committed rewrite a crash left, then drop what uncommitted
+    * ones left: the tmp manifest and the staging dirs beside the root.
+    * Only the exact generated staging shape (8-hex-char suffix) matches, so
+    * a sibling that merely shares the prefix is never touched. */
+  private def recover(fs: FileSystem, base: Path): Unit = {
+    if (fs.exists(new Path(base, ManifestName))) replay(fs, base)
+    fs.delete(new Path(base, ManifestName + ".tmp"), false)
+    val stagingName = (java.util.regex.Pattern.quote(base.getName) +
+      "_staging_[0-9a-f]{8}").r
+    fs.listStatus(base.getParent)
       .map(_.getPath)
-      .filter(p => p.getName.startsWith(HiddenPrefix) && !p.getName.startsWith(ManifestName))
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      val names = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      names.foreach(n => fs.delete(new Path(dir, n), false))
-      hidden.foreach(h => unhide(fs, dir, h))
-      fs.delete(manifest, false)
-    } else {
-      hidden.foreach(h => fs.delete(h, false))
+      .filter(p => stagingName.matches(p.getName))
+      .foreach(fs.delete(_, true))
+  }
+
+  /** Step 3 of the manifest at `base`; returns the directories it removed.
+    * A directory is removed only when empty, deepest first, by a
+    * non-recursive delete, so a file an appender commits into it survives. */
+  private def replay(fs: FileSystem, base: Path): Seq[String] = {
+    val manifest = new Path(base, ManifestName)
+    val in = fs.open(manifest)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    val staging = new Path(base.getParent, lines.head)
+    val retired = lines.tail
+    retired.foreach(rel => fs.delete(new Path(base, rel), false))
+    if (fs.exists(staging)) moveFiles(fs, staging, base)
+    val removed = retired
+      .flatMap(_.split('/').inits.drop(1).filter(_.nonEmpty).map(_.mkString("/")))
+      .distinct.sortBy(-_.count(_ == '/'))
+      .filter { rel =>
+        val dir = new Path(base, rel)
+        fs.exists(dir) && fs.listStatus(dir).isEmpty && fs.delete(dir, false)
+      }
+    fs.delete(staging, true)
+    fs.delete(manifest, false)
+    removed
+  }
+
+  /** Move every data file under `from` to the same relative path under
+    * `to`; `_`/`.`-prefixed names (`_SUCCESS`, checksums) are not data. */
+  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
+    val (dirs, files) = fs.listStatus(from)
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .partition(_.isDirectory)
+    if (files.nonEmpty) fs.mkdirs(to)
+    files.foreach { s =>
+      val dest = new Path(to, s.getPath.getName)
+      if (!fs.rename(s.getPath, dest))
+        throw new java.io.IOException(
+          s"cannot move ${s.getPath} to $dest; the next rewrite of the table finishes the commit")
     }
-    // tmp manifest from a crash mid-commit is never authoritative
-    fs.delete(new Path(dir, ManifestName + ".tmp"), false)
+    dirs.foreach(d => moveFiles(fs, d.getPath, new Path(to, d.getPath.getName)))
   }
 
-  private def unhide(fs: FileSystem, dir: Path, h: Path): Unit = {
-    val dest = new Path(dir, h.getName.stripPrefix(HiddenPrefix))
-    if (!fs.rename(h, dest))
-      throw new java.io.IOException(s"cannot unhide $h in $dir")
-  }
-
-  private def writeManifest(fs: FileSystem, dir: Path, names: Seq[String]): Unit = {
-    val tmp = new Path(dir, ManifestName + ".tmp")
+  private def writeManifest(fs: FileSystem, base: Path, lines: Seq[String]): Unit = {
+    val tmp = new Path(base, ManifestName + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(names.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (!fs.rename(tmp, new Path(dir, ManifestName)))
-      throw new java.io.IOException(s"cannot commit compaction manifest in $dir")
+    if (!fs.rename(tmp, new Path(base, ManifestName)))
+      throw new java.io.IOException(s"cannot commit the rewrite manifest in $base; table unchanged")
   }
 }

@@ -10,17 +10,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * Cooperative writer-exclusion lease for a table directory.
  *
  * [[Maintenance.compact]] and the partition-rewrite DML path
- * ([[LedgerTables.updateWhere]]/[[LedgerTables.deleteWhere]]) document a
- * "no concurrent writer" contract — their staged swaps are correct only
- * when a single writer mutates the table at a time. The lease turns a
+ * ([[LedgerTables.updateWhere]]/[[LedgerTables.deleteWhere]]) commit
+ * through [[Maintenance.rewrite]], which is correct only when a single
+ * rewriter mutates the table at a time. The lease turns a
  * violation of that contract from silent corruption into a loud error:
  * every writer acquires `_writer_lease` at the table root before touching
  * files and releases it when done. The underscore prefix keeps the file
  * invisible to Spark's data-file listing (of this table and of any parent
  * directory), and holding it requires no access outside the table root.
- * The whole-table rewrite swaps the root's CHILDREN, never the root
- * itself, so the lease file stays in place for its whole lifetime
- * ([[LedgerTables]]).
+ * No rewrite moves a directory, so the lease file stays in place for its
+ * whole lifetime.
  *
  * Mechanics: acquisition is a create-no-overwrite of the lease file
  * (atomic on local filesystems and HDFS), carrying owner id, acquisition
@@ -34,19 +33,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * confirm it is still the SAME stale lease (owner + timestamp identity),
  * delete, and race the exclusive create.
  *
- * Scope: the lease serializes REWRITERS — compaction and the
- * UPDATE/DELETE partition swaps — against each other. Append-only writers
- * ([[LedgerTables.write]], [[graft.streaming.LedgerStream.appendBatch]]) deliberately do
- * not take it, and each rewriter carries its own append-safety argument:
- * compaction reads, deletes, and manifest-names only the snapshot of
- * files listed at its start, so a mid-compaction append is untouched by
- * construction; the DML swaps displace whole trees, so before deleting a
- * displaced tree they move any file NOT in their input snapshot back into
- * the live table (`LedgerTables.rescueLateFiles`) — a concurrent append
- * serializes after the DML instead of being lost, and the swap preserves
- * `_`-prefixed children so an in-flight append's `_temporary` committer
- * dir and the streaming replay markers survive. Serializing appends under
- * the lease would throttle streaming ingest for nothing.
+ * Scope: the lease serializes REWRITERS — compaction and UPDATE/DELETE —
+ * against each other. Append-only writers ([[LedgerTables.write]],
+ * [[graft.streaming.LedgerStream.appendBatch]]) deliberately do not take
+ * it: a rewrite retires only the snapshot of files it read, and reads,
+ * deletes and manifest-names nothing else, so a file appended
+ * mid-rewrite is untouched by construction, as are `_`-prefixed children
+ * (an in-flight append's `_temporary` committer dir, the streaming replay
+ * markers). Serializing appends under the lease would throttle streaming
+ * ingest for nothing.
  *
  * Honest limits of a filesystem without compare-and-swap: a reclaimer
  * that stalls between its identity recheck and the delete can still evict
@@ -57,7 +52,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * (local disks, NFSv4), [[WriterLease.LeaseArbiter.fileLock]] closes even
  * that window — both decisions run atomically under a sidecar FileLock.
  * On object stores without atomic create, the DEFAULT arbiter is advisory
- * — the same caveat the swap itself carries ([[Maintenance]] scaladoc) —
+ * — the same caveat the commit itself carries ([[Maintenance]] scaladoc) —
  * but the arbitration is pluggable ([[WriterLease.LeaseArbiter]]): a
  * backend built on the store's conditional write (If-None-Match /
  * precondition PUT) makes the exclusion decisive there too.
@@ -147,7 +142,7 @@ object WriterLease {
      * `OverlappingFileLockException` rather than queueing overlapping
      * locks from one process); the OS lock then arbitrates across
      * processes. The sidecar is underscore-prefixed (invisible to Spark
-     * listings, preserved by the swap's `_`-children rule) and is itself
+     * listings, never touched by a rewrite) and is itself
      * never deleted — deleting it would race its own lock.
      *
      * This is the second REAL backend behind the [[LeaseArbiter]] seam
@@ -283,7 +278,7 @@ object WriterLease {
    * lease is still ours AND not yet expired, so a holder that stalled past
    * its TTL never clobbers a reclaimer that legitimately took over.
    * Returns false — and logs — when the lease could not be renewed or was
-   * lost; the operation itself is not killed (it may be mid-swap, and
+   * lost; the operation itself is not killed (it may be mid-commit, and
    * stopping it there is worse than racing — the log line is the
    * operator's signal).
    */
@@ -374,7 +369,7 @@ object WriterLease {
               throw new HeldByOtherWriterException(
                 s"table $root is being written by ${l.owner} " +
                   s"(lease expires ${java.time.Instant.ofEpochMilli(l.expiresAtMs)}); " +
-                  "concurrent writers would corrupt the staged swap — retry after " +
+                  "concurrent writers would corrupt the staged rewrite — retry after " +
                   "the lease clears, or breakLease() if the holder is known dead")
             case Some(stale) =>
               // identity-checked reclaim: delete only if the file is still

@@ -259,12 +259,11 @@ object CorpusStream {
     require(crashBatch >= 0 && crashBatch < nFiles,
       s"crashBatch must name one of the $nFiles slices, got $crashBatch")
     val spark = documents.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_x159_")
-    val pending = java.nio.file.Files.createDirectory(base.resolve("pending"))
-    val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
-    val outPath = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    try {
+    EventStream.collectedInTempDir(spark, "graft_x159_") { base =>
+      val pending = java.nio.file.Files.createDirectory(base.resolve("pending"))
+      val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
+      val outPath = base.resolve("out").toString
+      val ckpt = base.resolve("ckpt").toString
       val evs = documents.select(col("doc_id"), col("lang"), col("text"))
       // gate-scale fixture prep, same spool as x154: ntile over doc_id
       // cuts the corpus into nFiles slices (the pipeline is stateless, so
@@ -330,16 +329,9 @@ object CorpusStream {
         .agg(count(lit(1)).as("docs"),
           sum(size(split(lower(col("text")), " ")).cast("long")).as("tokens"))
         .orderBy(col("split"), col("lang"))
-      // materialize before the spool/sink/checkpoint tree is deleted
-      val rows = result.collect()
       require(crashed.get(), "x159: the injected crash never fired — the " +
         "gate would be proving nothing; check crashBatch against the slicing")
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-          case _: java.io.IOException => })
+      result
     }
   }
 

@@ -51,6 +51,24 @@ object EventStream {
     * oracle-gated). */
   private[streaming] val StreamShufflePartitions = 4
 
+  /** Run a gate whose result reads files it writes under a fresh temp
+    * directory named `prefix…`: the bounded result is collected and rebuilt
+    * on `spark`, and the directory is deleted whatever happens. */
+  private[graft] def collectedInTempDir(
+      spark: org.apache.spark.sql.SparkSession, prefix: String)(
+      body: java.nio.file.Path => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val result = body(base)
+      spark.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
+        .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
+          case _: java.io.IOException => })
+    }
+  }
+
   /** A CHILD session (shared SparkContext, own SessionState) carrying the
     * stream-gate shuffle pin. A child, not a session-conf mutation: the
     * verify harness runs queries CONCURRENTLY in one session, so setting
@@ -281,12 +299,11 @@ object EventStream {
     require(nFiles >= 2 && stopAfter >= 1 && stopAfter < nFiles,
       s"need 1 <= stopAfter < nFiles, got $stopAfter/$nFiles")
     val spark = events.sparkSession
-    val base = java.nio.file.Files.createTempDirectory("graft_x154_")
-    val pending = java.nio.file.Files.createDirectory(base.resolve("pending"))
-    val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
-    val outDir = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    try {
+    collectedInTempDir(spark, "graft_x154_") { base =>
+      val pending = java.nio.file.Files.createDirectory(base.resolve("pending"))
+      val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
+      val outDir = base.resolve("out").toString
+      val ckpt = base.resolve("ckpt").toString
       val evs = events.select(
         col("ts").cast("timestamp").as("ts"), col("event_type"), col("event_id"))
       // gate-scale fixture prep: a global ntile over (ts, event_id) cuts
@@ -356,18 +373,10 @@ object EventStream {
         finally q.stop()
       }
 
-      val result = spark.read.parquet(outDir)
+      spark.read.parquet(outDir)
         .filter(col("event_type") =!= "__sentinel")
         .select(col("w.start").cast("date").as("day"), col("event_type"), col("n"))
         .orderBy(col("day"), col("event_type"))
-      // materialize before the spool/sink/checkpoint tree is deleted
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-          case _: java.io.IOException => })
     }
   }
 

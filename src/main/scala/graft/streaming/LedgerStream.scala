@@ -64,10 +64,10 @@ object LedgerStream {
    * instead of duplicating the batch (the window the marker alone left
    * open; downstream exact-dedup remains as defense in depth, no longer
    * the only line). Safe against concurrent DML/compaction without taking
-   * the writer lease: the markers are `_`-prefixed (preserved by the
-   * whole-table swap), and files this append commits mid-rewrite are
-   * rescued out of displaced trees by the DML path (see
-   * [[graft.sources.WriterLease]] scope notes).
+   * the writer lease: a rewrite retires only the snapshot files it read,
+   * so the `_`-prefixed markers and the files this append commits
+   * mid-rewrite are never touched (see [[graft.sources.WriterLease]]
+   * scope notes).
    */
   def appendBatch(path: String)(batch: DataFrame, batchId: Long): Unit = {
     // Hadoop FS like every other table mutation — file://, HDFS, or object

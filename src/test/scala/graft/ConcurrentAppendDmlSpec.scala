@@ -9,13 +9,12 @@ import graft.streaming.LedgerStream
 
 /**
  * The append-vs-DML safety contract (WriterLease scope notes): appenders
- * never take the writer lease, so the DML partition swaps must themselves
- * guarantee that rows committed by a concurrent appender are never lost —
- * late files found in displaced trees are rescued back into the live
- * table, `_`-prefixed metadata children (streaming replay markers, an
- * in-flight append's `_temporary` dir) survive the whole-table swap, and
- * a rename that raced an appender's recreation of a partition dir is
- * unwound rather than silently nesting.
+ * never take the writer lease, so the DML rewrites must themselves
+ * guarantee that rows committed by a concurrent appender are never lost.
+ * They do by construction: a rewrite retires only the snapshot files it
+ * read, directories never move, and `_`-prefixed metadata (streaming
+ * replay markers, an in-flight append's `_temporary` dir) is never
+ * touched, whole-table rewrites included.
  */
 class ConcurrentAppendDmlSpec extends SparkSpec {
 
@@ -83,8 +82,6 @@ class ConcurrentAppendDmlSpec extends SparkSpec {
     LedgerStream.appendBatch(tmp)(batchOf(Seq(1L, 2L), "pending"), 0L)
     LedgerStream.appendBatch(tmp)(batchOf(Seq(3L), "pending"), 1L)
     // declared partitioning != the ledger day layout → whole-table rewrite
-    // (swapContents), the path that used to delete every root metadata
-    // child except the lease
     val n = LedgerTables.updateWhere(spark, tmp, col("record_id") >= 0L,
       Seq("pipeline_status" -> lit("archived")), partitionCols = Seq("pipeline_name"))
     assert(n == 3L)
@@ -108,7 +105,7 @@ class ConcurrentAppendDmlSpec extends SparkSpec {
     LedgerTables.write(batchOf(initialIds, "pending"), tmp)
     raceAppender(tmp, initialIds, 1000L, batches = 5, perBatch = 12) {
       // each pass rewrites every partition that holds a matching row (all
-      // three days), displacing trees a concurrent append may just have
+      // three days), in directories a concurrent append may just have
       // committed into
       for (i <- 0 until 4) flipStatuses(tmp, forward = i % 2 == 0)
     }

@@ -7,12 +7,7 @@ import graft.streaming.LedgerStream
 
 /** Streaming maintenance driven synchronously through MemoryStream. */
 class LedgerStreamSpec extends SparkSpec {
-
-  private case class Run(
-      record_id: Long, pipeline_name: String, index_name: String,
-      query_window_start_ts: java.sql.Timestamp,
-      query_window_end_ts: java.sql.Timestamp,
-      pipeline_status: String, records_count: Double)
+  import LedgerStreamSpec.Run
 
   private def run(id: Long, p: String, status: String, start: String, mins: Int) = {
     val s = java.sql.Timestamp.valueOf(start)
@@ -116,4 +111,15 @@ class LedgerStreamSpec extends SparkSpec {
       assert(out("2024-01-15 11:00:00.0") == 1L)
     } finally q.stop()
   }
+}
+
+object LedgerStreamSpec {
+  /** Top-level, not nested in the spec instance: Spark's generated
+    * deserializer cannot construct an inner class, and would fall back to
+    * interpreted evaluation. */
+  final case class Run(
+      record_id: Long, pipeline_name: String, index_name: String,
+      query_window_start_ts: java.sql.Timestamp,
+      query_window_end_ts: java.sql.Timestamp,
+      pipeline_status: String, records_count: Double)
 }

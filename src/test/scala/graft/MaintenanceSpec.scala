@@ -41,26 +41,31 @@ class MaintenanceSpec extends SparkSpec {
     val parquets = fs.listStatus(dir).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     assert(parquets.length == 2)
-    // Simulate a crash AFTER the manifest commit: file A is staged hidden
-    // (pretend it is the compacted output) and the manifest names A — the
-    // deletes and the unhide never ran.
+    // Simulate a crash AFTER the manifest commit: file A sits in the
+    // staging dir beside the table (pretend it is the compacted output) and
+    // the root manifest names that dir and retires A — the deletes and the
+    // move-in never ran.
     val a = parquets.head
-    val hidden = new Path(dir, s".compact_${a.getName}")
-    assert(fs.rename(a, hidden))
-    val out = fs.create(new Path(dir, ".compact_manifest"), true)
-    out.write(a.getName.getBytes("UTF-8")); out.close()
-    // Recovery replays: delete the (already-moved) original, unhide A.
+    val staging = new Path(s"${tmp}_staging_0badf00d")
+    val stagedDir = new Path(staging, dir.getName)
+    fs.mkdirs(stagedDir)
+    assert(fs.rename(a, new Path(stagedDir, a.getName)))
+    val out = fs.create(new Path(tmp, Maintenance.ManifestName), true)
+    out.write(s"${staging.getName}\n${dir.getName}/${a.getName}".getBytes("UTF-8")); out.close()
+    // Recovery replays: delete the (already-moved) original, move A in.
     Maintenance.compact(spark, tmp, targetBytes = 1L << 30)
     val after = LedgerTables.read(spark, tmp).collect().map(_.toString).sorted.toSeq
     assert(after == before, "manifest recovery must restore the exact data")
     val names = fs.listStatus(dir).map(_.getPath.getName)
     assert(!names.exists(_.startsWith(".compact_")), names.mkString(","))
-    // Simulate a crash BEFORE the manifest commit: hidden file, no manifest.
+    assert(!fs.exists(staging) && !fs.exists(new Path(tmp, Maintenance.ManifestName)))
+    // Simulate a crash BEFORE the manifest commit: a staged file, no manifest.
     val b = fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    val stray = new Path(dir, ".compact_stray.parquet")
+    val stray = new Path(stagedDir, "stray.parquet")
     val in = fs.open(b); val cp = fs.create(stray, true)
     org.apache.hadoop.io.IOUtils.copyBytes(in, cp, 4096, true)
     Maintenance.compact(spark, tmp, targetBytes = 1L << 30)
+    assert(!fs.exists(staging), "an uncommitted staging dir is removed")
     val after2 = LedgerTables.read(spark, tmp).collect().map(_.toString).sorted.toSeq
     assert(after2 == before, "uncommitted hidden files must be swept, not surfaced")
   }
@@ -121,18 +126,17 @@ class MaintenanceSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val snapshot = parquets()
     assert(snapshot.length == 3)
-    // Build a real compacted file holding the partition's FULL data, then
-    // simulate a crash mid-step-3: manifest committed, ONE snapshot file
-    // already deleted, compacted file still hidden. The visible view now
-    // MISSES that file's rows — exactly what a DML must not read.
-    val stage = new Path(java.nio.file.Files.createTempDirectory("graft_dmlrec_st").toString)
+    // Build a real compacted file holding the partition's FULL data in a
+    // staging dir beside the table, then simulate a crash mid-step-3:
+    // manifest committed, ONE snapshot file already deleted, compacted file
+    // not moved in yet. The visible view now MISSES that file's rows —
+    // exactly what a DML must not read.
+    val stage = new Path(s"${tmp}_staging_0badf00d")
     spark.read.parquet(dir.toString).coalesce(1).write.mode("overwrite")
-      .parquet(stage.toString)
-    val compacted = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).head
-    assert(fs.rename(compacted, new Path(dir, s".compact_${compacted.getName}")))
-    val out = fs.create(new Path(dir, ".compact_manifest"), true)
-    out.write(snapshot.map(_.getName).mkString("\n").getBytes("UTF-8")); out.close()
+      .parquet(new Path(stage, dir.getName).toString)
+    val out = fs.create(new Path(tmp, Maintenance.ManifestName), true)
+    out.write((stage.getName +: snapshot.map(p => s"${dir.getName}/${p.getName}").toSeq)
+      .mkString("\n").getBytes("UTF-8")); out.close()
     fs.delete(snapshot.head, false)
     assert(LedgerTables.read(spark, tmp).count() < 30,
       "fixture must visibly miss rows pre-recovery")

@@ -1,0 +1,134 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions._
+
+import graft.sources.{LedgerTables, Maintenance, NioLocalFileSystem, WriterLease}
+import graft.streaming.LedgerStream
+
+/** Failure-path coverage for the one rewrite commit (`Maintenance.rewrite`):
+  * a fault before the manifest leaves the table as it was, a fault after it
+  * is finished by the next writer, and neither touches an appender's files,
+  * the writer lease or the stream's batch markers. */
+class RewriteCommitSpec extends SparkSpec {
+
+  /** The session's local filesystem, whose rename can be made to fail for
+    * chosen paths or preceded by an injected action. */
+  private class FaultyFs extends NioLocalFileSystem {
+    @volatile var failWhen: (Path, Path) => Boolean = (_, _) => false
+    @volatile var beforeRename: (Path, Path) => Unit = (_, _) => ()
+    override def rename(src: Path, dst: Path): Boolean = {
+      beforeRename(src, dst)
+      if (failWhen(src, dst)) false else super.rename(src, dst)
+    }
+  }
+
+  private def newFs(): FaultyFs = {
+    val fs = new FaultyFs
+    fs.initialize(java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+    fs
+  }
+
+  private def rowsOn(ids: Seq[Long], day: Int, status: String) = ledgerOf(ids.map { i =>
+    (i, "p", "i", s"2024-01-$day 10:00:00", s"2024-01-$day 11:00:00", status)
+  }: _*)
+
+  /** 30 pending rows over the days 2024-01-15, 16 and 17. */
+  private def threeDayLedger(name: String): String = {
+    val path = java.nio.file.Files.createTempDirectory(name).toString + "/ledger"
+    LedgerTables.write((15 to 17).map(d =>
+      rowsOn((0L until 30L).filter(_ % 3 == d - 15), d, "pending")).reduce(_ union _), path)
+    path
+  }
+
+  private def rows(path: String): Seq[(Long, String)] =
+    LedgerTables.read(spark, path).select("record_id", "pipeline_status").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+
+  private def complete(path: String, fs: FaultyFs): Long =
+    LedgerTables.update(spark, path, col("pipeline_status") === "pending",
+      Seq("pipeline_status" -> lit("completed")), Nil)(fs).rows
+
+  private def stagingDirs(fs: FaultyFs, path: String): Seq[String] = {
+    val base = new Path(path)
+    fs.listStatus(base.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(s"${base.getName}_staging_")).toSeq
+  }
+
+  private def isStagedMove(src: Path): Boolean =
+    src.toString.contains("_staging_") && src.getName.endsWith(".parquet")
+
+  test("a rename failing mid-commit of a 3-day UPDATE is finished by the next UPDATE") {
+    val path = threeDayLedger("graft_rc_mid")
+    val fs = newFs()
+    val moves = new AtomicInteger(0)
+    fs.failWhen = (src, _) => isStagedMove(src) && moves.incrementAndGet() == 2
+    intercept[java.io.IOException] { complete(path, fs) }
+    assert(fs.exists(new Path(path, Maintenance.ManifestName)), "the commit point was passed")
+    assert(rows(path).length < 30, "fixture must read partially committed before the replay")
+    fs.failWhen = (_, _) => false
+    // the next writer replays the manifest under its lease before it reads
+    assert(complete(path, fs) == 0L)
+    assert(rows(path) == (0L until 30L).map(_ -> "completed"),
+      "every day holds its updated rows exactly once")
+    assert(!fs.exists(new Path(path, Maintenance.ManifestName)))
+    assert(stagingDirs(fs, path).isEmpty)
+    (15 to 17).foreach(d =>
+      assert(fs.exists(new Path(path, s"query_window_start_day=2024-01-$d"))))
+  }
+
+  test("a failure before the commit leaves the table as it was; the next writer removes the staging dir") {
+    val path = threeDayLedger("graft_rc_pre")
+    val before = rows(path)
+    val fs = newFs()
+    fs.failWhen = (_, dst) => dst.getName == Maintenance.ManifestName
+    intercept[java.io.IOException] { complete(path, fs) }
+    assert(rows(path) == before)
+    assert(stagingDirs(fs, path).length == 1, "the uncommitted stage is left for the next writer")
+    Maintenance.compact(spark, path)
+    assert(stagingDirs(fs, path).isEmpty)
+    assert(!fs.exists(new Path(path, Maintenance.ManifestName + ".tmp")))
+    assert(rows(path) == before)
+  }
+
+  test("a file appended into an affected day between the snapshot and the commit survives") {
+    val path = threeDayLedger("graft_rc_late")
+    val fs = newFs()
+    // the appender commits into 2024-01-15 after the rewrite read the table,
+    // just before its manifest lands
+    fs.beforeRename = (_, dst) =>
+      if (dst.getName == Maintenance.ManifestName)
+        LedgerStream.appendBatch(path)(rowsOn(Seq(100L, 101L), 15, "appended"), 0L)
+    assert(complete(path, fs) == 30L)
+    assert(rows(path) ==
+      (0L until 30L).map(_ -> "completed") ++ Seq(100L -> "appended", 101L -> "appended"))
+  }
+
+  test("the writer lease and the stream's batch markers are untouched by every rewrite") {
+    val path = java.nio.file.Files.createTempDirectory("graft_rc_meta").toString + "/ledger"
+    LedgerStream.appendBatch(path)(rowsOn(Seq(1L, 2L), 15, "pending"), 0L)
+    LedgerStream.appendBatch(path)(rowsOn(Seq(3L, 4L), 16, "pending"), 1L)
+    val fs = newFs()
+    val markerDir = new Path(path, "_graft_batches")
+    def markers() = fs.listStatus(markerDir)
+      .map(s => s.getPath.getName -> s.getModificationTime).toMap
+    val before = markers()
+    // every staged file moves in while this rewrite's own lease is held
+    val owners = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+    fs.beforeRename = (src, _) =>
+      if (isStagedMove(src)) owners += WriterLease.read(fs, new Path(path)).map(_.owner)
+    assert(complete(path, fs) == 4L)
+    assert(LedgerTables.delete(spark, path, col("record_id") === 1L, Nil)(fs).rows == 1L)
+    // declared partitioning other than the day layout: the whole table
+    assert(LedgerTables.update(spark, path, col("record_id") >= 0L,
+      Seq("pipeline_status" -> lit("archived")), Seq("pipeline_name"))(fs).rows == 3L)
+    assert(owners.nonEmpty && owners.forall(_.nonEmpty), owners.mkString(","))
+    assert(markers() == before)
+    assert(WriterLease.read(fs, new Path(path)).isEmpty, "the lease is released")
+    // a replayed batch still no-ops on its marker
+    LedgerStream.appendBatch(path)(rowsOn(Seq(1L, 2L), 15, "pending"), 0L)
+    assert(rows(path) == Seq(2L, 3L, 4L).map(_ -> "archived"))
+  }
+}

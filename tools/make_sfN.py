@@ -1,8 +1,7 @@
 #!/usr/bin/env python3
 """Synthesize an N-times scale probe from the driver's sf0.1 tables.
 
-Generalizes tools/make_sf1.py (fixed 10x) to an arbitrary factor, in two
-modes:
+Two modes (FACTOR 10 in replica mode is the sf1 probe):
 
 REPLICA mode (default): fact tables are replicated FACTOR times with a
 10^7 id stride per replica; dimension tables are copied once, so
@@ -84,7 +83,7 @@ import duckdb
 SRC = "/root/testdata/sf0.1"
 STRIDE = 10_000_000
 
-# table -> columns to offset per replica (same map as make_sf1.py)
+# table -> columns to offset per replica
 OFFSETS = {
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
