@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.Maintenance
 
 /**
  * Near-duplicate detection over the `documents` table (SURVEY.md §2.4).
@@ -285,72 +288,38 @@ object DedupOps {
    * can then wait for the next maintenance window — reads already
    * subtract them); a content-CHANGED doc re-appends under its old id and
    * therefore REQUIRES the compaction between retire and append, one
-   * bounded rewrite per snapshot regardless of how many docs changed. The
-   * delta-reprocess spec pins store-read equality with a from-scratch
-   * rebuild over the v2 snapshot for the full add/change/remove case.
+   * bounded rewrite per snapshot regardless of how many docs changed. That
+   * rewrite is the one commit for every table rewrite, and deletes only
+   * the tombstones it read ([[compactLshStore]]). The delta-reprocess spec
+   * pins store-read equality with a from-scratch rebuild over the v2
+   * snapshot for the full add/change/remove case.
    */
   def retireLshStore(ids: DataFrame, path: String): Unit =
     ids.select(col("doc_id")).write.mode("append").parquet(s"$path/tombstones")
 
   /**
-   * Physically drop tombstoned rows and clear the tombstone table —
-   * bounded store rewrite, run at maintenance cadence (the read-side
-   * anti-join cost grows with the tombstone table, not the store, so
-   * compaction frequency trades write amplification against read
-   * overhead). The rewrite goes through a sibling directory, then the old
-   * store is renamed ASIDE before the new one renames into place — the
-   * live path always points at a complete store except for the instant
-   * between the two renames, and a crash in that instant is repaired by
-   * the retry's recovery step (restore from `_old` if the live path is
-   * missing), so no crash point loses both copies. The tombstone table is
-   * cleared LAST: replaying the anti-join over an already-compacted store
-   * is a harmless no-op, whereas clearing early could resurrect rows.
+   * Physically drop tombstoned rows — bounded store rewrite, run at
+   * maintenance cadence (the read-side anti-join cost grows with the
+   * tombstone table, not the store, so compaction frequency trades write
+   * amplification against read overhead), on the one commit for every
+   * table rewrite: `shingles` and `bands` each commit through
+   * [[Maintenance.rewrite]] against one tombstone snapshot, both checked
+   * first against the store root's stream markers
+   * ([[Maintenance.dropRetired]]).
    */
-  def compactLshStore(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    // same rewrite-vs-crashed-append exclusion as ledger DML/compaction:
-    // a streaming batch that crashed before its commit marker must replay
-    // BEFORE its rows are merged into unprefixed files (IdempotentAppend)
-    graft.sources.IdempotentAppend.assertNoUnresolved(fs,
-      new org.apache.hadoop.fs.Path(s"$path/_graft_batches"),
-      Seq(s"$path/shingles", s"$path/bands"))
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    Seq("shingles", "bands").foreach { rel =>
-      val cur = new org.apache.hadoop.fs.Path(s"$path/$rel")
-      val old = new org.apache.hadoop.fs.Path(s"$path/${rel}_old")
-      // recovery from a crash between the two renames of a prior attempt
-      if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur)
-    }
-    if (!fs.exists(tomb)) return
-    Seq("shingles", "bands").foreach { rel =>
-      val cur = new org.apache.hadoop.fs.Path(s"$path/$rel")
-      val old = new org.apache.hadoop.fs.Path(s"$path/${rel}_old")
-      val next = new org.apache.hadoop.fs.Path(s"$path/${rel}_compact")
-      spark.read.parquet(cur.toString)
-        .join(spark.read.parquet(s"$path/tombstones"), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(next.toString)
-      if (fs.exists(old)) fs.delete(old, true) // leftover from a crashed attempt
-      fs.rename(cur, old)
-      fs.rename(next, cur)
-      fs.delete(old, true)
-    }
-    fs.delete(tomb, true)
+  def compactLshStore(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    Maintenance.dropRetired(spark, Maintenance.fileSystem(spark, path),
+      new Path(root, "tombstones"), "doc_id", new Path(root, "_graft_batches"),
+      Seq(new Path(root, "shingles"), new Path(root, "bands")))
   }
 
   /** Store read with tombstones subtracted (shared by the incremental
     * detector; the anti-join is O(tombstones) broadcast-shaped between
     * compactions). */
-  private def loadStoreRelation(
-      spark: org.apache.spark.sql.SparkSession, path: String, rel: String): DataFrame = {
-    val df = spark.read.parquet(s"$path/$rel")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")))
-      df.join(broadcast(spark.read.parquet(s"$path/tombstones").distinct()),
-        Seq("doc_id"), "left_anti")
-    else df
-  }
+  private def loadStoreRelation(spark: SparkSession, path: String, rel: String): DataFrame =
+    Maintenance.withoutRetired(
+      spark.read.parquet(s"$path/$rel"), new Path(path, "tombstones"), "doc_id")
 
   /**
    * Incremental MinHash/LSH near-dup pairs for an appended batch against

@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSimilarityF32
+import graft.sources.Maintenance
 
 /**
  * Similarity search over the `embeddings` table (`array<float>`, 64-dim) and
@@ -1407,35 +1409,24 @@ object SimilarityOps {
    * protocol is the same: retire(stale) → [[compactIvfIndex]] →
    * [[appendIvfIndex]](delta) — a changed vector re-appends under its old
    * vec_id, so the physical drop must land between retire and re-append.
+   * That drop is the one commit for every table rewrite, and deletes only
+   * the tombstones it read: a retirement landing mid-compaction stays.
    */
   def retireIvfIndex(ids: DataFrame, path: String): Unit =
     ids.select(col("vec_id")).write.mode("append").parquet(s"${path}_tombstones")
 
-  /** Physically drop tombstoned vectors (per-cell rewrite through a
-    * sibling directory; the old index renames ASIDE before the compacted
-    * one renames into place, so no crash point loses both copies — same
-    * recovery protocol as [[DedupOps.compactLshStore]]; the
-    * partitionBy(cid) layout is preserved so probing stays partition
-    * pruning) and clear the tombstone table last. */
-  def compactIvfIndex(spark: SparkSession, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val tomb = new org.apache.hadoop.fs.Path(s"${path}_tombstones")
-    val cur = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"${path}_old")
-    // recovery from a crash between the two renames of a prior attempt
-    if (!fs.exists(cur) && fs.exists(old)) fs.rename(old, cur)
-    if (!fs.exists(tomb)) return
-    val next = new org.apache.hadoop.fs.Path(s"${path}_compact")
-    spark.read.parquet(path)
-      .join(spark.read.parquet(s"${path}_tombstones"), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cid").parquet(next.toString)
-    if (fs.exists(old)) fs.delete(old, true) // leftover from a crashed attempt
-    fs.rename(cur, old)
-    fs.rename(next, cur)
-    fs.delete(old, true)
-    fs.delete(tomb, true)
-  }
+  /** Physically drop tombstoned vectors, on the one commit for every table
+    * rewrite: the index commits through [[Maintenance.rewrite]] in its
+    * partitionBy(cid) layout (probing stays partition pruning), refusing
+    * while an `ivfIngestBatch` append is unresolved, and only the tombstone
+    * files read are deleted, last — a vector or a retirement appended
+    * mid-compaction survives it (see [[Maintenance.dropRetired]]). */
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    compactIvfIndex(spark, path, Maintenance.fileSystem(spark, path))
+
+  private[graft] def compactIvfIndex(spark: SparkSession, path: String, fs: FileSystem): Unit =
+    Maintenance.dropRetired(spark, fs, new Path(s"${path}_tombstones"), "vec_id",
+      new Path(path, "_graft_batches"), Seq(new Path(path)), Seq("cid"))
 
   /** [[queryIvfIndex]] against the LIVE view of a possibly-tombstoned
     * index path: subtracts `<path>_tombstones` when present (broadcast
@@ -1447,17 +1438,9 @@ object SimilarityOps {
       queryVecId: Long,
       k: Int = 10,
       nProbe: Int = 12): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val index = spark.read.parquet(path)
-    val live =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"${path}_tombstones")))
-        index.join(broadcast(
-          spark.read.parquet(s"${path}_tombstones").distinct()),
-          Seq("vec_id"), "left_anti")
-      else index
-    queryIvfIndex(live, spark.read.parquet(s"${path}_centroids"),
-      queryVec, queryVecId, k, nProbe)
+    val tombstones = new Path(s"${path}_tombstones")
+    queryIvfIndex(Maintenance.withoutRetired(spark.read.parquet(path), tombstones, "vec_id"),
+      spark.read.parquet(s"${path}_centroids"), queryVec, queryVecId, k, nProbe)
   }
 
   /** Query the persisted IVF index: prune to the `nProbe` closest cells.

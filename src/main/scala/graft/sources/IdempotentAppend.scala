@@ -93,9 +93,11 @@ object IdempotentAppend {
 
   /** Fail fast if any append into `tablePaths` is ABANDONED (stage dir
     * present, commit marker in `markerDir` absent, and the stage has been
-    * quiet longer than `graceMs`). Called by the partition-rewrite entry
-    * points (ledger DML, compaction, LSH-store compaction) BEFORE they
-    * read: rewriting a table that still owes a crashed batch its replay
+    * quiet longer than `graceMs`). Called BEFORE it reads by
+    * [[Maintenance.rewrite]], the one commit for every table rewrite: ledger
+    * DML and compaction, and the LSH-store and IVF-index compactions (which
+    * check every table they rewrite before the first). Rewriting a table
+    * that still owes a crashed batch its replay
     * would merge the crashed attempt's `b<id>_`-prefixed rows into
     * unprefixed files, and the replay would then install the batch a
     * second time.

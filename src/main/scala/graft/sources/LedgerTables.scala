@@ -164,7 +164,8 @@ object LedgerTables {
       fs: FileSystem)(
       transformFor: DataFrame => (DataFrame, Column) => DataFrame): Rewritten = {
     val base = new Path(path)
-    val ((rows, days), removed) = Maintenance.rewrite(fs, base) { staging =>
+    val markers = new Path(base, "_graft_batches")
+    val ((rows, days), removed) = Maintenance.rewrite(fs, base, markers) { staging =>
       val ledger = read(spark, path)
       // resolve the transform FIRST: its validation must fire even when
       // zero rows match and the rewrite below short-circuits
@@ -187,7 +188,7 @@ object LedgerTables {
         val writer = transform(slice, predicate).write.mode(SaveMode.Overwrite)
         (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
           .parquet(staging.toString)
-        val retired = snapshotRelPaths(fs, base, ledger)
+        val retired = Maintenance.snapshotRelPaths(fs, base, ledger)
           .filter(rel => days.isEmpty || days.exists(d => rel.startsWith(s"$DayDir$d/")))
         (retired, (affected, days))
       }
@@ -195,19 +196,5 @@ object LedgerTables {
     // a day whose every row was deleted: staging produced no file for it,
     // and no concurrent appender has committed one since
     Rewritten(rows, days.filter(d => removed.contains(DayDir + d)))
-  }
-
-  /** The rewrite's input files as table-relative paths (scheme-free, so the
-    * comparison is immune to URI slash/qualification differences). The
-    * parquet read's file index is listed eagerly at [[read]], so this is
-    * exactly the set the staged rewrite transforms, and the set it retires
-    * by table-relative path. */
-  private def snapshotRelPaths(fs: FileSystem, base: Path, ledger: DataFrame): Seq[String] = {
-    val basePath = fs.makeQualified(base).toUri.getPath.stripSuffix("/")
-    ledger.inputFiles.toSeq.map { f =>
-      val p = new Path(f).toUri.getPath
-      require(p.startsWith(basePath + "/"), s"input file $f is outside the table root $base")
-      p.substring(basePath.length + 1)
-    }
   }
 }

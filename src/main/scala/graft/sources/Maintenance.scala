@@ -1,20 +1,24 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /**
- * Table maintenance for the day-partitioned ledger, and the one way a
- * ledger table's files are replaced. Streaming ingest and frequent small
- * appends fragment partitions into many tiny parquet files; at 100 TB that
- * multiplies scan tasks and footer reads. [[compact]] rewrites each
+ * Table maintenance for the day-partitioned ledger, and one commit for
+ * every table rewrite: the ledger's, and the compactions of the persisted
+ * LSH store and IVF index ([[dropRetired]]). Streaming ingest and frequent
+ * small appends fragment partitions into many tiny parquet files; at 100 TB
+ * that multiplies scan tasks and footer reads. [[compact]] rewrites each
  * fragmented partition into ceil(bytes/target) files — one distributed job
  * per partition, untouched partitions keep their files.
  *
- * Every rewrite — compaction and the UPDATE/DELETE of [[LedgerTables]] —
- * commits through [[rewrite]]:
+ * Every rewrite — compaction, the UPDATE/DELETE of [[LedgerTables]] and the
+ * store compactions of [[graft.operators.DedupOps]] and
+ * [[graft.operators.SimilarityOps]] — commits through [[rewrite]]:
  *
  *  1. Spark writes the replacement rows, in the table's layout, to a
  *     staging dir BESIDE the table root (a dir with '=' in its name inside
@@ -50,7 +54,7 @@ object Maintenance {
   /** The commit manifest at a table root; `_`-prefixed, so readers skip it. */
   private[graft] val ManifestName = "_graft_rewrite"
 
-  private[sources] def fileSystem(spark: SparkSession, path: String): FileSystem =
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   def compact(
@@ -61,7 +65,7 @@ object Maintenance {
     val base = new Path(path)
     val fs = fileSystem(spark, path)
     require(fs.getFileStatus(base).isDirectory, s"not a table directory: $path")
-    rewrite(fs, base) { staging =>
+    rewrite(fs, base, new Path(base, "_graft_batches")) { staging =>
       val done = fs.listStatus(base)
         .filter(s => s.isDirectory && s.getPath.getName.contains("="))
         .toIndexedSeq.flatMap { part =>
@@ -92,17 +96,18 @@ object Maintenance {
    * is given at their table-relative paths, and returns the table-relative
    * snapshot files they replace with its result; nothing to retire commits
    * nothing. Returns that result and the table-relative directories the
-   * commit left empty and removed.
+   * commit left empty and removed. `markerDir` holds the commit markers of
+   * the streams appending to the table: `<table>/_graft_batches` for the
+   * ledger and the IVF index, the store root's for both LSH store tables.
    */
-  private[graft] def rewrite[A](fs: FileSystem, base: Path)(
+  private[graft] def rewrite[A](fs: FileSystem, base: Path, markerDir: Path)(
       stage: Path => (Seq[String], A)): (A, Seq[String]) = {
     requirePlainParquetTable(fs, base)
     // A crashed streaming append that has not replayed yet holds rows the
     // retry can only find by their b<batchId>_ file names — a rewrite here
     // would merge them into unprefixed files and the replay would install
     // the batch a second time. Fail fast instead (see IdempotentAppend).
-    IdempotentAppend.assertNoUnresolved(fs,
-      new Path(base, "_graft_batches"), Seq(base.toString))
+    IdempotentAppend.assertNoUnresolved(fs, markerDir, Seq(base.toString))
     WriterLease.withLease(fs, base) {
       // a committed-but-unfinished rewrite shows partitions with retired
       // rows gone: finish it before reading, or the loss becomes permanent
@@ -119,6 +124,64 @@ object Maintenance {
       }
     }
   }
+
+  /**
+   * Physically drop tombstoned rows from a persisted store: one [[rewrite]]
+   * per table in `tables` without the rows whose `key` the tombstone table
+   * names, staged in the table's `partitionCols` layout. Every table is
+   * checked for an unresolved streaming append before the first is
+   * rewritten, and all are rewritten against ONE snapshot of the tombstone
+   * files. Once every table has committed, exactly those tombstone files
+   * are deleted, and the tombstone directory goes when no data file is
+   * left in it: a retirement appended meanwhile stays, and still subtracts
+   * at read time until the next compaction.
+   */
+  private[graft] def dropRetired(spark: SparkSession, fs: FileSystem, tombstones: Path,
+      key: String, markerDir: Path, tables: Seq[Path], partitionCols: Seq[String] = Nil): Unit = {
+    if (!fs.exists(tombstones)) return
+    IdempotentAppend.assertNoUnresolved(fs, markerDir, tables.map(_.toString))
+    val retired = spark.read.parquet(tombstones.toString)
+    tables.foreach { base =>
+      rewrite(fs, base, markerDir) { staging =>
+        val table = spark.read.parquet(base.toString)
+        val w = table.join(retired, Seq(key), "left_anti").write.mode(SaveMode.Overwrite)
+        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+          .parquet(staging.toString)
+        (snapshotRelPaths(fs, base, table), ())
+      }
+    }
+    retired.inputFiles.foreach(f => fs.delete(new Path(new URI(f)), false))
+    if (fs.listStatus(tombstones).forall(s => s.isFile && isHidden(s.getPath)))
+      fs.delete(tombstones, true)
+  }
+
+  /** `table` without the rows whose `key` the tombstone table at
+    * `tombstones` names, if there is one: the live read of a persisted
+    * store between compactions (a broadcast anti-join, O(tombstones)). */
+  private[graft] def withoutRetired(table: DataFrame, tombstones: Path, key: String): DataFrame = {
+    val spark = table.sparkSession
+    if (!fileSystem(spark, tombstones.toString).exists(tombstones)) table
+    else table.join(broadcast(spark.read.parquet(tombstones.toString).distinct()),
+      Seq(key), "left_anti")
+  }
+
+  /** A rewrite's input files as table-relative paths (scheme-free, so the
+    * comparison is immune to URI slash/qualification differences). The
+    * parquet read's file index is listed eagerly when the DataFrame is
+    * made, so this is exactly the set the staged rewrite transforms, and
+    * the set it retires by table-relative path. */
+  private[graft] def snapshotRelPaths(fs: FileSystem, base: Path, table: DataFrame): Seq[String] = {
+    val basePath = fs.makeQualified(base).toUri.getPath.stripSuffix("/")
+    table.inputFiles.toSeq.map { f =>
+      val p = new URI(f).getPath
+      require(p.startsWith(basePath + "/"), s"input file $f is outside the table root $base")
+      p.substring(basePath.length + 1)
+    }
+  }
+
+  /** `_`/`.`-prefixed names (`_SUCCESS`, checksums, markers) are not data. */
+  private def isHidden(p: Path): Boolean =
+    p.getName.startsWith("_") || p.getName.startsWith(".")
 
   /**
    * Refuse to operate on a directory that carries another table format's
@@ -181,11 +244,9 @@ object Maintenance {
     removed
   }
 
-  /** Move every data file under `from` to the same relative path under
-    * `to`; `_`/`.`-prefixed names (`_SUCCESS`, checksums) are not data. */
+  /** Move every data file under `from` to the same relative path under `to`. */
   private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
-    val (dirs, files) = fs.listStatus(from)
-      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+    val (dirs, files) = fs.listStatus(from).filterNot(s => isHidden(s.getPath))
       .partition(_.isDirectory)
     if (files.nonEmpty) fs.mkdirs(to)
     files.foreach { s =>

@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /**
  * Cooperative writer-exclusion lease for a table directory.
  *
- * [[Maintenance.compact]] and the partition-rewrite DML path
- * ([[LedgerTables.updateWhere]]/[[LedgerTables.deleteWhere]]) commit
- * through [[Maintenance.rewrite]], which is correct only when a single
+ * [[Maintenance.compact]], the partition-rewrite DML path
+ * ([[LedgerTables.updateWhere]]/[[LedgerTables.deleteWhere]]) and the
+ * LSH-store and IVF-index compactions commit through
+ * [[Maintenance.rewrite]], which is correct only when a single
  * rewriter mutates the table at a time. The lease turns a
  * violation of that contract from silent corruption into a loud error:
  * every writer acquires `_writer_lease` at the table root before touching
@@ -33,12 +34,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * confirm it is still the SAME stale lease (owner + timestamp identity),
  * delete, and race the exclusive create.
  *
- * Scope: the lease serializes REWRITERS — compaction and UPDATE/DELETE —
- * against each other. Append-only writers ([[LedgerTables.write]],
- * [[graft.streaming.LedgerStream.appendBatch]]) deliberately do not take
- * it: a rewrite retires only the snapshot of files it read, and reads,
- * deletes and manifest-names nothing else, so a file appended
- * mid-rewrite is untouched by construction, as are `_`-prefixed children
+ * Scope: the lease serializes REWRITERS — one commit for every table
+ * rewrite: ledger compaction and UPDATE/DELETE, and the store compactions
+ * — against each other. Append-only writers ([[LedgerTables.write]],
+ * [[graft.streaming.LedgerStream.appendBatch]], the store appends and
+ * tombstone retirements) deliberately do not take it: a rewrite retires
+ * only the snapshot of files it read, and reads, deletes and
+ * manifest-names nothing else, so a file appended mid-rewrite is
+ * untouched by construction, as are `_`-prefixed children
  * (an in-flight append's `_temporary` committer dir, the streaming replay
  * markers). Serializing appends under the lease would throttle streaming
  * ingest for nothing.

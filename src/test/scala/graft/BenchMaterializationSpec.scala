@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
  * the pruning exists (so nobody "simplifies" the bench back to count())
  * and the noop write really executes the pruned work.
  */
-class BenchMaterializationSpec extends AnyFunSuite {
+class BenchMaterializationSpec extends AnyFunSuite with TempDirs {
 
   test("count() prunes a global aggregate's expressions; noop write does not") {
     val spark = SparkSpec.spark
@@ -23,7 +23,7 @@ class BenchMaterializationSpec extends AnyFunSuite {
 
     // A parquet table large enough that "read the text column" is clearly
     // distinguishable from "read the footer" in task input metrics.
-    val dir = java.nio.file.Files.createTempDirectory("bench_mat").toString
+    val dir = tempDir("bench_mat").toString
     (1 to 20000).map(i => (i.toLong, s"document text body $i " * 10))
       .toDF("doc_id", "text")
       .repartition(4)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** What a bench record carries besides its timings: the host facts, the
   * per-query resource counters, and a JSON encoding that survives odd
   * fixture paths. */
-class BenchRecordSpec extends AnyFunSuite {
+class BenchRecordSpec extends AnyFunSuite with TempDirs {
 
   test("current boot fingerprint is readable on this host (Linux)") {
     // the bench host is Linux in every environment this repo targets; if
@@ -25,7 +25,7 @@ class BenchRecordSpec extends AnyFunSuite {
 
   test("records round-trip an sf holding quotes and backslashes") {
     import scala.collection.immutable.VectorMap
-    val f = java.nio.file.Files.createTempDirectory("bench_record").resolve("b.json")
+    val f = tempDir("bench_record").resolve("b.json")
     val odd = """/data/an "odd" \sf0.1"""
     java.nio.file.Files.write(f, Json.write(VectorMap(
       "metric" -> "total_steady", "queries" -> VectorMap("a1" -> 0.35),

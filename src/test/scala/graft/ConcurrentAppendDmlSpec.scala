@@ -78,7 +78,7 @@ class ConcurrentAppendDmlSpec extends SparkSpec {
   }
 
   test("_graft_batches replay markers survive a whole-table DML swap") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mk").toString
+    val tmp = tempDir("graft_mk").toString
     LedgerStream.appendBatch(tmp)(batchOf(Seq(1L, 2L), "pending"), 0L)
     LedgerStream.appendBatch(tmp)(batchOf(Seq(3L), "pending"), 1L)
     // declared partitioning != the ledger day layout → whole-table rewrite
@@ -100,7 +100,7 @@ class ConcurrentAppendDmlSpec extends SparkSpec {
   }
 
   test("concurrent appendBatch during looping DML swaps never loses rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cc").toString
+    val tmp = tempDir("graft_cc").toString
     val initialIds = (0L until 30L)
     LedgerTables.write(batchOf(initialIds, "pending"), tmp)
     raceAppender(tmp, initialIds, 1000L, batches = 5, perBatch = 12) {
@@ -112,7 +112,7 @@ class ConcurrentAppendDmlSpec extends SparkSpec {
   }
 
   test("appends survive interleaved DML swaps AND compactions") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cx").toString
+    val tmp = tempDir("graft_cx").toString
     val initialIds = (0L until 30L)
     // fragmented on purpose so every compaction pass has real work
     LedgerTables.write(batchOf(initialIds, "pending").repartition(4), tmp)

@@ -201,7 +201,7 @@ class CorpusModelSpec extends SparkSpec {
     val docs = docsOf(
       (1L, "a a b c", "en", "s1"),
       (2L, "b b a", "en", "s2"))
-    val tmp = java.nio.file.Files.createTempDirectory("drift_log").toString + "/log"
+    val tmp = tempDir("drift_log").toString + "/log"
     val sink = graft.streaming.CorpusStream.driftMonitorBatch(ref, tmp)(_, _)
     // two micro-batches, one source each
     sink(docs.filter(col("doc_id") === 1L), 0L)
@@ -228,7 +228,7 @@ class CorpusModelSpec extends SparkSpec {
       (1L, "alpha bravo candy delta echos", "en", "a"),
       (2L, "alpha bravo candy delta echos", "en", "a"),
       (3L, "bravo candy delta", "en", "b"))
-    val tmp = java.nio.file.Files.createTempDirectory("scorecard_log").toString + "/log"
+    val tmp = tempDir("scorecard_log").toString + "/log"
     val sink = graft.streaming.CorpusStream.scorecardBatch(tmp, minWords = 2)(_, _)
     sink(docs.filter(col("doc_id") <= 2L), 0L)
     sink(docs.filter(col("doc_id") === 3L), 1L)

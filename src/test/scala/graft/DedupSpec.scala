@@ -245,7 +245,7 @@ class DedupSpec extends SparkSpec {
     assert(full.nonEmpty, "fixture must contain near-dup pairs")
     // three append batches through the REAL store IO: build from batch 0,
     // then for each later batch report increments before appending it
-    val store = java.nio.file.Files.createTempDirectory("lsh_store").toString
+    val store = tempDir("lsh_store").toString
     def batch(i: Int) = docs.filter(col("doc_id") % 3 === i)
     DedupOps.buildLshStore(batch(0), store)
     var got = pairSet(DedupOps.minhashLsh(batch(0), 0.8, Int.MaxValue))
@@ -267,7 +267,7 @@ class DedupSpec extends SparkSpec {
     val docs = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "documents")
     val full = DedupOps.minhashLsh(docs, 0.8, Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val tmp = java.nio.file.Files.createTempDirectory("corpus_stream").toString
+    val tmp = tempDir("corpus_stream").toString
     val sink = CorpusStream.dedupIngestBatch(
       s"$tmp/store", s"$tmp/pairs", 0.8, Int.MaxValue) _
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet

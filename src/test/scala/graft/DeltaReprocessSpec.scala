@@ -85,7 +85,7 @@ class DeltaReprocessSpec extends SparkSpec {
       (8L, family("e", 0), "en", "s"))
     val v2 = v1.unionByName(adds)
 
-    val base = java.nio.file.Files.createTempDirectory("graft_delta_lsh").toString
+    val base = tempDir("graft_delta_lsh").toString
     DedupOps.buildLshStore(v1, s"$base/incr")
     DedupOps.appendLshStore(adds, s"$base/incr")
     DedupOps.buildLshStore(v2, s"$base/full")
@@ -110,7 +110,7 @@ class DeltaReprocessSpec extends SparkSpec {
     val delta = SnapshotOps.snapshotDelta(v1, v2)   // 3 (changed), 7, 8
     val stale = SnapshotOps.snapshotDelta(v2, v1)   // 3 (pre-change), 5
 
-    val base = java.nio.file.Files.createTempDirectory("graft_delta_store").toString
+    val base = tempDir("graft_delta_store").toString
     DedupOps.buildLshStore(v1, s"$base/incr")
     // the per-snapshot maintenance protocol (see retireLshStore scaladoc)
     DedupOps.retireLshStore(stale.select("doc_id"), s"$base/incr")
@@ -137,31 +137,40 @@ class DeltaReprocessSpec extends SparkSpec {
 
   test("compaction crash windows: a crash between the two renames is repaired " +
       "on retry; no crash point loses both store copies") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.Maintenance
     graft.functions.GraftFunctions.register(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_crash").toString
+    val base = tempDir("graft_crash").toString
     DedupOps.buildLshStore(v1Docs, s"$base/s")
     DedupOps.retireLshStore(v1Docs.filter(col("doc_id") === 5L).select("doc_id"), s"$base/s")
     val want = spark.read.parquet(s"$base/s/bands")
       .join(spark.read.parquet(s"$base/s/tombstones"), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("band_key")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    // simulate the crash instant of a prior attempt: live dir renamed
-    // aside, compacted sibling written, process died before promote
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    Seq("shingles", "bands").foreach { rel =>
-      fs.rename(p(s"$base/s/$rel"), p(s"$base/s/${rel}_old"))
-    }
-    assert(!fs.exists(p(s"$base/s/bands")), "crash window: live path absent")
-    assert(fs.exists(p(s"$base/s/bands_old")), "crash window: old copy survives")
-    // the retry must first restore from _old, then compact normally
+    // simulate the crash of a prior attempt on `bands` after its manifest
+    // committed: a snapshot file sits in the staging dir beside the table
+    // (pretend it is the compacted output), and the manifest names that dir
+    // and retires the file — the deletes and the move-in (the second
+    // rename) never ran; the committed manifest is replayed on retry
+    val bands = new Path(s"$base/s/bands")
+    val fs = bands.getFileSystem(spark.sessionState.newHadoopConf())
+    val moved = fs.listStatus(bands).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+    val staging = new Path(s"$base/s/bands_staging_0badf00d")
+    val manifest = new Path(bands, Maintenance.ManifestName)
+    fs.mkdirs(staging)
+    assert(fs.rename(moved, new Path(staging, moved.getName)))
+    val out = fs.create(manifest, true)
+    out.write(s"${staging.getName}\n${moved.getName}".getBytes("UTF-8")); out.close()
+    assert(!fs.exists(moved), "crash window: a snapshot file is outside the table")
+    assert(fs.exists(new Path(staging, moved.getName)), "crash window: the staged copy survives")
+    // the retry's rewrite of `bands` replays the manifest before it reads
     DedupOps.compactLshStore(spark, s"$base/s")
     val got = spark.read.parquet(s"$base/s/bands")
       .select(col("doc_id"), col("band_key")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == want, "recovered compaction must equal the uncrashed result")
-    assert(!fs.exists(p(s"$base/s/bands_old")) && !fs.exists(p(s"$base/s/tombstones")))
+    assert(!fs.exists(staging) && !fs.exists(manifest) &&
+      !fs.exists(new Path(s"$base/s/tombstones")))
   }
 
   test("snapshot delta drives IVF append: queries equal a same-centroid rebuild") {
@@ -176,7 +185,7 @@ class DeltaReprocessSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"), col("label"))
     val v2 = v1.unionByName(adds)
 
-    val base = java.nio.file.Files.createTempDirectory("graft_delta_ivf").toString
+    val base = tempDir("graft_delta_ivf").toString
     SimilarityOps.buildIvfIndex(v1, s"$base/incr", centroidMod = 2)
     SimilarityOps.appendIvfIndex(adds, s"$base/incr")
     // rebuild over v2 with the SAME persisted centroid table — the honest

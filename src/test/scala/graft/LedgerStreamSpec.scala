@@ -37,7 +37,7 @@ class LedgerStreamSpec extends SparkSpec {
 
   test("appendBatch is idempotent under micro-batch replay") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ab").toString
+    val tmp = tempDir("graft_ab").toString
     def batch(ids: Long*) = ledgerOf(ids.map(i =>
       (i, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "completed")): _*)
     LedgerStream.appendBatch(tmp)(batch(1L, 2L), 0L)

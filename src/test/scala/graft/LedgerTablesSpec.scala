@@ -17,7 +17,7 @@ class LedgerTablesSpec extends SparkSpec {
         f"2024-01-${1 + i % 20}%02d 10:00:00", f"2024-01-${1 + i % 20}%02d 11:00:00",
         "completed")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ledger").toString
+    val tmp = tempDir("graft_ledger").toString
     LedgerTables.write(ledgerOf(rows: _*), tmp)
     val back = LedgerTables.read(spark, tmp)
     val q = back.filter(
@@ -44,7 +44,7 @@ class LedgerTablesSpec extends SparkSpec {
         f"2024-01-${1 + i % 6}%02d 10:00:00", f"2024-01-${1 + i % 6}%02d 11:00:00",
         if (i % 2 == 0) "pending" else "completed")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upd").toString
+    val tmp = tempDir("graft_upd").toString
     LedgerTables.write(ledgerOf(rows: _*), tmp)
     def partFiles(day: String) =
       new java.io.File(s"$tmp/query_window_start_day=2024-01-$day").listFiles()
@@ -77,7 +77,7 @@ class LedgerTablesSpec extends SparkSpec {
 
   test("DELETE keeps rows where the predicate evaluates to NULL") {
     import graft.sources.LedgerTables
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delnull").toString
+    val tmp = tempDir("graft_delnull").toString
     val base = ledgerOf(
       (1L, "p", "i", "2024-01-05 10:00:00", "2024-01-05 11:00:00", "pending"),
       (2L, "p", "i", "2024-01-05 12:00:00", "2024-01-05 13:00:00", "pending"))

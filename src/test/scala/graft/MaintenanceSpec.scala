@@ -10,7 +10,7 @@ class MaintenanceSpec extends SparkSpec {
         f"2024-01-${1 + i % 3}%02d 10:00:00", f"2024-01-${1 + i % 3}%02d 11:00:00",
         "completed")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val tmp = tempDir("graft_compact").toString
     // fragment: 8 files per day partition
     LedgerTables.write(ledgerOf(rows: _*).repartition(8), tmp)
     def fileCount(day: String) =
@@ -33,7 +33,7 @@ class MaintenanceSpec extends SparkSpec {
     val rows = (0 until 40).map { i =>
       ((i + 1).toLong, "p", "i", "2024-01-05 10:00:00", "2024-01-05 11:00:00", "completed")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_crash").toString
+    val tmp = tempDir("graft_crash").toString
     LedgerTables.write(ledgerOf(rows: _*).repartition(2), tmp)
     val before = LedgerTables.read(spark, tmp).collect().map(_.toString).sorted.toSeq
     val dir = new Path(s"$tmp/query_window_start_day=2024-01-05")
@@ -78,7 +78,7 @@ class MaintenanceSpec extends SparkSpec {
       ((i + 1).toLong, "p", "i", "2024-02-01 10:00:00", "2024-02-01 11:00:00",
         if (i % 2 == 0) "pending" else "completed")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lease").toString
+    val tmp = tempDir("graft_lease").toString
     LedgerTables.write(ledgerOf(rows: _*).repartition(4), tmp)
     val base = new Path(tmp)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
@@ -118,7 +118,7 @@ class MaintenanceSpec extends SparkSpec {
     val rows = (0 until 30).map { i =>
       ((i + 1).toLong, "p", "i", "2024-01-07 10:00:00", "2024-01-07 11:00:00", "pending")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dmlrec").toString
+    val tmp = tempDir("graft_dmlrec").toString
     LedgerTables.write(ledgerOf(rows: _*).repartition(3), tmp)
     val dir = new Path(s"$tmp/query_window_start_day=2024-01-07")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -156,7 +156,7 @@ class MaintenanceSpec extends SparkSpec {
   test("writer lease: heartbeat keeps a long operation exclusive past its TTL") {
     import org.apache.hadoop.fs.Path
     import graft.sources.WriterLease
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hb").toString
+    val tmp = tempDir("graft_hb").toString
     val base = new Path(tmp)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     WriterLease.withLease(fs, base, ttlMs = 6000L) {
@@ -181,7 +181,7 @@ class MaintenanceSpec extends SparkSpec {
   test("writer lease: racing threads never overlap in the critical section") {
     import org.apache.hadoop.fs.Path
     import graft.sources.WriterLease
-    val tmp = java.nio.file.Files.createTempDirectory("graft_race").toString
+    val tmp = tempDir("graft_race").toString
     val base = new Path(tmp)
     val inCritical = new java.util.concurrent.atomic.AtomicBoolean(false)
     val overlaps = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -223,7 +223,7 @@ class MaintenanceSpec extends SparkSpec {
     val rows = (0 until 10).map { i =>
       ((i + 1).toLong, "p", "i", "2024-03-01 10:00:00", "2024-03-01 11:00:00", "pending")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val tmp = tempDir("graft_fmt").toString
     LedgerTables.write(ledgerOf(rows: _*).repartition(4), tmp)
     val base = new Path(tmp)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
@@ -248,7 +248,7 @@ class MaintenanceSpec extends SparkSpec {
         f"2024-01-${1 + i % 2}%02d 10:00:00", f"2024-01-${1 + i % 2}%02d 11:00:00",
         if (i % 3 == 0) "pending" else "completed")
     }
-    val local = java.nio.file.Files.createTempDirectory("graft_fs").toString
+    val local = tempDir("graft_fs").toString
     val uri = s"file://$local"
     LedgerTables.write(ledgerOf(rows: _*).repartition(6), uri)
     val results = Maintenance.compact(spark, uri, targetBytes = 1L << 30)

@@ -22,7 +22,7 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   * requires the same statuses and the same files, modes and owners on
   * disk. The filesystems are built directly, never through Hadoop's
   * `FileSystem` cache, so this suite leaves no `file:` instance behind. */
-class NioLocalFileSystemSpec extends AnyFunSuite {
+class NioLocalFileSystemSpec extends AnyFunSuite with TempDirs {
 
   private final case class Side(fs: FileSystem, fc: FileContext, root: JPath) {
     def path(rel: String): Path = new Path(root.resolve(rel).toString)
@@ -35,7 +35,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     if (nio) conf.set("fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
     val fc = FileContext.getFileContext(URI.create("file:///"), conf)
     assert(fc.getDefaultFileSystem.getClass == (if (nio) classOf[NioLocalFs] else classOf[LocalFs]))
-    Side(fs, fc, Files.createTempDirectory("graft_niofs").toRealPath())
+    Side(fs, fc, tempDir("graft_niofs").toRealPath())
   }
 
   /** `body`'s result on the stock side and on the java.nio side, with each

@@ -452,7 +452,7 @@ class PlanQualitySpec extends SparkSpec {
   test("metadata queries over the asset store never read the binary payload column") {
     import graft.operators.MultimodalOps
     val docs = Tables.read(spark, d, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_assets").toString + "/assets"
+    val tmp = tempDir("graft_assets").toString + "/assets"
     MultimodalOps.documentsAsAssets(docs).write.parquet(tmp)
     val meta = spark.read.parquet(tmp)
       .groupBy(col("kind")).agg(count(lit(1)).as("n"))

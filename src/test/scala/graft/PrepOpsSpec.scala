@@ -183,7 +183,7 @@ class PrepOpsSpec extends SparkSpec {
     val batchExpected = PrepOps.splitAssign(
         PrepOps.qualityFilter(PrepOps.redact(d), 30, 1000), 80, 10)
       .collect().map(_.toString).sorted.toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("prep_stream").toString + "/out"
+    val tmp = tempDir("prep_stream").toString + "/out"
     val sink = CorpusStream.prepIngestBatch(tmp)(_, _)
     for (i <- 0L to 3L) sink(d.filter(col("doc_id") % 4 === i), i)
     def onDisk() = spark.read.parquet(tmp)

@@ -51,7 +51,7 @@ class ProcessStartSpec extends SparkSpec {
   test("a streamed append, an UPDATE and a DELETE start no process") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_proc_guard")
+    val root = tempDir("graft_proc_guard")
     val engine = new QueryEngine(spark)
     val day0 = 1705312800L // 2024-01-15 10:00 UTC
     val rows = (1L to 6L).map(i => run(i, day0 + (i - 1) * 43200L, "pending"))

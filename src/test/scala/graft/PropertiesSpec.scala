@@ -82,7 +82,7 @@ class PropertiesSpec extends SparkSpec {
           f"2024-02-$day%02d 10:00:00",
           statuses(rnd.nextInt(3)))
       }
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_dml$seed").toString
+      val tmp = tempDir(s"graft_dml$seed").toString
       LedgerTables.write(ledgerOf(rows: _*).repartition(4), tmp)
       val nUpd = LedgerTables.updateWhere(spark, tmp,
         col("pipeline_status") === "failed",

@@ -53,7 +53,7 @@ class QuantizationSpec extends SparkSpec {
   test("quantized IVF index: smaller on disk, same probes, near-identical top-k") {
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-    val base = java.nio.file.Files.createTempDirectory("graft_qivf").toString
+    val base = tempDir("graft_qivf").toString
     SimilarityOps.buildIvfIndex(emb, s"$base/f", centroidMod = 40)
     SimilarityOps.buildIvfIndexQuantized(emb, s"$base/q", centroidMod = 40)
     def bytes(p: String): Long = {

@@ -31,7 +31,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("control command runs DDL; DML reports rows affected") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dml").toString
+    val tmp = tempDir("graft_dml").toString
     engine.executeControlCommand(
       s"CREATE TABLE graft_dml_t (id BIGINT, s STRING) USING PARQUET LOCATION '$tmp/t'")
     try {
@@ -43,7 +43,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("SQL-text UPDATE/DELETE on a catalog table dispatch to the rewrite path (V4)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dml_sql").toString
+    val tmp = tempDir("graft_dml_sql").toString
     engine.executeControlCommand(
       s"CREATE TABLE graft_dml_u (id BIGINT, s STRING) USING PARQUET LOCATION '$tmp/u'")
     try {
@@ -95,7 +95,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("SQL-text DML on a catalog table partitioned by a non-ledger column keeps its layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dml_part").toString
+    val tmp = tempDir("graft_dml_part").toString
     engine.executeControlCommand(
       s"""CREATE TABLE graft_dml_p (id BIGINT, s STRING, day STRING) USING PARQUET
          |PARTITIONED BY (day) LOCATION '$tmp/p'""".stripMargin)
@@ -129,7 +129,7 @@ class QueryEngineSpec extends SparkSpec {
   }
 
   test("SQL-text UPDATE on the day-partitioned ledger path, multi-assignment SET") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dml_ledger").toString + "/ledger"
+    val tmp = tempDir("graft_dml_ledger").toString + "/ledger"
     graft.sources.LedgerTables.write(ledgerOf(
       (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
       (2L, "p", "i", "2024-01-15 11:00:00", "2024-01-15 12:00:00", "pending"),
@@ -262,7 +262,7 @@ class QueryEngineSpec extends SparkSpec {
   /** A day-partitioned ledger at a fresh path, addressed as `parquet.`path``. */
   private def ledgerAt(name: String,
       rows: (Long, String, String, String, String, String)*): String = {
-    val tmp = java.nio.file.Files.createTempDirectory(name).toString + "/ledger"
+    val tmp = tempDir(name).toString + "/ledger"
     graft.sources.LedgerTables.write(ledgerOf(rows: _*), tmp)
     s"parquet.`$tmp`"
   }

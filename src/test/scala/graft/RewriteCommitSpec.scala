@@ -5,13 +5,15 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
+import graft.operators.{DedupOps, SimilarityOps}
 import graft.sources.{LedgerTables, Maintenance, NioLocalFileSystem, WriterLease}
-import graft.streaming.LedgerStream
+import graft.streaming.{CorpusStream, LedgerStream}
 
 /** Failure-path coverage for the one rewrite commit (`Maintenance.rewrite`):
   * a fault before the manifest leaves the table as it was, a fault after it
   * is finished by the next writer, and neither touches an appender's files,
-  * the writer lease or the stream's batch markers. */
+  * the writer lease or the stream's batch markers. The store compactions
+  * commit through it too: what lands mid-compaction survives. */
 class RewriteCommitSpec extends SparkSpec {
 
   /** The session's local filesystem, whose rename can be made to fail for
@@ -37,7 +39,7 @@ class RewriteCommitSpec extends SparkSpec {
 
   /** 30 pending rows over the days 2024-01-15, 16 and 17. */
   private def threeDayLedger(name: String): String = {
-    val path = java.nio.file.Files.createTempDirectory(name).toString + "/ledger"
+    val path = tempDir(name).toString + "/ledger"
     LedgerTables.write((15 to 17).map(d =>
       rowsOn((0L until 30L).filter(_ % 3 == d - 15), d, "pending")).reduce(_ union _), path)
     path
@@ -107,7 +109,7 @@ class RewriteCommitSpec extends SparkSpec {
   }
 
   test("the writer lease and the stream's batch markers are untouched by every rewrite") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rc_meta").toString + "/ledger"
+    val path = tempDir("graft_rc_meta").toString + "/ledger"
     LedgerStream.appendBatch(path)(rowsOn(Seq(1L, 2L), 15, "pending"), 0L)
     LedgerStream.appendBatch(path)(rowsOn(Seq(3L, 4L), 16, "pending"), 1L)
     val fs = newFs()
@@ -130,5 +132,68 @@ class RewriteCommitSpec extends SparkSpec {
     // a replayed batch still no-ops on its marker
     LedgerStream.appendBatch(path)(rowsOn(Seq(1L, 2L), 15, "pending"), 0L)
     assert(rows(path) == Seq(2L, 3L, 4L).map(_ -> "archived"))
+  }
+
+  /** 20 vectors in 4 dimensions; `writeIvfCentroids(_, _, 5, 4)` makes 4 cells. */
+  private def vectors() = {
+    import spark.implicits._
+    (0L until 20L).map(i => (i, Array.tabulate(4)(j => math.sin(i * 7.0 + j).toFloat)))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Every live id a query probing all 4 cells returns, vec 2's embedding as the query. */
+  private def liveIds(path: String): Set[Long] = {
+    val q = vectors().filter(col("vec_id") === 2L).select(col("embedding").as("qvec"))
+    SimilarityOps.queryIvfIndexLive(spark, path, q, -1L, 30, 4).collect().map(_.getLong(0)).toSet
+  }
+
+  test("a vector and a retirement appended just before an IVF compaction commits survive it") {
+    import spark.implicits._
+    val path = tempDir("graft_rc_ivf").resolve("ivf").toString
+    val emb = vectors()
+    SimilarityOps.writeIvfCentroids(emb, path, 5, 4)
+    CorpusStream.ivfIngestBatch(path)(emb.filter(col("vec_id") < 19L), 0L)
+    SimilarityOps.retireIvfIndex(Seq(1L).toDF("vec_id"), path)
+    val fs = newFs()
+    val injected = new AtomicInteger(0)
+    fs.beforeRename = (_, dst) =>
+      if (dst.getName == Maintenance.ManifestName && injected.incrementAndGet() == 1) {
+        CorpusStream.ivfIngestBatch(path)(emb.filter(col("vec_id") === 19L), 1L)
+        SimilarityOps.retireIvfIndex(Seq(2L).toDF("vec_id"), path)
+      }
+    SimilarityOps.compactIvfIndex(spark, path, fs)
+    assert(injected.get() == 1)
+    assert(spark.read.parquet(path).select("vec_id").as[Long].collect().sorted.toSeq ==
+      (0L until 20L).filter(_ != 1L), "the late vector survives; only the read tombstone applies")
+    assert(spark.read.parquet(s"${path}_tombstones").select("vec_id").as[Long].collect().toSeq ==
+      Seq(2L), "the late tombstone survives")
+    assert(liveIds(path) == (0L until 20L).toSet -- Set(1L, 2L), "and still subtracts")
+  }
+
+  test("both stores build, retire, read live and compact under a path with a space") {
+    import spark.implicits._
+    val base = tempDir("graft rc space")
+    val ivf = base.resolve("ivf index").toString
+    SimilarityOps.buildIvfIndex(vectors(), ivf, 5, 4)
+    SimilarityOps.retireIvfIndex(Seq(1L).toDF("vec_id"), ivf)
+    assert(liveIds(ivf) == (0L until 20L).toSet - 1L)
+    SimilarityOps.compactIvfIndex(spark, ivf)
+    assert(liveIds(ivf) == (0L until 20L).toSet - 1L)
+    assert(!new java.io.File(s"${ivf}_tombstones").exists())
+
+    val store = base.resolve("lsh store").toString
+    val fox = "the quick brown fox jumps over the lazy dog near the river bank at dawn"
+    val spark4 = "a different sentence about spark engines writing parquet files to local disk"
+    DedupOps.buildLshStore(docsOf((1L, fox, "en", "s"), (2L, spark4, "en", "s")), store)
+    DedupOps.retireLshStore(Seq(1L).toDF("doc_id"), store)
+    def pairs() = DedupOps.minhashLshIncremental(
+        docsOf((10L, fox, "en", "s"), (11L, spark4, "en", "s")), store, 0.8, Int.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs() == Set((2L, 11L)), "the retired doc no longer matches")
+    DedupOps.compactLshStore(spark, store)
+    assert(pairs() == Set((2L, 11L)))
+    assert(spark.read.parquet(s"$store/bands").select("doc_id").distinct().as[Long].collect()
+      .toSeq == Seq(2L))
+    assert(!new java.io.File(s"$store/tombstones").exists())
   }
 }

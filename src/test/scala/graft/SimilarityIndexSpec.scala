@@ -10,7 +10,7 @@ class SimilarityIndexSpec extends SparkSpec {
   test("persisted IVF index prunes to probed cells and matches the inline ANN result") {
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/index"
+    val tmp = tempDir("graft_ivf").toString + "/index"
     SimilarityOps.buildIvfIndex(emb, tmp, centroidMod = 40)
     val index = spark.read.parquet(tmp)
     val nCells = index.select("cid").distinct().count()
@@ -38,7 +38,7 @@ class SimilarityIndexSpec extends SparkSpec {
     val emb = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     val b0 = emb.filter(col("vec_id") % 2 === 0)
     val b1 = emb.filter(col("vec_id") % 2 =!= 0)
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val base = tempDir("graft_ivf_app").toString
     val (inc, full) = (base + "/inc", base + "/full")
     // centroids from the FULL id space (vec_id % 40 == 0 picks even ids, all
     // in batch 0) so both paths share one centroid table
@@ -63,7 +63,7 @@ class SimilarityIndexSpec extends SparkSpec {
   test("ivfIngestBatch: streamed store equals batch build; replayed batch is a no-op") {
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_stream").toString
+    val base = tempDir("graft_ivf_stream").toString
     val (st, full) = (base + "/st", base + "/full")
     SimilarityOps.writeIvfCentroids(emb, st, 40)
     val sink = graft.streaming.CorpusStream.ivfIngestBatch(st) _
@@ -138,7 +138,7 @@ class SimilarityIndexSpec extends SparkSpec {
     assert(got == want, "trained centroids must not change the exact pair set")
     // cell balance, measured through the persisted index the 100 TB path
     // would read: every trained cell in use, no cell dominating
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_bal").toString + "/index"
+    val tmp = tempDir("graft_ivf_bal").toString + "/index"
     SimilarityOps.buildIvfIndexWith(emb, tmp, trained)
     val sizes = spark.read.parquet(tmp).groupBy(col("cid")).count()
       .collect().map(_.getLong(1)).toSeq
@@ -153,7 +153,7 @@ class SimilarityIndexSpec extends SparkSpec {
     val k = 8
     val cents = SimilarityOps.trainCentroids(emb, k, seed = 42L)
     assert(cents.count() == k)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_km").toString + "/index"
+    val tmp = tempDir("graft_ivf_km").toString + "/index"
     SimilarityOps.buildIvfIndexWith(emb, tmp, cents)
     val index = spark.read.parquet(tmp)
     val centsBack = spark.read.parquet(tmp + "_centroids")

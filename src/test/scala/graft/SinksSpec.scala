@@ -11,7 +11,7 @@ class SinksSpec extends SparkSpec {
     (2L, "q", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "completed"))
 
   test("parquet/csv/json round-trip preserves rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sinks").toString
+    val tmp = tempDir("graft_sinks").toString
     Seq("parquet", "json", "csv").foreach { fmt =>
       Sinks.write(fixture.select("record_id", "pipeline_name", "pipeline_status"),
         s"$tmp/$fmt", fmt)

@@ -39,7 +39,7 @@ class SkewOpsSpec extends SparkSpec {
     import spark.implicits._
     // file-backed fact: a LocalRelation would let ConvertToLocalRelation
     // evaluate the probe at optimization time and hide it from the plan
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloomjoin").toString
+    val dir = tempDir("graft_bloomjoin").toString
     (1L to 1000L).map(i => (i % 100L, i)).toDF("fk", "v")
       .write.mode("overwrite").parquet(dir + "/fact")
     val fact = spark.read.parquet(dir + "/fact")

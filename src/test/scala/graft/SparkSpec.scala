@@ -17,7 +17,7 @@ object SparkSpec {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.spark
 
   /** Ledger rows: (record_id, pipeline, index, "yyyy-MM-dd HH:mm:ss" start, end, status). */

@@ -78,13 +78,6 @@ class StreamChaosSpec extends SparkSpec {
     java.nio.file.Files.move(part, srcDir.resolve(name + ".parquet"))
   }
 
-  private def deleteTree(base: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-      .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-        case _: java.io.IOException => })
-  }
-
   /** Run one incarnation of a checkpointed daily-window census query over
     * `srcDir` → parquet sink, draining everything currently pending. */
   private def drainWindowQuery(srcDir: String, outDir: String, ckpt: String,
@@ -112,7 +105,7 @@ class StreamChaosSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
 
   test("file-source exactly-once is PER PATH: same-path rewrite ignored, new-path bytes double-count") {
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_redeliver_")
+    val base = tempDir("graft_chaos_redeliver_")
     val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
     val outDir = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -155,7 +148,7 @@ class StreamChaosSpec extends SparkSpec {
   }
 
   test("events later than the watermark are dropped, never merged into finalized windows") {
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_late_")
+    val base = tempDir("graft_chaos_late_")
     val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
     val outDir = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -199,7 +192,7 @@ class StreamChaosSpec extends SparkSpec {
     val emb = (0L until 20L)
       .map(i => (i, Array.tabulate(4)(j => math.sin(i * 7.0 + j).toFloat)))
       .toDF("vec_id", "embedding")
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_ivf_")
+    val base = tempDir("graft_chaos_ivf_")
     try {
       val path = base.resolve("ivf").toString
       SimilarityOps.writeIvfCentroids(emb, path, 5, 4)
@@ -230,7 +223,7 @@ class StreamChaosSpec extends SparkSpec {
     // the store-side self-exclusion must stay a broadcast anti-join (cost
     // ∝ batch id-list) — a shuffle here would scale with the 100 TB store
     val docs = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "documents")
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_plan_")
+    val base = tempDir("graft_chaos_plan_")
     try {
       val store = base.resolve("store").toString
       DedupOps.buildLshStore(docs.filter(col("doc_id") % 2 === 0), store)
@@ -251,7 +244,7 @@ class StreamChaosSpec extends SparkSpec {
     val docs = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "documents")
     val full = DedupOps.minhashLsh(docs, 0.8, Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_dedup_")
+    val base = tempDir("graft_chaos_dedup_")
     try {
       val store = base.resolve("store").toString
       val pairs = base.resolve("pairs").toString
@@ -288,7 +281,7 @@ class StreamChaosSpec extends SparkSpec {
     val rows = ledgerOf(
       (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "ok"),
       (2L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "ok"))
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_ledger_")
+    val base = tempDir("graft_chaos_ledger_")
     try {
       val path = base.resolve("ledger").toString
       val sink = LedgerStream.appendBatch(path) _
@@ -304,7 +297,7 @@ class StreamChaosSpec extends SparkSpec {
   }
 
   test("sessionizer flatMapGroupsWithState state survives a checkpointed restart") {
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_sess_")
+    val base = tempDir("graft_chaos_sess_")
     val srcDir = java.nio.file.Files.createDirectory(base.resolve("src"))
     val outDir = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
@@ -375,7 +368,7 @@ class StreamChaosSpec extends SparkSpec {
     // must claim them all before its own renames
     val df = (1L to 90L).map(i => (i, s"v$i", (i % 3).toString))
       .toDF("id", "v", "part")
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_partial_")
+    val base = tempDir("graft_chaos_partial_")
     try {
       val path = base.resolve("t").toString
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -424,7 +417,7 @@ class StreamChaosSpec extends SparkSpec {
     val rows = ledgerOf(
       (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "ok"),
       (2L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "failed"))
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_guard_")
+    val base = tempDir("graft_chaos_guard_")
     try {
       val path = base.resolve("ledger").toString
       val sink = LedgerStream.appendBatch(path) _
@@ -459,6 +452,48 @@ class StreamChaosSpec extends SparkSpec {
       val n = graft.sources.LedgerTables.deleteWhere(
         spark, path, col("pipeline_status") === "failed")
       assert(n == 1 && spark.read.parquet(path).count() == 2)
+
+      // the store compactions commit through the same rewrite
+      import graft.operators.{DedupOps, SimilarityOps}
+      import graft.sources.IdempotentAppend
+      import graft.streaming.CorpusStream
+      import spark.implicits._
+      // an IVF index whose batch 1 installed but never committed
+      val emb = (0L until 20L)
+        .map(i => (i, Array.tabulate(4)(j => math.sin(i * 7.0 + j).toFloat)))
+        .toDF("vec_id", "embedding")
+      val ivf = base.resolve("ivf").toString
+      SimilarityOps.writeIvfCentroids(emb, ivf, 5, 4)
+      CorpusStream.ivfIngestBatch(ivf)(emb.filter(col("vec_id") < 10), 0L)
+      IdempotentAppend.append(SimilarityOps.assignedForIndex(
+        emb.filter(col("vec_id") >= 10), ivf), ivf, 1L, Seq("cid"))
+      fs.setTimes(IdempotentAppend.stagePath(ivf, 1L), old, old)
+      SimilarityOps.retireIvfIndex(Seq(0L).toDF("vec_id"), ivf)
+      val e3 = intercept[java.io.IOException] { SimilarityOps.compactIvfIndex(spark, ivf) }
+      assert(e3.getMessage.contains("unresolved streaming append"))
+      CorpusStream.ivfIngestBatch(ivf)(emb.filter(col("vec_id") >= 10), 1L)
+      SimilarityOps.compactIvfIndex(spark, ivf)
+      assert(spark.read.parquet(ivf).select("vec_id").as[Long].collect().sorted.toSeq ==
+        (1L until 20L), "the replayed batch once, the retired vector gone")
+
+      // an LSH store whose batch 1 installed into both tables, uncommitted;
+      // only the bands stage is quiet, so the compaction must refuse before
+      // it rewrites shingles, whose own stage still reads as live
+      val docs = docsOf((1L to 8L).map(i =>
+        (i, s"document $i of a small corpus, near duplicate ${i % 3} of its kind", "en", "s")): _*)
+      val store = base.resolve("store").toString
+      CorpusStream.dedupIngestBatch(store, base.resolve("pairs").toString, 0.8, Int.MaxValue)(
+        docs.filter(col("doc_id") % 2 === 0), 0L)
+      DedupOps.appendLshStoreIdempotent(docs.filter(col("doc_id") % 2 === 1), store, 1L)
+      fs.setTimes(IdempotentAppend.stagePath(s"$store/bands", 1L), old, old)
+      DedupOps.retireLshStore(docs.select("doc_id").limit(1), store)
+      def files(rel: String) =
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/$rel")).map(_.getPath.getName).toSet
+      val before = Seq("shingles", "bands", "tombstones").map(files)
+      val e4 = intercept[java.io.IOException] { DedupOps.compactLshStore(spark, store) }
+      assert(e4.getMessage.contains("unresolved streaming append"))
+      assert(Seq("shingles", "bands", "tombstones").map(files) == before,
+        "both store tables and the tombstones untouched")
     } finally deleteTree(base)
   }
 
@@ -468,7 +503,7 @@ class StreamChaosSpec extends SparkSpec {
     val docs = graft.sources.Tables.read(spark, "/root/testdata/sf0.001", "documents")
     val full = DedupOps.minhashLsh(docs, 0.8, Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val base = java.nio.file.Files.createTempDirectory("graft_chaos_wedge_")
+    val base = tempDir("graft_chaos_wedge_")
     try {
       val store = base.resolve("store").toString
       val pairs = base.resolve("pairs").toString

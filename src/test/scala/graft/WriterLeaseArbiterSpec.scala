@@ -62,7 +62,7 @@ class WriterLeaseArbiterSpec extends SparkSpec {
   }
 
   private def fixture() = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_arb").toString
+    val tmp = tempDir("graft_arb").toString
     val base = new Path(tmp)
     (base.getFileSystem(spark.sessionState.newHadoopConf()), base)
   }
