@@ -1,10 +1,12 @@
 package graft.sources
 
+import java.io.{FileNotFoundException, IOException, OutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /**
  * Cooperative writer-exclusion lease for a table directory.
@@ -22,17 +24,21 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * No rewrite moves a directory, so the lease file stays in place for its
  * whole lifetime.
  *
- * Mechanics: acquisition is a create-no-overwrite of the lease file
- * (atomic on local filesystems and HDFS), carrying owner id, acquisition
- * time, and a TTL; expiry is judged on the file's MODIFICATION time so
- * [[renew]] can extend a held lease with an atomic metadata touch. A
- * second writer's create fails and throws
+ * Mechanics: acquisition is one exclusive create of the lease file
+ * (`O_CREAT|O_EXCL` through `java.nio` on `file:`, `create(overwrite =
+ * false)` elsewhere, which is atomic on HDFS) whose stream writes owner
+ * id, acquisition time and TTL; a re-read then confirms the winner still
+ * holds it. Expiry is judged on the file's MODIFICATION time so [[renew]]
+ * can extend a held lease with an atomic metadata touch. A second
+ * writer's create fails and throws
  * [[WriterLease.HeldByOtherWriterException]] naming the current holder. A
  * writer that crashes without releasing leaves its lease behind; once the
  * TTL passes (or the operator calls [[breakLease]] after confirming the
  * holder is dead) the next acquirer reclaims it: re-read the lease,
  * confirm it is still the SAME stale lease (owner + timestamp identity),
- * delete, and race the exclusive create.
+ * delete, and race the exclusive create. Every other operation goes to
+ * the raw filesystem under a checksummed one, so a lease has no `.crc`
+ * sidecar for a concurrent reader to find half-written.
  *
  * Scope: the lease serializes REWRITERS — one commit for every table
  * rewrite: ledger compaction and UPDATE/DELETE, and the store compactions
@@ -51,148 +57,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * a CONCURRENT RECLAIMER's just-created lease (never a live renewing
  * holder — its fresh modification time fails the staleness recheck); the
  * window is one metadata operation wide, and an evicted holder's next
- * heartbeat detects and logs the loss. Where OS advisory locking exists
- * (local disks, NFSv4), [[WriterLease.LeaseArbiter.fileLock]] closes even
- * that window — both decisions run atomically under a sidecar FileLock.
- * On object stores without atomic create, the DEFAULT arbiter is advisory
- * — the same caveat the commit itself carries ([[Maintenance]] scaladoc) —
- * but the arbitration is pluggable ([[WriterLease.LeaseArbiter]]): a
- * backend built on the store's conditional write (If-None-Match /
- * precondition PUT) makes the exclusion decisive there too.
+ * heartbeat detects and logs the loss. On object stores without atomic
+ * create the lease is advisory — the same caveat the commit itself
+ * carries ([[Maintenance]] scaladoc) — so serialize rewrites there
+ * outside the engine.
  */
 object WriterLease {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /**
-   * How the exclusive "create the lease file iff absent" is decided. The
-   * decision MUST be made by the store, not by an exists-then-create in
-   * this process — that is the whole arbitration. Implementations create
-   * an EMPTY placeholder; the winner's lease content is written afterwards
-   * under the corrupt-lease grace TTL (see [[WriterLease.CorruptGraceMs]]),
-   * so a placeholder is never reclaimed out from under its content write.
-   *
-   * Built-ins cover POSIX (`O_CREAT|O_EXCL`) and HDFS-style server-side
-   * `create(overwrite = false)`. An object store with conditional writes
-   * (If-None-Match / precondition PUT) slots in as a third implementation
-   * — with it the lease's "advisory on object stores" caveat becomes a
-   * backend property, not a design limit.
-   */
-  trait LeaseArbiter {
-    /** Atomically create an empty placeholder at `p` iff nothing exists
-      * there; true iff THIS caller created it. */
-    def createIfAbsent(fs: FileSystem, p: Path): Boolean
-
-    /** Reclaim step: delete `p` only if it is still the stale lease the
-      * caller observed (owner + acquisition-time identity, where the
-      * acquisition time is `max(content timestamp, file modification
-      * time)` — exactly what [[WriterLease.read]] reports). The DEFAULT is
-      * a plain delete — the caller's identity recheck happens just before,
-      * so on a plain filesystem this carries the documented
-      * one-metadata-op reclaimer-vs-reclaimer window. A conditional-write
-      * store overrides with an atomic compare-and-delete (ETag/If-Match),
-      * which closes that window and makes reclaim decisive too.
-      *
-      * Contract note for overriders: `expected.owner` may be
-      * [[WriterLease.CorruptOwner]] — the sentinel for a placeholder whose
-      * content was never written (a writer crashed between create and
-      * content write). That lease HAS no owner line to match; the
-      * implementation must treat "still unparseable, same modification
-      * identity" as a match, or such a crash locks the table until a
-      * manual breakLease. */
-    def deleteIfMatches(fs: FileSystem, p: Path, expected: LeaseInfo): Boolean =
-      fs.delete(p, false)
-  }
-
-  object LeaseArbiter {
-    /** POSIX atomic create via `java.io.File.createNewFile`
-      * (`O_CREAT|O_EXCL`). Needed because Hadoop's LOCAL
-      * `create(overwrite = false)` is exists-then-create — NOT atomic
-      * (measured: 6 racing threads produced overlapping "exclusive"
-      * creates). */
-    val posixLocal: LeaseArbiter = (fs: FileSystem, p: Path) => {
-      // File(URI) handles the path conversion on every platform (a raw
-      // toUri.getPath breaks on Windows drive letters)
-      val qualified = fs.makeQualified(p).toUri
-      val local = try new java.io.File(qualified)
-        catch { case _: IllegalArgumentException => new java.io.File(qualified.getPath) }
-      Option(local.getParentFile).foreach(_.mkdirs())
-      try local.createNewFile() catch { case _: java.io.IOException => false }
-    }
-
-    /** Server-side `create(overwrite = false)` — atomic on HDFS and any
-      * store whose namenode/metadata layer arbitrates the create. */
-    val exclusiveCreate: LeaseArbiter = (fs: FileSystem, p: Path) => {
-      try { fs.create(p, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    }
-
-    /** The default for a filesystem: POSIX on `file://`, server-side
-      * exclusive create elsewhere. (`getUri.getScheme`, not `getScheme()`:
-      * the latter's Hadoop base implementation throws on filesystems that
-      * never overrode it.) */
-    def forFileSystem(fs: FileSystem): LeaseArbiter =
-      if (fs.getUri.getScheme == "file") posixLocal else exclusiveCreate
-
-    /**
-     * FULLY DECISIVE arbitration on any filesystem with OS advisory
-     * locking (local disks, NFSv4): every decision — create-iff-absent
-     * AND the reclaim's compare-and-delete — executes as one atomic step
-     * under an exclusive `FileLock` on a sidecar `_writer_lease.arb`
-     * file, closing the one-metadata-op reclaimer-vs-reclaimer window
-     * that [[posixLocal]]'s plain-delete default documents. A JVM-striped
-     * monitor serializes in-process callers first (the JVM throws
-     * `OverlappingFileLockException` rather than queueing overlapping
-     * locks from one process); the OS lock then arbitrates across
-     * processes. The sidecar is underscore-prefixed (invisible to Spark
-     * listings, never touched by a rewrite) and is itself
-     * never deleted — deleting it would race its own lock.
-     *
-     * This is the second REAL backend behind the [[LeaseArbiter]] seam
-     * (beside the create-only [[posixLocal]]/[[exclusiveCreate]] pair and
-     * the conditional-write shape a cloud object store provides):
-     * lifecycle- and contention-tested in WriterLeaseArbiterSpec.
-     * Requires a `file://` path — the sidecar is locked through java.nio.
-     */
-    val fileLock: LeaseArbiter = new LeaseArbiter {
-      private val jvmLocks =
-        new java.util.concurrent.ConcurrentHashMap[String, Object]()
-      private def withSidecarLock[A](fs: FileSystem, p: Path)(body: => A): A = {
-        val uri = fs.makeQualified(p).toUri
-        require(uri.getScheme == null || uri.getScheme == "file",
-          s"fileLock arbiter needs a java.nio-lockable file:// path, got $uri")
-        val target = java.nio.file.Paths.get(uri.getPath)
-        val side = target.resolveSibling(target.getFileName.toString + ".arb")
-        Option(side.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        val mon = jvmLocks.computeIfAbsent(side.toString, _ => new Object)
-        mon.synchronized {
-          val ch = java.nio.channels.FileChannel.open(side,
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE)
-          try {
-            val l = ch.lock()
-            try body finally l.release()
-          } finally ch.close()
-        }
-      }
-      override def createIfAbsent(fs: FileSystem, p: Path): Boolean =
-        withSidecarLock(fs, p) {
-          // absence check and create commit under ONE lock — the
-          // overwrite flag is irrelevant here, exclusion came first
-          if (fs.exists(p)) false
-          else { fs.create(p, true).close(); true }
-        }
-      override def deleteIfMatches(fs: FileSystem, p: Path,
-          expected: LeaseInfo): Boolean =
-        withSidecarLock(fs, p) {
-          // the full (owner, effective-acquisition-time) identity — which
-          // readAt already computes, including the corrupt-placeholder
-          // sentinel — rechecked and acted on atomically
-          readAt(fs, p).exists(r => r.owner == expected.owner &&
-            r.acquiredAtMs == expected.acquiredAtMs) && fs.delete(p, false)
-        }
-    }
-  }
 
   /** Lease file name, inside the table root; underscore-prefixed so Spark
     * listings never see it as data. */
@@ -204,7 +76,7 @@ object WriterLease {
   val DefaultTtlMs: Long = 15 * 60 * 1000L
 
   /** TTL assigned to an unparseable lease file. A reader can catch the
-    * instant between a winner's exclusive create and its content write (or
+    * instant between a winner's exclusive create and its first write (or
     * mid-rewrite in [[renew]]'s fallback) — a zero TTL would make that
     * fresh-but-empty lease instantly reclaimable, re-opening the very race
     * the exclusive create arbitrates. The grace period lets the winner
@@ -212,10 +84,9 @@ object WriterLease {
     * table for only this long. */
   val CorruptGraceMs: Long = 30 * 1000L
 
-  /** Sentinel owner reported for an unparseable/empty lease file (a writer
-    * crashed between its exclusive create and the content write). Part of
-    * the [[LeaseArbiter.deleteIfMatches]] contract — see its scaladoc. */
-  val CorruptOwner: String = "corrupt-lease"
+  /** Owner reported for an unparseable/empty lease file (a writer crashed
+    * between its exclusive create and its write). */
+  private val CorruptOwner = "corrupt-lease"
 
   final case class LeaseInfo(owner: String, acquiredAtMs: Long, ttlMs: Long) {
     def expiresAtMs: Long = acquiredAtMs + ttlMs
@@ -225,6 +96,14 @@ object WriterLease {
     extends IllegalStateException(message)
 
   private def leasePath(root: Path) = new Path(root, LeaseName)
+
+  /** The filesystem the lease file lives on: the raw one under a
+    * checksummed filesystem, which would otherwise write (and make every
+    * read verify) a `._writer_lease.crc` sidecar as a second file. */
+  private def raw(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
 
   /** Process-unique default owner id: host + pid + nonce. */
   def defaultOwner(): String = {
@@ -237,41 +116,63 @@ object WriterLease {
   private def parseableLong(s: String): Boolean =
     s.nonEmpty && s.length <= 18 && s.forall(_.isDigit)
 
-  private def readAt(fs: FileSystem, p: Path): Option[LeaseInfo] =
+  /** The lease as written (owner, acquisition time, TTL) and the file's
+    * modification time; None when there is no lease file. */
+  private def readFile(fs: FileSystem, p: Path): Option[(LeaseInfo, Long)] =
     try {
-      if (!fs.exists(p)) None
-      else {
-        val modTime = fs.getFileStatus(p).getModificationTime
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n') match {
-          case Array(owner, ts, ttl, _*) if parseableLong(ts) && parseableLong(ttl) =>
-            Some(LeaseInfo(owner, math.max(ts.toLong, modTime), ttl.toLong))
-          case _ =>
-            // a writer mid-create (or crashed there, or garbage): grant the
-            // grace TTL so a winner that has created but not yet written is
-            // not instantly reclaimed out from under its content write
-            Some(LeaseInfo(CorruptOwner, modTime, CorruptGraceMs))
-        }
+      val modTime = fs.getFileStatus(p).getModificationTime
+      val in = fs.open(p)
+      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+      val written = text.split('\n') match {
+        case Array(owner, ts, ttl, _*) if parseableLong(ts) && parseableLong(ttl) =>
+          LeaseInfo(owner, ts.toLong, ttl.toLong)
+        case _ =>
+          // a writer mid-create (or crashed there, or garbage): grant the
+          // grace TTL so a winner that has created but not yet written is
+          // not instantly reclaimed out from under its write
+          LeaseInfo(CorruptOwner, modTime, CorruptGraceMs)
       }
+      Some((written, modTime))
     } catch {
-      // vanished between exists/open (released under us): report no lease
-      case _: java.io.FileNotFoundException => None
+      // absent, or released between stat and open
+      case _: FileNotFoundException => None
     }
 
   /** The current lease, if one exists. `acquiredAtMs` reflects the last
     * heartbeat (file modification time), not only the create moment. */
   def read(fs: FileSystem, root: Path): Option[LeaseInfo] =
-    readAt(fs, leasePath(root))
+    readFile(raw(fs), leasePath(root)).map { case (l, modTime) =>
+      l.copy(acquiredAtMs = math.max(l.acquiredAtMs, modTime)) }
 
-  private def writeLeaseFile(fs: FileSystem, p: Path, info: LeaseInfo,
-      overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
+  private def writeTo(out: OutputStream, info: LeaseInfo): Unit =
     try out.write(s"${info.owner}\n${info.acquiredAtMs}\n${info.ttlMs}\n"
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
-  }
+
+  /** Create the lease file iff nothing exists at `p`, decided by the
+    * store: Hadoop's local `create(overwrite = false)` is
+    * exists-then-create, not atomic, so `file:` takes `O_EXCL` through
+    * `java.nio`. None when the file exists or cannot be created. */
+  private def createExclusive(fs: FileSystem, p: Path): Option[OutputStream] =
+    try Some(
+      if (fs.getUri.getScheme == "file") {
+        val local = Paths.get(fs.makeQualified(p).toUri)
+        local.getParent.toFile.mkdirs()
+        Files.newOutputStream(local, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      } else raw(fs).create(p, false))
+    catch { case _: IOException => None }
+
+  /** Reclaim step: delete the lease under `root` only if it is still the
+    * expired lease `stale` the caller observed (owner + acquisition-time
+    * identity, as [[read]] reports it). A live holder's heartbeat or
+    * another writer's fresh create changes the identity. The recheck and
+    * the delete are two operations: see the object scaladoc's limits. */
+  private[graft] def reclaim(fs: FileSystem, root: Path, stale: LeaseInfo,
+      nowMs: Long): Boolean =
+    read(fs, root).exists(r => r.owner == stale.owner &&
+      r.acquiredAtMs == stale.acquiredAtMs && nowMs > r.expiresAtMs) &&
+      raw(fs).delete(leasePath(root), false)
 
   /**
    * Heartbeat: push the held lease's expiry forward. Primary path is an
@@ -288,15 +189,15 @@ object WriterLease {
   def renew(fs: FileSystem, root: Path, owner: String,
       nowMs: () => Long = () => System.currentTimeMillis()): Boolean = {
     val p = leasePath(root)
+    val rfs = raw(fs)
     read(fs, root) match {
       case Some(l) if l.owner == owner =>
-        try { fs.setTimes(p, nowMs(), -1); true }
+        try { rfs.setTimes(p, nowMs(), -1); true }
         catch {
           case NonFatal(_) =>
             read(fs, root) match {
               case Some(l2) if l2.owner == owner && nowMs() <= l2.expiresAtMs =>
-                try { writeLeaseFile(fs, p, LeaseInfo(owner, nowMs(), l2.ttlMs),
-                  overwrite = true); true }
+                try { writeTo(rfs.create(p, true), LeaseInfo(owner, nowMs(), l2.ttlMs)); true }
                 catch {
                   case NonFatal(e) =>
                     log.warn(s"writer-lease renewal failed for $root (owner $owner): $e")
@@ -319,39 +220,26 @@ object WriterLease {
    * Acquire the table's writer lease or throw [[HeldByOtherWriterException]].
    * An expired (or corrupt) lease is reclaimed by identity-checked
    * delete-and-recreate (see the object scaladoc for the exact guarantees);
-   * the loser of any straight acquisition race fails on the atomic
-   * create-no-overwrite.
+   * the loser of any straight acquisition race fails on the exclusive
+   * create.
    */
   def acquire(
       fs: FileSystem,
       root: Path,
       owner: String = defaultOwner(),
       ttlMs: Long = DefaultTtlMs,
-      nowMs: () => Long = () => System.currentTimeMillis(),
-      arbiter: LeaseArbiter = null): LeaseInfo = {
+      nowMs: () => Long = () => System.currentTimeMillis()): LeaseInfo = {
     val p = leasePath(root)
-    val arb = Option(arbiter).getOrElse(LeaseArbiter.forFileSystem(fs))
+    // One create per attempt, written through its own stream. A winner
+    // that stalled past CorruptGraceMs before writing may have been
+    // reclaimed meanwhile, so the re-read confirms the file still holds
+    // exactly what this attempt wrote; a failed write propagates and
+    // leaves an unparseable file, which the grace TTL covers.
     def tryCreate(): Option[LeaseInfo] = {
       val info = LeaseInfo(owner, nowMs(), ttlMs)
-      // The store decides the winner ([[LeaseArbiter]]); the winner then
-      // writes the content into its own empty placeholder, protected from
-      // instant reclaim by the corrupt-lease grace TTL.
-      if (!arb.createIfAbsent(fs, p)) None
-      // Only write the content while the grace TTL provably still covers
-      // our empty file: a winner stalled past half the grace window may
-      // already have been reclaimed, and a blind overwrite would clobber
-      // the reclaimer's valid lease. Abstaining loses the acquisition —
-      // and while the stall is still INSIDE the grace window the empty
-      // file is provably still ours (reclaim needs the full window), so
-      // it can be deleted to spare the next acquirer the wait; past the
-      // window it may be someone else's and is left alone.
-      else if (nowMs() - info.acquiredAtMs > CorruptGraceMs / 2) {
-        if (nowMs() - info.acquiredAtMs < CorruptGraceMs) fs.delete(p, false)
-        None
-      }
-      else {
-        try { writeLeaseFile(fs, p, info, overwrite = true); Some(info) }
-        catch { case _: java.io.IOException => fs.delete(p, false); None }
+      createExclusive(fs, p).flatMap { out =>
+        writeTo(out, info)
+        readFile(raw(fs), p).collect { case (written, _) if written == info => info }
       }
     }
     // bounded retry: each pass either creates, throws on a live holder, or
@@ -363,7 +251,7 @@ object WriterLease {
       tryCreate() match {
         case Some(info) => return info
         case None =>
-          readAt(fs, p) match {
+          read(fs, root) match {
             case None =>
               // released (or reclaimed away) between our create and read —
               // loop and race the create again
@@ -375,15 +263,7 @@ object WriterLease {
                   "concurrent writers would corrupt the staged rewrite — retry after " +
                   "the lease clears, or breakLease() if the holder is known dead")
             case Some(stale) =>
-              // identity-checked reclaim: delete only if the file is still
-              // the very lease we judged expired (a live holder's heartbeat
-              // or another reclaimer's fresh create changes the identity);
-              // the delete itself goes through the arbiter, so a
-              // conditional-write backend can make recheck+delete atomic
-              val recheck = readAt(fs, p)
-              if (recheck.exists(r => r.owner == stale.owner &&
-                  r.acquiredAtMs == stale.acquiredAtMs && nowMs() > r.expiresAtMs))
-                arb.deleteIfMatches(fs, p, stale)
+              reclaim(fs, root, stale, nowMs())
               // loop: the exclusive create decides the reclaim winner
           }
       }
@@ -400,26 +280,22 @@ object WriterLease {
     * the live writer that legitimately took over. */
   def release(fs: FileSystem, root: Path, owner: String): Unit =
     read(fs, root) match {
-      case Some(l) if l.owner == owner => fs.delete(leasePath(root), false)
+      case Some(l) if l.owner == owner => raw(fs).delete(leasePath(root), false)
       case _ => ()
     }
 
   /** Operator override: drop whatever lease exists (use only after
     * confirming the holding writer is dead). */
   def breakLease(fs: FileSystem, root: Path): Unit =
-    fs.delete(leasePath(root), false)
+    raw(fs).delete(leasePath(root), false)
 
   /** Run `body` holding the table's writer lease; always released on exit.
     * A daemon heartbeat renews the lease every ttl/3, so an operation that
     * outlives the TTL (a large compaction) keeps its exclusion as long as
     * the process is alive and the filesystem honours some renewal path —
     * a failed or lost renewal is logged by [[renew]]. */
-  def withLease[A](
-      fs: FileSystem,
-      root: Path,
-      ttlMs: Long = DefaultTtlMs,
-      arbiter: LeaseArbiter = null)(body: => A): A = {
-    val info = acquire(fs, root, ttlMs = ttlMs, arbiter = arbiter)
+  def withLease[A](fs: FileSystem, root: Path, ttlMs: Long = DefaultTtlMs)(body: => A): A = {
+    val info = acquire(fs, root, ttlMs = ttlMs)
     val hb = new Thread(() => {
       try {
         while (!Thread.currentThread().isInterrupted) {

@@ -82,8 +82,13 @@ class MaintenanceSpec extends SparkSpec {
     LedgerTables.write(ledgerOf(rows: _*).repartition(4), tmp)
     val base = new Path(tmp)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    // the lease files beside `_writer_lease` itself (a `.crc`, an `.arb`)
+    def leaseSidecars() = new java.io.File(tmp).list().toSeq
+      .filter(n => n.contains(WriterLease.LeaseName) && n != WriterLease.LeaseName)
     // writer A holds the lease: compaction AND DML both refuse, data untouched
     val held = WriterLease.acquire(fs, base, owner = "writer-A")
+    assert(leaseSidecars().isEmpty, "the lease is one file, with no checksum sidecar")
+    assert(WriterLease.renew(fs, base, held.owner))
     val e1 = intercept[WriterLease.HeldByOtherWriterException] {
       Maintenance.compact(spark, tmp, targetBytes = 1L << 30)
     }
@@ -98,6 +103,10 @@ class MaintenanceSpec extends SparkSpec {
       .filter(col("pipeline_status") === "pending").count() == 10)
     WriterLease.release(fs, base, held.owner)
     assert(WriterLease.read(fs, base).isEmpty)
+    // once another owner holds the lease, the old owner's renew fails
+    val other = WriterLease.acquire(fs, base, owner = "writer-B")
+    assert(!WriterLease.renew(fs, base, held.owner))
+    WriterLease.release(fs, base, other.owner)
     // crashed writer: lease left behind, TTL already lapsed — the next DML
     // reclaims it, runs, and releases
     WriterLease.acquire(fs, base, owner = "crashed-writer", ttlMs = 0L)
@@ -109,6 +118,49 @@ class MaintenanceSpec extends SparkSpec {
     assert(WriterLease.read(fs, base).isEmpty, "lease must be released after the rewrite")
     // and compaction acquires/releases cleanly afterwards
     Maintenance.compact(spark, tmp, targetBytes = 1L << 30)
+    assert(WriterLease.read(fs, base).isEmpty)
+    // a writer crashed between its create and its write: the empty lease
+    // blocks for CorruptGraceMs, then is reclaimed
+    val leaseFile = new Path(base, WriterLease.LeaseName)
+    assert(new java.io.File(tmp, WriterLease.LeaseName).createNewFile())
+    intercept[WriterLease.HeldByOtherWriterException] {
+      WriterLease.acquire(fs, base, owner = "writer-C")
+    }
+    fs.setTimes(leaseFile, System.currentTimeMillis() - 2 * WriterLease.CorruptGraceMs, -1)
+    val reclaimed = WriterLease.acquire(fs, base, owner = "writer-C")
+    assert(reclaimed.owner == "writer-C")
+    WriterLease.release(fs, base, reclaimed.owner)
+    assert(WriterLease.read(fs, base).isEmpty)
+    assert(leaseSidecars().isEmpty, leaseSidecars().mkString(","))
+  }
+
+  test("writer lease: a reclaim holding a stale observation never evicts a fresh lease") {
+    import org.apache.hadoop.fs.Path
+    import graft.sources.WriterLease
+    val base = new Path(tempDir("graft_reclaim").toString)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    def now() = System.currentTimeMillis()
+    // a reclaimer observes writer A's expired lease...
+    WriterLease.acquire(fs, base, owner = "writer-A", ttlMs = 0L)
+    Thread.sleep(5)
+    val staleA = WriterLease.read(fs, base).get
+    // ...but writer B reclaims it first and holds a fresh lease
+    val b = WriterLease.acquire(fs, base, owner = "writer-B")
+    assert(!WriterLease.reclaim(fs, base, staleA, now()))
+    assert(WriterLease.read(fs, base).exists(_.owner == "writer-B"))
+    WriterLease.release(fs, base, b.owner)
+    // the same owner id re-acquired after a restart is a different lease
+    WriterLease.acquire(fs, base, owner = "writer-A", ttlMs = 0L)
+    Thread.sleep(5)
+    val first = WriterLease.read(fs, base).get
+    WriterLease.breakLease(fs, base)
+    WriterLease.acquire(fs, base, owner = "writer-A", ttlMs = 0L)
+    Thread.sleep(5)
+    assert(!WriterLease.reclaim(fs, base, first, now()))
+    // while the current observation of an expired lease is reclaimed
+    val current = WriterLease.read(fs, base).get
+    assert(current.acquiredAtMs != first.acquiredAtMs)
+    assert(WriterLease.reclaim(fs, base, current, now()))
     assert(WriterLease.read(fs, base).isEmpty)
   }
 
