@@ -244,14 +244,18 @@ object GraftExtensions {
  * class. One curation pass (x81, x79, x72, x4) needs about 160 entries: at 100 every
  * steady pass evicted and recompiled about 150 classes with Janino, and
  * each recompiled class paid interpretation and C1/C2 again. 1000 holds
- * that pass and the ledger verbs' per-tick classes several times over.
- * What a full cache keeps alive, measured on a 4-core host (3 GB heap) with
- * a 600-s `ledger_ops` perfbench run, whose ticks compile one-use classes
- * and fill the cache after about 1000 compiles, against the same run at 100
- * entries, after a full GC at the same tick: 1610 more loaded classes,
- * 7 MB more metaspace and 1 MB more class space, 25-28 MB more live heap,
- * and an RSS 8-21 MB higher. Loaded classes stop growing once the cache is
- * full. The conf is static and `CodeGenerator` reads it once, when the
+ * that pass several times over, so curation still needs it. What a full
+ * cache keeps alive was measured on a 4-core host (3 GB heap) with a 600-s
+ * `ledger_ops` perfbench run, from a time when every ledger tick inlined
+ * its window bounds, days and ids into generated code and so compiled
+ * one-use classes, filling the cache after about 1000 compiles; against the
+ * same run at 100 entries, after a full GC at the same tick: 1610 more
+ * loaded classes, 7 MB more metaspace and 1 MB more class space, 25-28 MB
+ * more live heap, and an RSS 8-21 MB higher. Loaded classes stop growing
+ * once the cache is full. Ledger ticks now bind those values by reference
+ * ([[graft.functions.BoundValue]]) and a warm tick compiles no class
+ * (`CodegenCacheSpec`), so a ledger loop no longer fills the cache. The
+ * conf is static and `CodeGenerator` reads it once, when the
  * JVM first generates code, so it is set here, before any session exists;
  * a caller can still override it on the builder.
  *

@@ -11,7 +11,9 @@ import org.apache.spark.sql.catalyst.analysis.{NamedParameter, UnresolvedAttribu
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.StructType
 
+import graft.functions.BoundValue
 import graft.sources.LedgerTables
 
 /**
@@ -34,8 +36,10 @@ import graft.sources.LedgerTables
  * `overlap_checks.py:52-55`) maps to Spark named parameterized SQL
  * (`spark.sql(text, args)`), which also closes the reference's SQL-injection
  * defect (`snowflake_tasks.py:525-537` interpolates a raw string). UPDATE
- * and DELETE bind the same way: each `:name` becomes the literal
- * `spark.sql(text, args)` binds, never SQL text.
+ * and DELETE bind each `:name` to the value and type of the literal
+ * `spark.sql(text, args)` binds, never SQL text, held by reference
+ * ([[graft.functions.BoundValue]]) so that repeated statements of one shape
+ * reuse their generated classes.
  */
 final class QueryEngine(val spark: SparkSession) {
 
@@ -101,7 +105,8 @@ final class QueryEngine(val spark: SparkSession) {
    *    target may be a catalog table (its location is resolved and, after
    *    the rewrite, the table is refreshed), `parquet.`path`` or one
    *    backquoted absolute path; a table alias is rejected. Named
-   *    parameters (`:name`) bind to the literals `spark.sql(text, args)` binds.
+   *    parameters (`:name`) bind by reference to the values
+   *    `spark.sql(text, args)` binds.
    */
   def executeDmlQuery(
       sql: String,
@@ -129,13 +134,15 @@ final class QueryEngine(val spark: SparkSession) {
     }
 
   /** The one `:name` binding site of the UPDATE/DELETE path: each
-    * `NamedParameter`, in subqueries too, becomes `lit(value)`, the literal
-    * `spark.sql(text, args)` binds. An unbound name fails here with Spark's
-    * own error, even when no row would match. */
+    * `NamedParameter`, in subqueries too, becomes a [[BoundValue]] of the
+    * literal `spark.sql(text, args)` binds (a null stays that literal). A
+    * bound value in a filter on partition columns still prunes partitions.
+    * An unbound name fails here with Spark's own error, even when no row
+    * would match. */
   private def bind(plan: LogicalPlan, params: Map[String, Any]): LogicalPlan =
     plan.transformAllExpressionsWithSubqueries {
       case NamedParameter(name) => params.get(name) match {
-        case Some(v) => ColumnBridge.expression(lit(v))
+        case Some(v) => BoundValue.of(v)
         case None => throw new AnalysisException("UNBOUND_SQL_PARAMETER", Map("name" -> name))
       }
     }
@@ -150,14 +157,15 @@ final class QueryEngine(val spark: SparkSession) {
         name -> ColumnBridge.column(a.value)
       }
       val predicate = condition.fold(lit(true))(ColumnBridge.column)
-      onTarget(table, database)(LedgerTables.update(spark, _, predicate, set, _)())
+      onTarget(table, database)(LedgerTables.update(spark, _, predicate, set, _, _)())
     case DeleteFromTable(table, condition) =>
       val predicate = ColumnBridge.column(condition)
-      onTarget(table, database)(LedgerTables.delete(spark, _, predicate, _)())
+      onTarget(table, database)(LedgerTables.delete(spark, _, predicate, _, _)())
   }
 
-  /** Resolve the DML target to a filesystem path (plus its declared
-    * partition columns for catalog tables), run the rewrite, and refresh
+  /** Resolve the DML target to a filesystem path (plus, for a catalog
+    * table, its declared partition columns and the schema every read of it
+    * uses, so the rewrite infers none), run the rewrite, and refresh
     * cached file listings afterwards. A catalog table's partitions follow
     * its directories. After a whole-table rewrite, whose re-rendered
     * directory names may differ from the catalog's and whose DELETE may
@@ -166,32 +174,33 @@ final class QueryEngine(val spark: SparkSession) {
     * rewrite keeps every directory name and adds no partition value, so only
     * the days a DELETE emptied are dropped, in the catalog alone. */
   private def onTarget(table: LogicalPlan, database: Option[String])(
-      rewrite: (String, Seq[String]) => LedgerTables.Rewritten): Long = inDatabase(database) {
-    val parts = table match {
-      case UnresolvedRelation(parts, _, _) => parts
-      case _ => Nil
+      rewrite: (String, Seq[String], Option[StructType]) => LedgerTables.Rewritten): Long =
+    inDatabase(database) {
+      val parts = table match {
+        case UnresolvedRelation(parts, _, _) => parts
+        case _ => Nil
+      }
+      require(parts.nonEmpty, "UPDATE/DELETE target must be a table or a path; " +
+        s"a table alias (`UPDATE t AS u`) is not supported: ${table.nodeName}")
+      parts match {
+        case Seq(format, path) if format.equalsIgnoreCase("parquet") => rewrite(path, Nil, None).rows
+        case Seq(path) if new Path(path).isAbsolute => rewrite(path, Nil, None).rows
+        case _ =>
+          require(parts.length <= 2, s"DML target must be table or db.table: ${parts.mkString(".")}")
+          val ti = TableIdentifier(parts.last, parts.init.headOption)
+          val meta = spark.sessionState.catalog.getTableMetadata(ti)
+          val done = rewrite(meta.location.toString, meta.partitionColumnNames, Some(meta.schema))
+          if (done.emptiedDays.nonEmpty)
+            spark.sessionState.catalog.dropPartitions(ti,
+              done.emptiedDays.map(d => Map(meta.partitionColumnNames.head -> d)),
+              ignoreIfNotExists = true, purge = false, retainData = true)
+          spark.catalog.refreshTable(ti.quotedString)
+          if (meta.partitionColumnNames.nonEmpty &&
+              !LedgerTables.rewritesDayPartitions(meta.partitionColumnNames))
+            spark.sql(s"REPAIR TABLE ${ti.quotedString} SYNC PARTITIONS")
+          done.rows
+      }
     }
-    require(parts.nonEmpty, "UPDATE/DELETE target must be a table or a path; " +
-      s"a table alias (`UPDATE t AS u`) is not supported: ${table.nodeName}")
-    parts match {
-      case Seq(format, path) if format.equalsIgnoreCase("parquet") => rewrite(path, Nil).rows
-      case Seq(path) if new Path(path).isAbsolute => rewrite(path, Nil).rows
-      case _ =>
-        require(parts.length <= 2, s"DML target must be table or db.table: ${parts.mkString(".")}")
-        val ti = TableIdentifier(parts.last, parts.init.headOption)
-        val meta = spark.sessionState.catalog.getTableMetadata(ti)
-        val done = rewrite(meta.location.toString, meta.partitionColumnNames)
-        if (done.emptiedDays.nonEmpty)
-          spark.sessionState.catalog.dropPartitions(ti,
-            done.emptiedDays.map(d => Map(meta.partitionColumnNames.head -> d)),
-            ignoreIfNotExists = true, purge = false, retainData = true)
-        spark.catalog.refreshTable(ti.quotedString)
-        if (meta.partitionColumnNames.nonEmpty &&
-            !LedgerTables.rewritesDayPartitions(meta.partitionColumnNames))
-          spark.sql(s"REPAIR TABLE ${ti.quotedString} SYNC PARTITIONS")
-        done.rows
-    }
-  }
 
   /** V5: DDL / control command; no rows, query id only. */
   def executeControlCommand(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundValue
+
 /**
  * Gap / continuity detection over the ledger (SURVEY.md §2.2 O12/O13;
  * reference `snowflake_tasks.py:352-486`).
@@ -27,17 +29,18 @@ object ContinuityOps {
    * invariant `query_window_start_day = to_date(query_window_start_ts)`
    * makes redundant for the rows — but it is the test partition pruning can
    * use, so only day D's partition is scanned. The exact `to_date` test
-   * stays, so the slice is the same set of rows.
+   * stays, so the slice is the same set of rows; its day is a [[BoundValue]],
+   * so each call reuses the first call's generated classes.
    */
   def discontinuities(
       ledger: DataFrame,
       pipelineName: String,
       indexName: String,
       dateStr: String): DataFrame = {
-    val day = java.time.LocalDate.parse(dateStr)
+    val day = OverlapOps.parseDay(dateStr)
     val slice = ledger.filter(
       col("query_window_start_day") === lit(day) &&
-      to_date(col("query_window_start_ts")) === lit(day) &&
+      to_date(col("query_window_start_ts")) === BoundValue.column(day) &&
       col("pipeline_name") === pipelineName &&
       col("index_name") === indexName)
     val w = Window.orderBy(col("query_window_start_ts"), col("record_id"))

@@ -5,6 +5,8 @@ import java.time.{LocalDate, LocalDateTime}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundValue
+
 /**
  * Interval-overlap queries over the ledger (SURVEY.md §2.2 O4/O5/O14;
  * reference `overlap_checks.py:4-107`, `snowflake_tasks.py:488-584`).
@@ -16,14 +18,28 @@ import org.apache.spark.sql.functions._
  *    (`t1.start != t2.start`, `snowflake_tasks.py:548`) — a semantic quirk we
  *    keep.
  *
- * Window bounds are wall-clock `LocalDateTime` literals (TIMESTAMP_NTZ),
+ * Window bounds are wall-clock `LocalDateTime` values (TIMESTAMP_NTZ),
  * read in the SESSION time zone like the SQL text `TIMESTAMP '…'`: Spark
  * casts them under the session zone against a TIMESTAMP column and compares
  * them as-is against a TIMESTAMP_NTZ one. `java.sql.Timestamp.valueOf`
  * would read them in the JVM's default zone and shift every window by the
  * difference.
+ *
+ * The partition bounds on `query_window_start_day` stay literals, so the
+ * scan prunes by them when it lists files. Every other per-call value is a
+ * [[BoundValue]]: generated code reads it by reference, so each call of a
+ * verb reuses the classes the first call compiled. A bound value is not
+ * pushed into Parquet, so the `end_day` band no longer skips row groups.
  */
 object OverlapOps {
+
+  /** The ISO-8601 day of a verb's `dateStr`; an unparseable one throws
+    * IllegalArgumentException naming it, like an invalid input window. */
+  private[operators] def parseDay(dateStr: String): LocalDate =
+    try LocalDate.parse(dateStr)
+    catch { case e: java.time.format.DateTimeParseException =>
+      throw new IllegalArgumentException(s"invalid ISO-8601 date: $dateStr", e)
+    }
 
   /**
    * R1: all ledger rows whose window overlaps the candidate input window
@@ -31,9 +47,9 @@ object OverlapOps {
    *
    * Two-phase filtering exactly as the reference designs it: a coarse,
    * sargable day-band predicate over the denormalized `*_day` columns prunes
-   * first (on a day-partitioned ledger this is partition pruning — zero I/O
-   * for out-of-band days), then the exact half-open timestamp test runs on the
-   * survivors. Invalid ISO input throws IllegalArgumentException at the API
+   * first (on a day-partitioned ledger its `start_day` bound is partition
+   * pruning — zero I/O for later days), then the exact half-open timestamp
+   * test runs on the survivors. Invalid ISO input throws IllegalArgumentException at the API
    * edge (mirrors `ValueError`, `overlap_checks.py:44-46`).
    */
   def findOverlappingRecordsForInput(
@@ -51,11 +67,11 @@ object OverlapOps {
     ledger
       // coarse day band (partition-prunable)
       .filter(col("query_window_start_day") <= lit(endTs.toLocalDate) &&
-              col("query_window_end_day") >= lit(startTs.toLocalDate))
+              col("query_window_end_day") >= BoundValue.column(startTs.toLocalDate))
       .filter(col("pipeline_name") === pipelineName && col("index_name") === indexName)
       // exact half-open interval intersection
-      .filter(col("query_window_start_ts") < lit(endTs) &&
-              col("query_window_end_ts") > lit(startTs))
+      .filter(col("query_window_start_ts") < BoundValue.column(endTs) &&
+              col("query_window_end_ts") > BoundValue.column(startTs))
   }
 
   /**
@@ -74,8 +90,8 @@ object OverlapOps {
       col("query_window_start_day") <= lit(day) &&
       col("pipeline_name") === pipelineName &&
       col("index_name") === indexName &&
-      col("query_window_start_ts") < lit(day.plusDays(1).atStartOfDay) &&
-      col("query_window_end_ts") > lit(day.atStartOfDay))
+      col("query_window_start_ts") < BoundValue.column(day.plusDays(1).atStartOfDay) &&
+      col("query_window_end_ts") > BoundValue.column(day.atStartOfDay))
 
   /**
    * R6: interval-overlap self theta-join over a one-day slice
@@ -94,7 +110,7 @@ object OverlapOps {
       pipelineName: String,
       indexName: String,
       dateStr: String): DataFrame = {
-    val f = daySlice(ledger, pipelineName, indexName, LocalDate.parse(dateStr))
+    val f = daySlice(ledger, pipelineName, indexName, parseDay(dateStr))
     joinOverlaps(f)
   }
 
@@ -131,7 +147,7 @@ object OverlapOps {
       dateStr: String,
       bucketMinutes: Int = 60): DataFrame = {
     require(bucketMinutes > 0)
-    val f = daySlice(ledger, pipelineName, indexName, LocalDate.parse(dateStr))
+    val f = daySlice(ledger, pipelineName, indexName, parseDay(dateStr))
       .select(col("query_window_start_ts").as("s"), col("query_window_end_ts").as("e"))
     // Buckets covered by [s, e): integer bucket indices floor(µs / bucketµs)
     // over BOTH endpoints — arithmetic on the same grid for every window, so

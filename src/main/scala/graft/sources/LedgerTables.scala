@@ -1,8 +1,11 @@
 package graft.sources
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 
@@ -56,6 +59,9 @@ object LedgerTables {
    * SET expressions with their `:name` parameters already bound.
    * `partitionCols` is the table's declared partitioning when the caller
    * knows it (catalog tables); empty means "detect the ledger layout".
+   * `schema`, when the caller knows it (a catalog table's), is the one the
+   * rewrite reads the table with; without it the read infers the schema
+   * from a file footer, which takes a Spark job.
    * Assigning a partition column is rejected — a row changing partitions
    * needs a delete+insert, not a partition rewrite. SET column names resolve
    * case-insensitively, like Spark's default analyzer.
@@ -73,10 +79,11 @@ object LedgerTables {
       path: String,
       predicate: Column,
       assignments: Seq[(String, Column)],
-      partitionCols: Seq[String])(
+      partitionCols: Seq[String],
+      schema: Option[StructType] = None)(
       fs: FileSystem = Maintenance.fileSystem(spark, path)): Rewritten = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
-    rewriteAffectedPartitions(spark, path, predicate, partitionCols, fs) { table =>
+    rewriteAffectedPartitions(spark, path, predicate, partitionCols, schema, fs) { table =>
       // Validation runs against the IN-LEASE table snapshot, before the
       // rewrite's zero-match short-circuit: a malformed statement fails
       // loudly even when zero rows match, and the schema it validates
@@ -116,13 +123,14 @@ object LedgerTables {
       spark: SparkSession,
       path: String,
       predicate: Column,
-      partitionCols: Seq[String])(
+      partitionCols: Seq[String],
+      schema: Option[StructType] = None)(
       fs: FileSystem = Maintenance.fileSystem(spark, path)): Rewritten =
-    rewriteAffectedPartitions(spark, path, predicate, partitionCols, fs) { _ => (ledger, pred) =>
+    rewriteAffectedPartitions(spark, path, predicate, partitionCols, schema, fs) { _ =>
       // Keep any row the predicate does not POSITIVELY match: a NULL
       // predicate result must retain the row (plain `!pred` is NULL for
       // NULL input and filter would silently delete non-matching rows).
-      ledger.filter(!coalesce(pred, lit(false)))
+      (ledger, pred) => ledger.filter(!coalesce(pred, lit(false)))
     }
 
   /** What a rewrite did: the rows it affected, and the day partitions it
@@ -161,25 +169,22 @@ object LedgerTables {
       path: String,
       predicate: Column,
       partitionCols: Seq[String],
+      schema: Option[StructType],
       fs: FileSystem)(
       transformFor: DataFrame => (DataFrame, Column) => DataFrame): Rewritten = {
     val base = new Path(path)
     val markers = new Path(base, "_graft_batches")
     val ((rows, days), removed) = Maintenance.rewrite(fs, base, markers) { staging =>
-      val ledger = read(spark, path)
+      val ledger = schema.fold(read(spark, path))(spark.read.schema(_).parquet(path))
       // resolve the transform FIRST: its validation must fire even when
       // zero rows match and the rewrite below short-circuits
       val transform = transformFor(ledger)
-      val matched = ledger.filter(predicate)
       val parts = effectivePartitionCols(ledger, partitionCols)
-      // Affected days and their row counts in ONE query: a day-count-sized
-      // driver list, never data.
-      val (affected, days) =
-        if (!rewritesDayPartitions(parts)) (matched.count(), Nil)
-        else {
-          val perDay = matched.groupBy(col("query_window_start_day")).count().collect()
-          (perDay.map(_.getLong(1)).sum, perDay.map(_.get(0).toString).toSeq)
-        }
+      val dayLayout = rewritesDayPartitions(parts)
+      // any other layout is rewritten whole: one key counts every match
+      val perDay = matchedPerDay(ledger.filter(predicate),
+        if (dayLayout) col("query_window_start_day").cast("string") else lit(""))
+      val (affected, days) = (perDay.values.sum, if (dayLayout) perDay.keys.toSeq.sorted else Nil)
       if (affected == 0L) (Nil, (0L, Nil))
       else {
         val slice =
@@ -197,4 +202,18 @@ object LedgerTables {
     // and no concurrent appender has committed one since
     Rewritten(rows, days.filter(d => removed.contains(DayDir + d)))
   }
+
+  /** Matched rows per `day` value, in one stage and one job: each task
+    * counts its own rows into a map of at most one entry per day, and the
+    * driver merges the maps. A `groupBy(day).count()` would shuffle, which adaptive
+    * execution runs as two jobs. */
+  private def matchedPerDay(matched: DataFrame, day: Column): Map[String, Long] =
+    matched.select(day).as(Encoders.STRING)
+      .mapPartitions { days =>
+        val n = mutable.HashMap.empty[String, Long]
+        days.foreach(d => n(d) = n.getOrElse(d, 0L) + 1L)
+        n.iterator
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect()
+      .groupMapReduce(_._1)(_._2)(_ + _)
 }

@@ -108,6 +108,51 @@ class PipelineTasksSpec extends SparkSpec {
     } finally java.util.TimeZone.setDefault(jvmZone)
   }
 
+  test("overlap and continuity verbs read their bounds in a non-UTC session time zone") {
+    // Los Angeles wall clock on 2024-01-15 evening is 2024-01-16 in UTC:
+    // bounds read in UTC would select the wrong day and miss every row
+    val zone = "spark.sql.session.timeZone"
+    spark.conf.set(zone, "America/Los_Angeles")
+    try {
+      // built here, so the fixture's own text parses in the same zone
+      val evening = ledgerOf(
+        (1L, "p", "i", day(22), day(23), "completed"),
+        (2L, "p", "i", day(23), day(23, 40), "completed"),
+        (3L, "p", "i", day(23, 20), day(23, 50), "completed")) // overlaps record 2
+      val t = new PipelineTasks(new QueryEngine(spark), () => evening)
+      val (continuous, gaps) = t.getDiscontinuousQueryWindows("p", "i", "2024-01-15").value
+      assert(!continuous)
+      assert(gaps == Seq(Map(
+        "missing_query_window_start_ts" -> "2024-01-16T07:40:00Z",
+        "missing_query_window_end_ts" -> "2024-01-16T07:20:00Z")))
+      assert(t.getDiscontinuousQueryWindows("p", "i", "2024-01-16").value == (true, Nil))
+      assert(t.findOverlappingQueryWindows("p", "i", "2024-01-15").value
+        .map(_("source_window_start_ts")) == Seq("2024-01-16T07:00:00Z", "2024-01-16T07:20:00Z"))
+      assert(t.findOverlappingQueryWindows("p", "i", "2024-01-16").value.isEmpty)
+      assert(t.findOverlappingRecordsForInput(
+        "p", "i", "2024-01-15 22:59:00", "2024-01-15 23:10:00").value
+        .map(_("record_id")) == Seq("1", "2"))
+      // half-open: an input ending at record 1's start does not overlap it
+      assert(t.findOverlappingRecordsForInput(
+        "p", "i", "2024-01-15 21:00:00", "2024-01-15 22:00:00").value.isEmpty)
+    } finally spark.conf.set(zone, "UTC")
+  }
+
+  test("an unparseable date throws IllegalArgumentException naming it, in every day verb") {
+    val continuity = intercept[IllegalArgumentException] {
+      tasks.getDiscontinuousQueryWindows("p", "i", "2024-13-01")
+    }
+    assert(continuity.getMessage.contains("2024-13-01"), continuity.getMessage)
+    val overlaps = intercept[IllegalArgumentException] {
+      tasks.findOverlappingQueryWindows("p", "i", "15/01/2024")
+    }
+    assert(overlaps.getMessage.contains("15/01/2024"), overlaps.getMessage)
+    val input = intercept[IllegalArgumentException] {
+      tasks.findOverlappingRecordsForInput("p", "i", "2024-01-15 08:30", "soon")
+    }
+    assert(input.getMessage.contains("soon"), input.getMessage)
+  }
+
   test("createTableIfNotExists is idempotent") {
     tasks.createTableIfNotExists("graft_tasks_ddl")
     tasks.createTableIfNotExists("graft_tasks_ddl")

@@ -160,15 +160,28 @@ class QueryEngineSpec extends SparkSpec {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    def preScans(dml: => Long): (Long, Int) = {
+    // Counts every Spark job: the pre-scan is one (no schema inference for
+    // a catalog table, no shuffle), and the staged write is the other.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    /** Rows affected, pre-scans and jobs of one statement. */
+    def preScans(dml: => Long): (Long, Int, Int) = {
       org.apache.spark.GraftTestBus.drain(spark.sparkContext)
       scans.set(0)
+      jobs.set(0)
       spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(jobListener)
       try {
         val n = dml
         org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-        (n, scans.get())
-      } finally spark.listenerManager.unregister(listener)
+        (n, scans.get(), jobs.get())
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(listener)
+      }
     }
     val rows = ledgerOf(
       (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
@@ -189,16 +202,16 @@ class QueryEngineSpec extends SparkSpec {
       assert(before.length == 3, before)
       assert(preScans(engine.executeDmlQuery(
         "UPDATE graft_dml_cat SET pipeline_status = 'completed' WHERE pipeline_status = :s",
-        Map("s" -> "pending")).data) == (3L, 1))
+        Map("s" -> "pending")).data) == (3L, 1, 2))
       assert(partitions() == before)
       assert(status() == (1L to 5L).map(_ -> "completed").toMap)
       assert(preScans(engine.executeDmlQuery(
-        "DELETE FROM graft_dml_cat WHERE record_id IN (2, 4)").data) == (2L, 1))
+        "DELETE FROM graft_dml_cat WHERE record_id IN (2, 4)").data) == (2L, 1, 2))
       assert(partitions() == before)
       assert(status() == Seq(1L, 3L, 5L).map(_ -> "completed").toMap)
       // no match: still one pre-scan, nothing rewritten
       assert(preScans(engine.executeDmlQuery(
-        "UPDATE graft_dml_cat SET records_count = 0 WHERE record_id = 99").data) == (0L, 1))
+        "UPDATE graft_dml_cat SET records_count = 0 WHERE record_id = 99").data) == (0L, 1, 1))
       assert(spark.table("graft_dml_cat").count() == 3L)
     } finally engine.executeControlCommand("DROP TABLE IF EXISTS graft_dml_cat")
   }
@@ -326,6 +339,63 @@ class QueryEngineSpec extends SparkSpec {
     assert(intercept[org.apache.spark.sql.AnalysisException] {
       engine.executeDmlQuery(s"DELETE FROM $t WHERE record_id = :id", Map("other" -> 1))
     }.getCondition == "UNBOUND_SQL_PARAMETER")
+  }
+
+  test("UPDATE/DELETE bind :name in IN lists and subqueries; a bound day still prunes") {
+    import java.time.LocalDate
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Aqe extends AdaptiveSparkPlanHelper
+    val t = ledgerAt("graft_dml_bound",
+      (1L, "p", "i", "2024-01-15 10:00:00", "2024-01-15 11:00:00", "pending"),
+      (2L, "p", "i", "2024-01-15 12:00:00", "2024-01-15 13:00:00", "pending"),
+      (3L, "p", "i", "2024-01-16 10:00:00", "2024-01-16 11:00:00", "pending"),
+      (4L, "p", "i", "2024-01-16 12:00:00", "2024-01-16 13:00:00", "pending"),
+      (5L, "p", "i", "2024-01-17 10:00:00", "2024-01-17 11:00:00", "pending"))
+    def status() = engine.fetchAllRowsAsTuples(
+      s"SELECT record_id, pipeline_status FROM $t ORDER BY record_id")
+      .data.map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(engine.executeDmlQuery(
+      s"UPDATE $t SET pipeline_status = :to WHERE record_id IN (:a, :b)",
+      Map("to" -> "running", "a" -> 1L, "b" -> 4)).data == 2L)
+    assert(engine.executeDmlQuery(
+      s"UPDATE $t SET pipeline_status = (SELECT upper(:s)) WHERE record_id = (SELECT :k + 1)",
+      Map("s" -> "done", "k" -> 1)).data == 1L)
+    assert(status() == Seq(1L -> "running", 2L -> "DONE", 3L -> "pending",
+      4L -> "running", 5L -> "pending"))
+    spark.range(1).selectExpr("5L AS id", "'x' AS tag")
+      .union(spark.range(1).selectExpr("3L AS id", "'y' AS tag"))
+      .createOrReplaceTempView("graft_dml_bound_ids")
+    assert(engine.executeDmlQuery(
+      s"DELETE FROM $t WHERE record_id IN (SELECT id FROM graft_dml_bound_ids WHERE tag = :tag)",
+      Map("tag" -> "x")).data == 1L)
+    assert(engine.executeDmlQuery(
+      s"DELETE FROM $t WHERE pipeline_status IN (:a, :b) AND record_id > :k",
+      Map("a" -> "DONE", "b" -> "running", "k" -> 1)).data == 2L)
+    assert(status() == Seq(1L -> "running", 3L -> "pending"))
+    // the pre-scan of a DELETE on a bound day prunes to that day's partition
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        Aqe.collect(qe.executedPlan) { case s: FileSourceScanExec => s }.foreach(scans.add)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      assert(engine.executeDmlQuery(
+        s"DELETE FROM $t WHERE query_window_start_day = :d AND record_id = :id",
+        Map("d" -> LocalDate.of(2024, 1, 16), "id" -> 3L)).data == 1L)
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val scan = scans.peek()
+    assert(scan != null && scan.metadata("PartitionFilters").contains("query_window_start_day"),
+      Option(scan).map(_.metadata("PartitionFilters")))
+    assert(scan.relation.location.listFiles(scan.partitionFilters, scan.dataFilters)
+      .map(_.values.getInt(0)).toSeq == Seq(LocalDate.of(2024, 1, 16).toEpochDay.toInt))
+    assert(status() == Seq(1L -> "running"))
   }
 
   test("UPDATE/DELETE that open with a comment still take the partition rewrite") {
