@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Maintenance
+import graft.sources.{IdempotentAppend, Maintenance}
 
 /**
  * Near-duplicate detection over the `documents` table (SURVEY.md §2.4).
@@ -265,11 +265,15 @@ object DedupOps {
     * appending them twice (duplicated store rows never corrupt the
     * confirmed pair SET, but they inflate candidate generation and fan
     * the verify join — see [[minhashLshIncrementalReplayable]]). */
-  def appendLshStoreIdempotent(newDocs: DataFrame, path: String, batchId: Long): Unit = {
-    graft.functions.GraftFunctions.register(newDocs.sparkSession)
-    val shs = shingleRelation(newDocs)
-    graft.sources.IdempotentAppend.append(shs, s"$path/shingles", batchId)
-    graft.sources.IdempotentAppend.append(bandedKeys(shs), s"$path/bands", batchId)
+  def appendLshStoreIdempotent(newDocs: DataFrame, path: String, batchId: Long): Unit =
+    lshStoreAppends(newDocs, path).foreach(_.append(batchId))
+
+  /** The two appends of [[appendLshStoreIdempotent]], shingles then bands,
+    * for a sink that commits them in one batch with its own. */
+  private[graft] def lshStoreAppends(newDocs: DataFrame, path: String): Seq[IdempotentAppend.Into] = {
+    lazy val shs = shingleRelation(newDocs)
+    Seq(IdempotentAppend.Into(s"$path/shingles")(shs),
+      IdempotentAppend.Into(s"$path/bands")(bandedKeys(shs)))
   }
 
   /**
@@ -310,7 +314,7 @@ object DedupOps {
   def compactLshStore(spark: SparkSession, path: String): Unit = {
     val root = new Path(path)
     Maintenance.dropRetired(spark, Maintenance.fileSystem(spark, path),
-      new Path(root, "tombstones"), "doc_id", new Path(root, "_graft_batches"),
+      new Path(root, "tombstones"), "doc_id", IdempotentAppend.markerDir(root),
       Seq(new Path(root, "shingles"), new Path(root, "bands")))
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSimilarityF32
-import graft.sources.Maintenance
+import graft.sources.{IdempotentAppend, Maintenance}
 
 /**
  * Similarity search over the `embeddings` table (`array<float>`, 64-dim) and
@@ -1426,7 +1426,7 @@ object SimilarityOps {
 
   private[graft] def compactIvfIndex(spark: SparkSession, path: String, fs: FileSystem): Unit =
     Maintenance.dropRetired(spark, fs, new Path(s"${path}_tombstones"), "vec_id",
-      new Path(path, "_graft_batches"), Seq(new Path(path)), Seq("cid"))
+      IdempotentAppend.markerDir(new Path(path)), Seq(new Path(path)), Seq("cid"))
 
   /** [[queryIvfIndex]] against the LIVE view of a possibly-tombstoned
     * index path: subtracts `<path>_tombstones` when present (broadcast

@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * EXACTLY-ONCE parquet append for marker-guarded foreachBatch sinks
- * ([[graft.streaming.CorpusStream]]).
+ * EXACTLY-ONCE parquet appends for foreachBatch sinks
+ * ([[graft.streaming.CorpusStream]], [[graft.streaming.LedgerStream]]).
+ * [[runBatch]] is a sink's whole protocol for one micro-batch: skip it if
+ * its commit marker exists, else run its appends, then write the marker.
  *
  * `write.mode("append")` alone leaves the marker protocol a crash WINDOW:
  * the marker is written AFTER the append commits, so a restart that lands
@@ -25,9 +27,10 @@ import org.apache.spark.sql.DataFrame
  *     prefix, and the same data always stages the same partition set, so
  *     scanning just the touched partition directories finds every
  *     stranded file;
- *  3. the staged files RENAME into place under deterministic
- *     `b<batchId>_p<i>.parquet` names — per-file metadata moves, no data
- *     rewrite.
+ *  3. the staged files MOVE into place at the same relative paths, each
+ *     name prefixed `b<batchId>_` — per-file metadata moves, no data
+ *     rewrite, by the mover the rewrite commit's replay uses
+ *     ([[Maintenance.moveFiles]]).
  *
  * Every crash point therefore replays to the same final file set: the
  * destination holds each batch's rows exactly once under at-least-once
@@ -39,8 +42,8 @@ import org.apache.spark.sql.DataFrame
  *
  * THE STAGE DIRECTORY IS THE IN-FLIGHT SENTINEL: [[append]] leaves it in
  * place (holding only the committer's `_SUCCESS` once every data file has
- * renamed out), and [[finish]] — commit marker, then stage cleanup — is
- * the caller's LAST step. "Stage dir present with no commit marker"
+ * moved out), and [[runBatch]]'s last step writes the commit marker, then
+ * clears the stages. "Stage dir present with no commit marker"
  * therefore identifies an unresolved append across EVERY crash point,
  * which is what makes [[assertNoUnresolved]] sound: the residue wipe
  * finds a crashed attempt's files BY NAME (`b<batchId>_`), so a
@@ -61,15 +64,48 @@ import org.apache.spark.sql.DataFrame
  */
 object IdempotentAppend {
 
+  /** The commit markers of the streams appending under `root`:
+    * `<root>/_graft_batches/<batchId>`. */
+  private[graft] def markerDir(root: Path): Path = new Path(root, "_graft_batches")
+
   /** Stage-dir path for (path, batchId) — in-flight sentinel, see above. */
   def stagePath(path: String, batchId: Long): Path =
     new Path(s"${path}_stage_b$batchId")
 
+  /** One append of a micro-batch: `rows`, laid out by `partitionCols`,
+    * into the table at `path`. The rows are built only when the append
+    * runs, so a skipped batch builds nothing. */
+  final class Into private (val path: String, partitionCols: Seq[String], rows: () => DataFrame) {
+    private[graft] def append(batchId: Long): Unit =
+      IdempotentAppend.append(rows(), path, batchId, partitionCols)
+  }
+
+  object Into {
+    def apply(path: String, partitionCols: String*)(rows: => DataFrame): Into =
+      new Into(path, partitionCols, () => rows)
+  }
+
+  /** Run micro-batch `batchId` of a foreachBatch sink exactly once, its
+    * commit marker in [[markerDir]] of `root`: a batch whose marker exists
+    * is skipped (clearing the stages a crash after the marker left);
+    * otherwise `appends` run in order, then `beforeMarker`, then the marker
+    * is written and the stages cleared. */
+  def runBatch(spark: SparkSession, root: String, batchId: Long,
+      beforeMarker: Long => Unit = _ => ())(appends: Into*): Unit = {
+    val markers = markerDir(new Path(root))
+    val fs = Maintenance.fileSystem(spark, root)
+    val paths = appends.map(_.path)
+    if (committed(fs, markers, batchId, paths)) return
+    appends.foreach(_.append(batchId))
+    beforeMarker(batchId)
+    finish(fs, markers, batchId, paths)
+  }
+
   /** Marker-present fast path for a replayed batch: the batch is fully
     * committed — clear any stage residue a crash between the marker write
     * and the stage cleanup left behind, then tell the sink to skip. */
-  def committed(
-      fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def committed(
+      fs: FileSystem,
       markerDir: Path,
       batchId: Long,
       stagedPaths: Seq[String]): Boolean = {
@@ -78,11 +114,11 @@ object IdempotentAppend {
     done
   }
 
-  /** The sink's LAST step: write the commit marker, then clear the stage
+  /** The batch's LAST step: write the commit marker, then clear the stage
     * sentinels. Order matters — clearing a stage before the marker exists
     * would leave a crash there invisible to [[assertNoUnresolved]]. */
-  def finish(
-      fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def finish(
+      fs: FileSystem,
       markerDir: Path,
       batchId: Long,
       stagedPaths: Seq[String]): Unit = {
@@ -115,7 +151,7 @@ object IdempotentAppend {
     * stage is older than the grace, the rewrite refuses and the window is
     * closed. */
   def assertNoUnresolved(
-      fs: org.apache.hadoop.fs.FileSystem,
+      fs: FileSystem,
       markerDir: Path,
       tablePaths: Seq[String],
       graceMs: Long = WriterLease.DefaultTtlMs): Unit = {
@@ -144,58 +180,20 @@ object IdempotentAppend {
     }
   }
 
+  /** Stage `df`, then move its files into `path` under `b<batchId>_`
+    * names, first wiping that prefix's residue of a crashed attempt from
+    * each destination directory the stage fills. The stage dir stays: it is
+    * the in-flight sentinel, cleared only once the commit marker exists. */
   def append(
       df: DataFrame,
       path: String,
       batchId: Long,
       partitionCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val stage = stagePath(path, batchId)
-    val prefix = s"b${batchId}_"
-
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(stage.toString)
-
-    // staged data files, grouped by partition subdirectory ("" for flat)
-    val qstage = fs.makeQualified(stage)
-    val staged = {
-      val b = scala.collection.mutable.ArrayBuffer[Path]()
-      val it = fs.listFiles(qstage, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-")) b += f
-      }
-      b.sortBy(_.toString)
-    }
-    staged.zipWithIndex
-      .groupBy { case (f, _) =>
-        qstage.toUri.relativize(fs.makeQualified(f.getParent).toUri)
-          .getPath.stripSuffix("/")
-      }
-      .toSeq.sortBy(_._1)
-      .foreach { case (rel, files) =>
-        val destDir = if (rel.isEmpty) root else new Path(root, rel)
-        if (fs.exists(destDir)) {
-          // residue of a crashed prior attempt of this same batch
-          fs.listStatus(destDir)
-            .filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
-            .foreach(s => fs.delete(s.getPath, false))
-        } else fs.mkdirs(destDir)
-        files.foreach { case (f, i) =>
-          val dest = new Path(destDir, s"${prefix}p$i.parquet")
-          // Hadoop rename signals failure by RETURNING false, not
-          // throwing — swallowing it would silently drop staged rows
-          if (!fs.rename(f, dest))
-            throw new java.io.IOException(
-              s"IdempotentAppend: rename $f -> $dest failed " +
-                "(batch left partially installed; a retry converges)")
-        }
-      }
-    // the stage dir is NOT deleted here: it is the in-flight sentinel
-    // assertNoUnresolved keys on, and only the caller's finish() — after
-    // the commit marker is durable — may clear it
+    Maintenance.moveFiles(Maintenance.fileSystem(df.sparkSession, path),
+      stage, new Path(path), s"b${batchId}_")
   }
 }

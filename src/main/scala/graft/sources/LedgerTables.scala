@@ -173,7 +173,7 @@ object LedgerTables {
       fs: FileSystem)(
       transformFor: DataFrame => (DataFrame, Column) => DataFrame): Rewritten = {
     val base = new Path(path)
-    val markers = new Path(base, "_graft_batches")
+    val markers = IdempotentAppend.markerDir(base)
     val ((rows, days), removed) = Maintenance.rewrite(fs, base, markers) { staging =>
       val ledger = schema.fold(read(spark, path))(spark.read.schema(_).parquet(path))
       // resolve the transform FIRST: its validation must fire even when

@@ -65,7 +65,7 @@ object Maintenance {
     val base = new Path(path)
     val fs = fileSystem(spark, path)
     require(fs.getFileStatus(base).isDirectory, s"not a table directory: $path")
-    rewrite(fs, base, new Path(base, "_graft_batches")) { staging =>
+    rewrite(fs, base, IdempotentAppend.markerDir(base)) { staging =>
       val done = fs.listStatus(base)
         .filter(s => s.isDirectory && s.getPath.getName.contains("="))
         .toIndexedSeq.flatMap { part =>
@@ -97,8 +97,9 @@ object Maintenance {
    * snapshot files they replace with its result; nothing to retire commits
    * nothing. Returns that result and the table-relative directories the
    * commit left empty and removed. `markerDir` holds the commit markers of
-   * the streams appending to the table: `<table>/_graft_batches` for the
-   * ledger and the IVF index, the store root's for both LSH store tables.
+   * the streams appending to the table: [[IdempotentAppend.markerDir]] of
+   * the table root for the ledger and the IVF index, of the store root for
+   * both LSH store tables.
    */
   private[graft] def rewrite[A](fs: FileSystem, base: Path, markerDir: Path)(
       stage: Path => (Seq[String], A)): (A, Seq[String]) = {
@@ -244,18 +245,29 @@ object Maintenance {
     removed
   }
 
-  /** Move every data file under `from` to the same relative path under `to`. */
-  private def moveFiles(fs: FileSystem, from: Path, to: Path): Unit = {
+  /** Move every data file under `from` to the same relative path under `to`,
+    * its name prefixed with `prefix`. A non-empty prefix is an append's
+    * claim on those names ([[IdempotentAppend.append]]): a file carrying it
+    * in a directory the move fills is residue of a crashed attempt of the
+    * same append, and is deleted first. A rewrite's replay passes no prefix
+    * and deletes nothing here. */
+  private[sources] def moveFiles(fs: FileSystem, from: Path, to: Path, prefix: String = ""): Unit = {
     val (dirs, files) = fs.listStatus(from).filterNot(s => isHidden(s.getPath))
       .partition(_.isDirectory)
-    if (files.nonEmpty) fs.mkdirs(to)
+    if (files.nonEmpty) {
+      fs.mkdirs(to)
+      if (prefix.nonEmpty)
+        fs.listStatus(to).filter(s => s.isFile && s.getPath.getName.startsWith(prefix))
+          .foreach(s => fs.delete(s.getPath, false))
+    }
     files.foreach { s =>
-      val dest = new Path(to, s.getPath.getName)
+      val dest = new Path(to, prefix + s.getPath.getName)
       if (!fs.rename(s.getPath, dest))
         throw new java.io.IOException(
-          s"cannot move ${s.getPath} to $dest; the next rewrite of the table finishes the commit")
+          s"cannot move ${s.getPath} to $dest; the move is safe to re-run, so the " +
+            "next rewrite of the table, or the stream's replay of the batch, finishes it")
     }
-    dirs.foreach(d => moveFiles(fs, d.getPath, new Path(to, d.getPath.getName)))
+    dirs.foreach(d => moveFiles(fs, d.getPath, new Path(to, d.getPath.getName), prefix))
   }
 
   private def writeManifest(fs: FileSystem, base: Path, lines: Seq[String]): Unit = {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CurationOps, DedupOps, PrepOps, SimilarityOps}
+import graft.sources.{IdempotentAppend, Maintenance}
+import graft.sources.IdempotentAppend.Into
 
 /**
  * Streaming corpus ingest with INCREMENTAL near-duplicate detection — the
@@ -18,23 +20,21 @@ import graft.operators.{CurationOps, DedupOps, PrepOps, SimilarityOps}
  * Wire as `docsStream.writeStream.foreachBatch(
  * CorpusStream.dedupIngestBatch(store, pairs)).start()`.
  *
- * Replay semantics mirror [[LedgerStream.appendBatch]]: a
- * `_graft_batches/<batchId>` marker under the store root makes a
- * replayed micro-batch (restart between the sink commit and the
- * checkpoint commit) a no-op. The marker alone cannot cover a crash
- * INSIDE the batch (it is written last, not atomically with the writes),
- * so every append in these sinks routes through
- * [[graft.sources.IdempotentAppend]] — staged overwrite + deterministic
- * per-batch file names — and the dedup sink recomputes its pairs against
- * the store MINUS the batch's own ids
+ * Replay semantics mirror [[LedgerStream.appendBatch]]: every sink here
+ * is one [[graft.sources.IdempotentAppend.runBatch]] call naming its
+ * destinations. A commit marker under the sink's root (the store root for
+ * the dedup sink) makes a replayed micro-batch (restart between the sink
+ * commit and the checkpoint commit) a no-op. The marker alone cannot cover
+ * a crash INSIDE the batch (it is written last, not atomically with the
+ * writes), so every append stages, then moves its files in under
+ * `b<batchId>_` names, wiping a crashed attempt's; and the dedup sink
+ * recomputes its pairs against the store MINUS the batch's own ids
  * ([[graft.operators.DedupOps.minhashLshIncrementalReplayable]]), so a
  * retry reproduces the first attempt's rows no matter where the crash
  * landed. Net contract: EXACTLY-ONCE sink contents under at-least-once
  * micro-batch delivery, with the marker as the fast-path skip.
  */
 object CorpusStream {
-
-  import graft.sources.IdempotentAppend
 
   /** foreachBatch sink: incremental-dedup then store-append one
     * micro-batch of documents (doc_id must be corpus-unique). The first
@@ -44,45 +44,40 @@ object CorpusStream {
       pairsPath: String,
       threshold: Double = 0.8,
       maxBucketSize: Int = DedupOps.DefaultMaxBucketSize)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val markerDir = new Path(s"$storePath/_graft_batches")
-    val fs = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = Seq(pairsPath, s"$storePath/shingles", s"$storePath/bands")
-    if (IdempotentAppend.committed(fs, markerDir, batchId, staged)) return
+      batch: DataFrame, batchId: Long): Unit =
     try {
       // pairs BEFORE the store append — and via the REPLAYABLE variant,
       // whose store-side exclusion of the batch's own ids makes the
       // recompute deterministic even when a crashed prior attempt already
       // appended this batch's signatures. "Bootstrapped" means the bands
       // table has at least one DATA file — a crashed first attempt can
-      // leave the directory existing but EMPTY (IdempotentAppend mkdirs
-      // the destination before its first rename), and reading that as a
+      // leave the directory existing but EMPTY (the move mkdirs the
+      // destination before its first rename), and reading that as a
       // store would throw on every replay, wedging the stream. A store
       // holding only this batch's own residue is fine: the exclusion
       // reduces the incremental detector to the same within-batch-only
       // computation the plain path runs.
-      val bandsDir = new Path(s"$storePath/bands")
-      val bootstrapped = fs.exists(bandsDir) &&
-        fs.listStatus(bandsDir).exists(s =>
-          s.isFile && !s.getPath.getName.startsWith("_"))
-      val pairs =
+      def pairs = {
+        val bandsDir = new Path(s"$storePath/bands")
+        val fs = Maintenance.fileSystem(batch.sparkSession, storePath)
+        val bootstrapped = fs.exists(bandsDir) &&
+          fs.listStatus(bandsDir).exists(s =>
+            s.isFile && !s.getPath.getName.startsWith("_"))
         if (bootstrapped)
           DedupOps.minhashLshIncrementalReplayable(batch, storePath, threshold, maxBucketSize)
         else DedupOps.minhashLsh(batch, threshold, maxBucketSize)
-      IdempotentAppend.append(
-        pairs.withColumn("batch_id", lit(batchId)), pairsPath, batchId)
+      }
       // bootstrap and growth are the SAME idempotent append — a separate
       // overwrite-mode bootstrap would reopen the window it exists to
       // close (a crashed first attempt's store, rebuilt as batch residue
       // the retry cannot distinguish from prior corpus)
-      DedupOps.appendLshStoreIdempotent(batch, storePath, batchId)
-      IdempotentAppend.finish(fs, markerDir, batchId, staged)
+      IdempotentAppend.runBatch(batch.sparkSession, storePath, batchId)(
+        Into(pairsPath)(pairs.withColumn("batch_id", lit(batchId))) +:
+          DedupOps.lshStoreAppends(batch, storePath): _*)
     } finally
       // the shared shingle cache is plan-keyed per BATCH here — a stream
       // that never dropped it would accrete one entry per micro-batch
       DedupOps.unpersistShingles(batch)
-  }
 
   /**
    * foreachBatch sink: the streaming PREP pipeline — redact → quality
@@ -105,35 +100,29 @@ object CorpusStream {
       trainPct: Int = 80,
       valPct: Int = 10,
       failpoint: Long => Unit = _ => ())(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val markerDir = new Path(s"$outPath/_graft_batches")
-    val fs = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (IdempotentAppend.committed(fs, markerDir, batchId, Seq(outPath))) return
-    // Re-spread a narrow micro-batch before the per-row-heavy prep
-    // stages: a file-source trigger of one big file arrives as ONE
-    // partition, which would run the whole regex/quality pass on a
-    // single core (measured: a 625k-doc slice took ~9 min single-
-    // partition at the 500× probe vs seconds spread). Row set and
-    // output are unchanged — the sink's exactly-once contract is
-    // per-batch, not per-file-layout.
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val spread =
-      if (batch.rdd.getNumPartitions < nPart / 2) batch.repartition(nPart)
-      else batch
-    IdempotentAppend.append(
-      PrepOps.splitAssign(
-        PrepOps.qualityFilter(
-          PrepOps.redact(spread, patterns, replacement), minWords, maxWords),
-        trainPct, valPct),
-      outPath, batchId, Seq("split"))
-    // chaos hook, invoked INSIDE the protocol's only unguarded window —
-    // after the batch's files are installed, before the commit marker.
-    // The x159 gate throws here to prove the crash-replay converges over
-    // real transport; production callers leave the default no-op.
-    failpoint(batchId)
-    IdempotentAppend.finish(fs, markerDir, batchId, Seq(outPath))
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    // the failpoint is a chaos hook in the protocol's only unguarded
+    // window — after the batch's files are installed, before the commit
+    // marker. The x159 gate throws there to prove the crash-replay
+    // converges over real transport; production callers leave the no-op.
+    IdempotentAppend.runBatch(batch.sparkSession, outPath, batchId, failpoint)(
+      Into(outPath, "split") {
+        // Re-spread a narrow micro-batch before the per-row-heavy prep
+        // stages: a file-source trigger of one big file arrives as ONE
+        // partition, which would run the whole regex/quality pass on a
+        // single core (measured: a 625k-doc slice took ~9 min single-
+        // partition at the 500× probe vs seconds spread). Row set and
+        // output are unchanged — the sink's exactly-once contract is
+        // per-batch, not per-file-layout.
+        val nPart = batch.sparkSession.sessionState.conf.numShufflePartitions
+        val spread =
+          if (batch.rdd.getNumPartitions < nPart / 2) batch.repartition(nPart)
+          else batch
+        PrepOps.splitAssign(
+          PrepOps.qualityFilter(
+            PrepOps.redact(spread, patterns, replacement), minWords, maxWords),
+          trainPct, valPct)
+      })
 
   /**
    * foreachBatch sink: the streaming content-mix monitor — each
@@ -154,17 +143,10 @@ object CorpusStream {
   def driftMonitorBatch(
       reference: DataFrame,
       driftLogPath: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val markerDir = new Path(s"$driftLogPath/_graft_batches")
-    val fs = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (IdempotentAppend.committed(fs, markerDir, batchId, Seq(driftLogPath))) return
-    IdempotentAppend.append(
-      CurationOps.sourceDriftKlVsReference(batch, reference)
-        .withColumn("batch_id", lit(batchId)),
-      driftLogPath, batchId)
-    IdempotentAppend.finish(fs, markerDir, batchId, Seq(driftLogPath))
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    IdempotentAppend.runBatch(batch.sparkSession, driftLogPath, batchId)(
+      Into(driftLogPath)(CurationOps.sourceDriftKlVsReference(batch, reference)
+        .withColumn("batch_id", lit(batchId))))
 
   /**
    * foreachBatch scorecard monitor — [[graft.operators.PrepOps
@@ -182,36 +164,11 @@ object CorpusStream {
       scorecardLogPath: String,
       minWords: Int = 30,
       maxWords: Int = 1000)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val markerDir = new Path(s"$scorecardLogPath/_graft_batches")
-    val fs = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (IdempotentAppend.committed(fs, markerDir, batchId, Seq(scorecardLogPath))) return
-    IdempotentAppend.append(
-      PrepOps.sourceScorecard(batch, minWords, maxWords)
-        .withColumn("batch_id", lit(batchId)),
-      scorecardLogPath, batchId)
-    IdempotentAppend.finish(fs, markerDir, batchId, Seq(scorecardLogPath))
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    IdempotentAppend.runBatch(batch.sparkSession, scorecardLogPath, batchId)(
+      Into(scorecardLogPath)(PrepOps.sourceScorecard(batch, minWords, maxWords)
+        .withColumn("batch_id", lit(batchId))))
 
-  /**
-   * foreachBatch sink: STREAMING IVF ingest — embeddings arriving batch by
-   * batch append to a persisted IVF index under a FIXED quantizer
-   * (bootstrap the centroid table once with
-   * [[SimilarityOps.writeIvfCentroids]] or [[SimilarityOps.trainCentroids]]
-   * before starting the stream). Each batch costs one assignment pass
-   * against the tiny centroid table (broadcast NL join) plus a
-   * partitioned parquet append — cost ∝ batch, never ∝ index — and the
-   * append contract ([[SimilarityOps.appendIvfIndex]], pinned by
-   * SimilarityIndexSpec) makes the streamed store row-identical to a
-   * batch build over the union of micro-batches: queries against it are
-   * exact, not approximations of the batch path. Same marker-guarded
-   * exactly-once contract as [[dedupIngestBatch]]: the assignment rows
-   * route through [[graft.sources.IdempotentAppend]], so at-least-once
-   * delivery never double-inserts a vector — including a crash-replay
-   * INSIDE the batch, where a bare append would leave a vector surfacing
-   * twice in every top-k that probes its cell.
-   */
   /**
    * x159: EXACTLY-ONCE [[graft.sources.IdempotentAppend]] RECOVERY over
    * REAL TRANSPORT — the foreachBatch complement of
@@ -272,20 +229,10 @@ object CorpusStream {
       val sliced = evs.withColumn("slice",
         ntile(nFiles).over(Window.orderBy(col("doc_id"))))
         .localCheckpoint()
-      def spoolOne(df: DataFrame, name: String): Unit = {
-        val stage = base.resolve("stage_" + name)
-        df.coalesce(1).sortWithinPartitions(col("doc_id"))
-          .write.parquet(stage.toString)
-        val listing = java.nio.file.Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-            p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        finally listing.close()
-        java.nio.file.Files.move(part, pending.resolve(name + ".parquet"))
-      }
       val names = (1 to nFiles).map(i => f"f$i%02d")
       names.zipWithIndex.foreach { case (n, i) =>
-        spoolOne(sliced.filter(col("slice") === i + 1).drop("slice"), n)
+        EventStream.spool(sliced.filter(col("slice") === i + 1).drop("slice"),
+          base, pending, n, "doc_id")
       }
 
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -335,14 +282,25 @@ object CorpusStream {
     }
   }
 
-  def ivfIngestBatch(indexPath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val markerDir = new Path(s"$indexPath/_graft_batches")
-    val fs = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (IdempotentAppend.committed(fs, markerDir, batchId, Seq(indexPath))) return
-    IdempotentAppend.append(
-      SimilarityOps.assignedForIndex(batch, indexPath),
-      indexPath, batchId, Seq("cid"))
-    IdempotentAppend.finish(fs, markerDir, batchId, Seq(indexPath))
-  }
+  /**
+   * foreachBatch sink: STREAMING IVF ingest — embeddings arriving batch by
+   * batch append to a persisted IVF index under a FIXED quantizer
+   * (bootstrap the centroid table once with
+   * [[SimilarityOps.writeIvfCentroids]] or [[SimilarityOps.trainCentroids]]
+   * before starting the stream). Each batch costs one assignment pass
+   * against the tiny centroid table (broadcast NL join) plus a
+   * partitioned parquet append — cost ∝ batch, never ∝ index — and the
+   * append contract ([[SimilarityOps.appendIvfIndex]], pinned by
+   * SimilarityIndexSpec) makes the streamed store row-identical to a
+   * batch build over the union of micro-batches: queries against it are
+   * exact, not approximations of the batch path. Same marker-guarded
+   * exactly-once contract as [[dedupIngestBatch]]: the assignment rows
+   * route through [[graft.sources.IdempotentAppend]], so at-least-once
+   * delivery never double-inserts a vector — including a crash-replay
+   * INSIDE the batch, where a bare append would leave a vector surfacing
+   * twice in every top-k that probes its cell.
+   */
+  def ivfIngestBatch(indexPath: String)(batch: DataFrame, batchId: Long): Unit =
+    IdempotentAppend.runBatch(batch.sparkSession, indexPath, batchId)(
+      Into(indexPath, "cid")(SimilarityOps.assignedForIndex(batch, indexPath)))
 }

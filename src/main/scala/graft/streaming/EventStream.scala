@@ -69,6 +69,22 @@ object EventStream {
     }
   }
 
+  /** Spool `df` as ONE parquet file, rows sorted by `order`: written under
+    * `base/stage_<name>`, then its data file moved to `<dir>/<name>.parquet`,
+    * so a watched directory never lists a slice half-written. */
+  private[streaming] def spool(df: org.apache.spark.sql.DataFrame, base: java.nio.file.Path,
+      dir: java.nio.file.Path, name: String, order: String*): Unit = {
+    val stage = base.resolve("stage_" + name)
+    df.coalesce(1).sortWithinPartitions(order.map(org.apache.spark.sql.functions.col): _*)
+      .write.parquet(stage.toString)
+    val listing = java.nio.file.Files.list(stage)
+    val part = try listing.filter(p =>
+      p.getFileName.toString.startsWith("part-") &&
+        p.getFileName.toString.endsWith(".parquet")).findFirst().get()
+    finally listing.close()
+    java.nio.file.Files.move(part, dir.resolve(name + ".parquet"))
+  }
+
   /** A CHILD session (shared SparkContext, own SessionState) carrying the
     * stream-gate shuffle pin. A child, not a session-conf mutation: the
     * verify harness runs queries CONCURRENTLY in one session, so setting
@@ -316,26 +332,15 @@ object EventStream {
       val sliced = evs.withColumn("slice",
         ntile(nFiles).over(Window.orderBy(col("ts"), col("event_id"))))
         .localCheckpoint()
-      def spoolOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val stage = base.resolve("stage_" + name)
-        df.coalesce(1).sortWithinPartitions(col("ts"), col("event_id"))
-          .write.parquet(stage.toString)
-        val listing = java.nio.file.Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-") &&
-            p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        finally listing.close()
-        java.nio.file.Files.move(part, pending.resolve(name + ".parquet"))
-      }
-      (1 to nFiles).foreach(i => spoolOne(
-        sliced.filter(col("slice") === i).drop("slice"), f"f$i%02d"))
+      (1 to nFiles).foreach(i => spool(sliced.filter(col("slice") === i).drop("slice"),
+        base, pending, f"f$i%02d", "ts", "event_id"))
       val maxTs = evs.agg(max(col("ts"))).head().getTimestamp(0)
-      spoolOne(
+      spool(
         spark.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(
             new java.sql.Timestamp(maxTs.getTime + 100L * 86400_000L),
             "__sentinel", -1L)), evs.schema),
-        f"f${nFiles + 1}%02d_sentinel")
+        base, pending, f"f${nFiles + 1}%02d_sentinel", "ts", "event_id")
 
       val schema = evs.schema
       // the stream (and its state-store partitioning, fixed at first

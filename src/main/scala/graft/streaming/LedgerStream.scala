@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.sources.IdempotentAppend
+import graft.sources.IdempotentAppend.Into
+
 /**
  * Incremental ledger maintenance with Structured Streaming — the streaming
  * re-expression of the reference's batch bookkeeping queries (SURVEY.md §7.4
@@ -56,30 +59,21 @@ object LedgerStream {
 
   /**
    * foreachBatch sink: append a micro-batch to the day-partitioned ledger,
-   * EXACTLY-ONCE under batch replay. A `_graft_batches/<batchId>` marker
-   * (written after the append) skips a replayed batchId outright, and the
-   * append itself routes through [[graft.sources.IdempotentAppend]] —
-   * staged overwrite + deterministic per-batch file names — so even a
-   * crash BETWEEN append and marker replays to the same final file set
-   * instead of duplicating the batch (the window the marker alone left
-   * open; downstream exact-dedup remains as defense in depth, no longer
-   * the only line). Safe against concurrent DML/compaction without taking
-   * the writer lease: a rewrite retires only the snapshot files it read,
-   * so the `_`-prefixed markers and the files this append commits
-   * mid-rewrite are never touched (see [[graft.sources.WriterLease]]
-   * scope notes).
+   * EXACTLY-ONCE under batch replay: one
+   * [[graft.sources.IdempotentAppend.runBatch]] call. Its commit marker
+   * under `path` (written after the append) skips a replayed batchId
+   * outright, and the append stages the batch, then moves its files in
+   * under `b<batchId>_` names, wiping a crashed attempt's first — so even a crash BETWEEN append and marker replays to
+   * the same final file set instead of duplicating the batch (downstream
+   * exact-dedup remains as defense in depth, no longer the only line).
+   * Safe against concurrent DML/compaction without taking the writer
+   * lease: a rewrite retires only the snapshot files it read, so the
+   * `_`-prefixed markers and the files this append commits mid-rewrite
+   * are never touched (see [[graft.sources.WriterLease]] scope notes).
    */
-  def appendBatch(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    // Hadoop FS like every other table mutation — file://, HDFS, or object
-    // store (the _-prefixed marker dir is invisible to Spark's listing).
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_graft_batches")
-    val fs = dir.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-    if (graft.sources.IdempotentAppend.committed(fs, dir, batchId, Seq(path)))
-      return
-    graft.sources.IdempotentAppend.append(
-      batch, path, batchId, Seq("query_window_start_day"))
-    graft.sources.IdempotentAppend.finish(fs, dir, batchId, Seq(path))
-  }
+  def appendBatch(path: String)(batch: DataFrame, batchId: Long): Unit =
+    IdempotentAppend.runBatch(batch.sparkSession, path, batchId)(
+      Into(path, "query_window_start_day")(batch))
 
   /** Minimal event for the stateful sessionizer. */
   final case class UserEvent(user_id: Long, ts: java.sql.Timestamp)

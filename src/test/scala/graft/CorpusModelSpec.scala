@@ -6,6 +6,15 @@ import graft.operators.{CurationOps, PrepOps}
   * quality classifier (x81) and the per-source KL drift monitor (x82). */
 class CorpusModelSpec extends SparkSpec {
 
+  /** Delete batch 0's commit marker under `root`, as a crash between the
+    * append and the marker leaves it, then run the replay. */
+  private def replayWithoutMarker(root: String)(replay: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$root/_graft_batches/0")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(marker, false))
+    replay
+  }
+
   test("nbQualityScore: weights, prior, and scores hand-checked; generalizes past the rules") {
     // minWords=2: labels from the x45 rule conjunction.
     //   doc1 "alpha bravo candy delta echos"  n=5,u=5,dm=1 -> weak GOOD
@@ -220,6 +229,13 @@ class CorpusModelSpec extends SparkSpec {
     val n = log().count()
     sink(docs.filter(col("doc_id") === 1L), 0L)
     assert(log().count() == n, "replayed batch must be a no-op")
+    // a crash before the marker: the replay converges to one copy
+    replayWithoutMarker(tmp)(sink(docs.filter(col("doc_id") === 1L), 0L))
+    assert(log().count() == n, "a replay without its marker must not duplicate rows")
+    assert(log().filter(col("batch_id") === 0L).drop("batch_id").collect().map(_.toString)
+      .sorted.toSeq == graft.operators.CurationOps
+      .sourceDriftKlVsReference(docs.filter(col("doc_id") === 1L), ref)
+      .collect().map(_.toString).sorted.toSeq)
   }
 
   test("scorecardBatch: per-batch x98 rows keyed by batch_id; replay is a no-op") {
@@ -244,6 +260,10 @@ class CorpusModelSpec extends SparkSpec {
     val n = log().count()
     sink(docs.filter(col("doc_id") <= 2L), 0L)
     assert(log().count() == n, "replayed batch must be a no-op")
+    // a crash before the marker: the replay converges to one copy
+    replayWithoutMarker(tmp)(sink(docs.filter(col("doc_id") <= 2L), 0L))
+    assert(log().count() == n, "a replay without its marker must not duplicate rows")
+    assert(log().filter(col("batch_id") === 0L).collect().toSeq == Seq(b0))
   }
 
   test("sourceDriftKl: a source matching the corpus distribution has zero drift") {

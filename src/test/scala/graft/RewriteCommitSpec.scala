@@ -195,5 +195,23 @@ class RewriteCommitSpec extends SparkSpec {
     assert(spark.read.parquet(s"$store/bands").select("doc_id").distinct().as[Long].collect()
       .toSeq == Seq(2L))
     assert(!new java.io.File(s"$store/tombstones").exists())
+
+    // stream appends move their staged files in under the same root, each
+    // batch replayed once as after a crash before its marker
+    val fs = newFs()
+    def replayed(root: String)(sink: Long => Unit): Unit = {
+      sink(0L)
+      assert(fs.delete(new Path(s"$root/_graft_batches/0"), false))
+      sink(0L)
+    }
+    val more = vectors().select((col("vec_id") + 20L).as("vec_id"), col("embedding"))
+      .filter(col("vec_id") < 25L)
+    replayed(ivf)(CorpusStream.ivfIngestBatch(ivf)(more, _))
+    assert(spark.read.parquet(ivf).select("vec_id").as[Long].collect().sorted.toSeq ==
+      (0L until 25L).filter(_ != 1L))
+    val ledger = base.resolve("run ledger").toString
+    replayed(ledger)(LedgerStream.appendBatch(ledger)(
+      rowsOn(Seq(1L, 2L), 15, "ok").union(rowsOn(Seq(3L), 16, "ok")), _))
+    assert(rows(ledger) == Seq(1L, 2L, 3L).map(_ -> "ok"))
   }
 }

@@ -293,6 +293,20 @@ class StreamChaosSpec extends SparkSpec {
       val back = spark.read.parquet(path)
       assert(back.count() == 2, "crash-replay must not duplicate ledger rows")
       assert(back.groupBy("record_id").count().filter(col("count") > 1).count() == 0)
+
+      // crash AFTER the marker, before the stage cleanup: the stage of a
+      // committed batch is left, quiet past the liveness grace
+      val stage = graft.sources.IdempotentAppend.stagePath(path, 0L)
+      assert(!fs.exists(stage))
+      fs.mkdirs(stage)
+      fs.create(new org.apache.hadoop.fs.Path(stage, "_SUCCESS"), true).close()
+      val old = System.currentTimeMillis() - 16 * 60 * 1000L
+      fs.setTimes(stage, old, old)
+      sink(rows, 0L) // the replay skips on the marker and clears the stage
+      assert(spark.read.parquet(path).count() == 2, "a committed batch's replay adds no row")
+      assert(!fs.exists(stage), "the replay of a committed batch removes its stage")
+      assert(graft.sources.LedgerTables.deleteWhere(spark, path, col("record_id") === 2L) == 1L)
+      assert(spark.read.parquet(path).count() == 1)
     } finally deleteTree(base)
   }
 
